@@ -6,6 +6,7 @@ for the algorithmic core, Structured Streaming with watermarks and an
 exactly-once idempotent sink.
 """
 
+from kelos_on_kafka_spark import zipcache  # noqa: F401  (installs on import)
 from kelos_on_kafka_spark.config import DEFAULT_CONFIG, KelosConfig
 
 __all__ = [

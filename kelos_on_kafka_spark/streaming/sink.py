@@ -10,6 +10,17 @@ Swap the parquet write for an Iceberg ``overwritePartitions`` /
 ``MERGE`` in a cataloged deployment (config change, same semantics);
 at 10^12-doc scale the partition key becomes (window_end hour, shard
 range) to bound partition counts.
+
+Each ``foreachBatch`` callback runs the micro-batch's plan once.  A
+batch DataFrame is not cached, so every action on it re-runs the whole
+upstream plan (for ``write_outlier_stream`` that is the stateful
+``applyInPandasWithState`` operator).  An ``isEmpty()`` probe before
+the write is such an action, and its ``limit 1`` also leaves Python
+output unread, so Spark kills those workers and the next batch forks
+new ones.  The outlier sink therefore writes without a probe (an empty
+dynamic-overwrite write adds no data files and replaces no
+partitions); the sinks that act on the batch more than once persist
+it first.
 """
 
 from __future__ import annotations
@@ -44,15 +55,21 @@ def write_upsert_stream(
     )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        w = Window.partitionBy(*key_cols).orderBy(order.desc())
-        latest = (
-            batch_df.withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-        upsert_partitioned(latest, path, key_cols, partition_col)
+        # the probe stays: a first write of an empty batch would leave a
+        # schema-less table directory that the next batch cannot read
+        batch_df.persist()
+        try:
+            if batch_df.isEmpty():
+                return
+            w = Window.partitionBy(*key_cols).orderBy(order.desc())
+            latest = (
+                batch_df.withColumn("__rn", F.row_number().over(w))
+                .where(F.col("__rn") == 1)
+                .drop("__rn")
+            )
+            upsert_partitioned(latest, path, key_cols, partition_col)
+        finally:
+            batch_df.unpersist()
 
     writer = (
         updates.writeStream.foreachBatch(apply_batch)
@@ -91,18 +108,24 @@ def write_cdc_table_stream(
     is keyed state, the pane is only the delta's emission unit."""
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         from kelos_on_kafka_spark.plans.maintenance import merge_cdc_delta
 
-        merge_cdc_delta(
-            batch_df.drop("window_start", "window_end"),
-            path,
-            key_col,
-            order_cols,
-            delete_col=delete_col,
-            n_buckets=n_buckets,
-        )
+        # merge_cdc_delta reads its delta several times; the probe stays
+        # because an empty merge into an existing table still scans it
+        batch_df.persist()
+        try:
+            if batch_df.isEmpty():
+                return
+            merge_cdc_delta(
+                batch_df.drop("window_start", "window_end"),
+                path,
+                key_col,
+                order_cols,
+                delete_col=delete_col,
+                n_buckets=n_buckets,
+            )
+        finally:
+            batch_df.unpersist()
 
     writer = (
         delta.writeStream.foreachBatch(apply_batch)
@@ -120,11 +143,11 @@ def write_outlier_stream(
     checkpoint: str,
     trigger: dict | None = None,
 ):
-    """Start the exactly-once sink; returns the StreamingQuery."""
+    """Start the exactly-once sink; returns the StreamingQuery.  Each
+    micro-batch's plan runs once, in the write; an empty batch writes
+    nothing."""
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         (
             batch_df.withColumn("batch_id", F.lit(batch_id))
             .write.mode("overwrite")
@@ -169,8 +192,7 @@ def write_routed_stream(
     each route can go to a different table/bucket."""
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+        # no emptiness probe: an empty batch routes nowhere
         batch_df.persist()
         try:
             routes = [

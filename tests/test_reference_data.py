@@ -3,6 +3,8 @@ read gmm_test_data_unlabeled.csv exactly like InputProducer.java and run
 the flagship query with the reference's default parameters; validate
 against the NumPy oracle and the labeled file's LOF ground truth."""
 
+import os
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -18,6 +20,11 @@ REF_CSV = "/root/reference/gmm_test_data_unlabeled.csv"
 REF_LABELED = "/root/reference/gmm_test_data_labeled.csv"
 CFG = KelosConfig()  # the reference's defaults (Main.java:29-36)
 N_ROWS = 6000  # first 2 windows' worth keeps the test fast
+
+pytestmark = pytest.mark.skipif(
+    not (os.path.exists(REF_CSV) and os.path.exists(REF_LABELED)),
+    reason="reference evaluation data not present in this checkout",
+)
 
 
 @pytest.fixture(scope="module")

@@ -4,6 +4,7 @@ checkpoint, and the idempotent sink must hold exactly-once."""
 
 import os
 import time
+from collections import Counter
 
 import numpy as np
 import pandas as pd
@@ -20,14 +21,16 @@ from kelos_on_kafka_spark.streaming.sink import write_outlier_stream
 CFG = KelosConfig(n=15)
 
 
-def _write_point_files(spark, pdf: pd.DataFrame, dirpath: str, n_files: int):
-    """Split a fixture into n sequential parquet files (file-source
-    micro-batches arrive in pane order)."""
+def _write_point_files(
+    spark, pdf: pd.DataFrame, dirpath: str, n_files: int, first: int = 0
+):
+    """Split a fixture into n sequential parquet files, numbered from
+    ``first`` (file-source micro-batches arrive in pane order)."""
     os.makedirs(dirpath, exist_ok=True)
     chunks = np.array_split(np.arange(len(pdf)), n_files)
     paths = []
     for i, idx in enumerate(chunks):
-        p = os.path.join(dirpath, f"part-{i:03d}.parquet")
+        p = os.path.join(dirpath, f"part-{first + i:03d}.parquet")
         chunk = pdf.iloc[idx]
         spark.createDataFrame(
             chunk, schema="id long, ts double, features array<double>"
@@ -154,6 +157,47 @@ def test_stream_resume_from_checkpoint_exactly_once(spark, tmp_path):
     assert len(wr) == len(set(wr))
     expected = _batch_reference(spark, full)
     assert got == expected
+
+
+def test_sink_runs_each_micro_batch_once(spark, tmp_path):
+    """The sink executes each micro-batch's plan once: a row count
+    observed on the outlier stream equals the rows that batch wrote (an
+    emptiness probe before the write runs the plan a second time, and
+    its rows are counted again).  A batch that emits nothing writes
+    nothing to the sink root."""
+    full, _ = _fixture(n=300)
+    src = str(tmp_path / "src")
+    sink = str(tmp_path / "sink")
+    ckpt = str(tmp_path / "ckpt")
+
+    def run():
+        out = kelos_stream(_read_stream(spark, src), CFG).observe(
+            "emitted", F.count(F.lit(1)).alias("rows")
+        )
+        q = write_outlier_stream(
+            out, sink, ckpt, trigger={"availableNow": True}
+        )
+        q.awaitTermination(300)
+        assert q.exception() is None
+        return {
+            p["batchId"]: p["observedMetrics"]["emitted"]["rows"]
+            for p in q.recentProgress
+        }
+
+    # phase 1: pane 0 alone closes no window
+    _write_point_files(spark, full.iloc[:100], src, n_files=1)
+    observed = run()
+    assert observed and set(observed.values()) == {0}
+    assert not os.path.exists(sink) or os.listdir(sink) == []
+
+    # phase 2: the rest closes every window
+    _write_point_files(spark, full.iloc[100:], src, n_files=2, first=1)
+    observed = run()
+    rows = spark.read.parquet(sink).select("batch_id").collect()
+    written = Counter(r.batch_id for r in rows)
+    assert sum(written.values()) > 0
+    batches = observed.keys() | written.keys()
+    assert observed == {b: written[b] for b in batches}
 
 
 def test_late_rows_beyond_watermark_are_dropped(spark, tmp_path):
