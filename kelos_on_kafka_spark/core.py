@@ -545,15 +545,6 @@ def _product_cols(values: np.ndarray) -> np.ndarray:
     return acc
 
 
-def _product(values: np.ndarray) -> np.float64:
-    """Sequential left-to-right product starting at 1.0 (Java's
-    ``productKernel *=`` loop)."""
-    acc = np.float64(1.0)
-    for v in values:
-        acc = acc * v
-    return acc
-
-
 # ---------------------------------------------------------------------------
 # P5 — KLOME bounds + dominance pruning (PruningProcessorSupplier.java:37-109)
 # ---------------------------------------------------------------------------
@@ -604,33 +595,36 @@ def prune_clusters(
 # ---------------------------------------------------------------------------
 
 
-def filter_candidates(
+def flagged_candidates(
+    flags: "OrderedMap[int, bool]",
     point_ids: np.ndarray,
     point_cluster_ids: np.ndarray,
     point_features: np.ndarray,
-    flags: "OrderedMap[int, bool]",
-) -> "OrderedMap[int, np.ndarray]":
+) -> Tuple[np.ndarray, np.ndarray]:
     """Semi-join: points of the window whose assigned cluster is flagged
     might_contain_outliers become single-point candidate 'clusters'
     (:45-59).  Points whose cluster was dropped upstream (<=1 KNN) or
     tombstoned are silently skipped (null store lookup).
 
-    Returns {point_id: features} in ascending point-id order (downstream
+    Returns (point ids, features) in ascending point-id order (downstream
     stores are TreeMaps, so only the set matters)."""
-    out: OrderedMap[int, np.ndarray] = {}
-    order = np.argsort(np.asarray(point_ids, dtype=np.int64), kind="stable")
-    for i in order:
-        cid = int(point_cluster_ids[i])
-        if flags.get(cid, False):
-            out[int(point_ids[i])] = np.asarray(
-                point_features[i], dtype=np.float64
-            )
-    return out
+    pids = np.asarray(point_ids, dtype=np.int64)
+    cids = np.asarray(point_cluster_ids, dtype=np.int64)
+    flagged = np.array(
+        sorted(c for c, f in flags.items() if f), dtype=np.int64
+    )
+    sel = np.isin(cids, flagged)
+    cand_pids = pids[sel]
+    cand_X = np.asarray(point_features, dtype=np.float64)[sel]
+    order = np.argsort(cand_pids, kind="stable")
+    return cand_pids[order], (cand_X[order] if cand_X.size else cand_X)
 
 
 # ---------------------------------------------------------------------------
-# P7 — K-nearest clusters per candidate point
-#       (KNearestPointsProcessorSupplier.java:35-71)
+# P7-P9 — K-nearest clusters per candidate point, point-level KDE, KLOME
+#       scoring + top-N (KNearestPointsProcessorSupplier.java:35-71,
+#       PointDensityEstimationProcessorSupplier.java:41-136,
+#       PointPruningProcessorSupplier.java:41-106)
 # ---------------------------------------------------------------------------
 
 
@@ -794,8 +788,10 @@ def _point_stage(
     kernel_fn=_kernel_raw,
 ) -> List[Outlier]:
     """P7+P8+P9 fused, array-native: candidate KNN -> mixed-store point
-    KDE -> KLOME top-N.  Semantics identical to the per-entry wrappers
-    below (which the unit suite pins); this is the engine's hot path."""
+    KDE -> KLOME top-N.  The mixed store (PointDensityBuffer,
+    PointsWithDensities) holds candidates keyed by point id and clusters
+    by cluster id in ONE map: on an id collision the cluster wins (Q6),
+    and padded knn id 0 can resolve to candidate point 0 (Q5)."""
     if len(cand_pids) == 0:
         return []
     knn = _knn_points_matrix(cand_pids, cand_X, surv_cids, surv_cent, k)
@@ -842,145 +838,23 @@ def _point_stage(
     return _topn(act2_pids, klome, act2_dens, act2_X, n)
 
 
-def knn_points(
-    candidates: "OrderedMap[int, np.ndarray]",
-    survivors: "OrderedMap[int, WindowCluster]",
-    k: int,
-) -> "OrderedMap[int, np.ndarray]":
-    """K nearest *clusters* for each candidate point (not other points —
-    README.md:169).  A cluster whose id equals the candidate's point id is
-    excluded (ownIndex, Q6).  Zero-padded like P3.  (Dict-API wrapper over
-    the array-native kernel.)"""
-    pids = np.fromiter(candidates.keys(), dtype=np.int64, count=len(candidates))
-    cids = np.fromiter(survivors.keys(), dtype=np.int64, count=len(survivors))
-    if len(candidates) == 0:
-        return {}
-    X = np.stack([candidates[int(p)] for p in pids])
-    cent = (
-        np.stack([survivors[int(i)].centroid for i in cids])
-        if len(cids)
-        else np.empty((0, X.shape[1]))
-    )
-    knn = _knn_points_matrix(pids, X, cids, cent, k)
-    return {int(p): knn[i] for i, p in enumerate(pids)}
-
-
-# ---------------------------------------------------------------------------
-# P8 — point-level KDE (PointDensityEstimationProcessorSupplier.java:41-136)
-# ---------------------------------------------------------------------------
-
-
-@dataclass
-class MixedEntry:
-    """Entry of the mixed candidate/cluster stores (PointDensityBuffer,
-    PointsWithDensities): candidates keyed by point id, clusters by cluster
-    id, in ONE map — id collisions are last-put-wins with clusters arriving
-    after candidates (Q6)."""
-
-    centroid: np.ndarray
-    density: float
-    is_candidate: bool
-    knn_ids: Optional[np.ndarray] = None
-
-
-def estimate_point_densities(
-    candidates: "OrderedMap[int, np.ndarray]",
-    cand_knn: "OrderedMap[int, np.ndarray]",
-    survivors: "OrderedMap[int, WindowCluster]",
-) -> "OrderedMap[int, MixedEntry]":
-    """KDE density per candidate from its K nearest clusters with uniform
-    weights 1/k, means divided by k twice (Q2, :70-84).  Neighbor lookups
-    go through the MIXED store, so padded id 0 can resolve to candidate
-    point 0 (Q5) and duplicate padding entries are counted multiple times.
-    Candidates with <=1 found neighbors are dropped entirely (:62-64).
-
-    Returns the PointsWithDensities store content in ascending-key order.
-    """
-    # Build PointDensityBuffer: candidates first, then clusters overwrite
-    # on id collision (forward order of KNearestPointsProcessor's flush).
-    buffer: Dict[int, MixedEntry] = {}
-    for pid, x in candidates.items():
-        buffer[pid] = MixedEntry(
-            centroid=x, density=0.0, is_candidate=True, knn_ids=cand_knn[pid]
-        )
-    for cid, cl in survivors.items():
-        buffer[cid] = MixedEntry(
-            centroid=cl.centroid, density=cl.density, is_candidate=False
-        )
-
-    keys = sorted(buffer)
-    keys_a = np.array(keys, dtype=np.int64)
-    cent_table = (
-        np.stack([buffer[key].centroid for key in keys])
-        if keys
-        else np.empty((0, 0))
-    )
-    cand_keys = [key for key in keys if buffer[key].is_candidate]
-    cand_rows = np.searchsorted(keys_a, np.array(cand_keys, dtype=np.int64))
-    width = max((len(buffer[key].knn_ids) for key in cand_keys), default=0)
-    knn_matrix = np.full((len(cand_keys), width), -1, dtype=np.int64)
-    for i, key in enumerate(cand_keys):
-        ids = np.asarray(buffer[key].knn_ids, dtype=np.int64)
-        knn_matrix[i, : len(ids)] = ids
-
-    dens, keep = _point_densities(keys_a, cent_table, cand_rows, knn_matrix)
-    dens_by_key = {
-        key: float(dens[i]) for i, key in enumerate(cand_keys) if keep[i]
-    }
-
-    out: OrderedMap[int, MixedEntry] = {}
-    for key in keys:
-        entry = buffer[key]
-        if not entry.is_candidate:
-            out[key] = entry
-        elif key in dens_by_key:
-            out[key] = MixedEntry(
-                centroid=entry.centroid,
-                density=dens_by_key[key],
-                is_candidate=True,
-                knn_ids=entry.knn_ids,
-            )
-    return out
-
-
-# ---------------------------------------------------------------------------
-# P9 — KLOME scoring + top-N (PointPruningProcessorSupplier.java:41-106)
-# ---------------------------------------------------------------------------
-
-
-def point_pruning(
-    store: "OrderedMap[int, MixedEntry]", n: int
-) -> List[Outlier]:
-    """KLOME score per candidate against its KNN densities looked up in the
-    mixed store (duplicates in the raw knn array counted repeatedly, Q5);
-    'stddev' without /count (Q2); score = Double.MAX_VALUE when stddev==0
-    (:76-78).  Top-N lowest scores win; ties broken by (klome, point_id)
-    ascending — a documented deviation from the reference's unstable
-    PriorityQueue (Q10).  NaN scores sort last (Java Double.compareTo)."""
-    keys = sorted(store)
-    keys_a = np.array(keys, dtype=np.int64)
-    dens_table = np.array([store[key].density for key in keys])
-    cand_keys = [key for key in keys if store[key].is_candidate]
-    if not cand_keys:
-        return []
-    own_dens = np.array([store[key].density for key in cand_keys])
-    width = max(len(store[key].knn_ids) for key in cand_keys)
-    knn_matrix = np.full((len(cand_keys), width), -1, dtype=np.int64)
-    for i, key in enumerate(cand_keys):
-        ids = np.asarray(store[key].knn_ids, dtype=np.int64)
-        knn_matrix[i, : len(ids)] = ids
-    posc, found = _resolve(keys_a, knn_matrix)
-    klome = _klome_scores(dens_table, own_dens, posc, found)
-    feats = np.stack([store[key].centroid for key in cand_keys])
-    return _topn(
-        np.array(cand_keys, dtype=np.int64), klome, own_dens, feats, n
-    )
-
-
 # ---------------------------------------------------------------------------
 # Whole-window pipeline (P3..P9) — pure function of the window's clusters
 # and point assignments; this is what the Spark engine fans out per window.
 # ---------------------------------------------------------------------------
+
+
+def score_clusters(
+    window_clusters: "OrderedMap[int, WindowCluster]",
+    k: int,
+    n: int,
+    kernel: str = "gaussian",
+) -> Tuple["OrderedMap[int, WindowCluster]", "OrderedMap[int, bool]"]:
+    """P3..P5 for one closed window: cluster KNN -> cluster KDE -> KLOME
+    pruning.  Returns (surviving clusters, might_contain_outliers flags)."""
+    knn_clusters(window_clusters, k)
+    survivors = estimate_cluster_densities(window_clusters, KERNELS[kernel])
+    return survivors, prune_clusters(survivors, n)
 
 
 def window_pipeline(
@@ -999,23 +873,10 @@ def window_pipeline(
     reference-parity default; 'epanechnikov' is the compact-support
     extension (same bound construction, see ``_epanechnikov_raw``).
     """
-    kernel_fn = KERNELS[kernel]
-    knn_clusters(window_clusters, k)
-    survivors = estimate_cluster_densities(window_clusters, kernel_fn)
-    flags = prune_clusters(survivors, n)
-
-    # P6 semi-join, vectorized: points whose assigned cluster is flagged
-    pids = np.asarray(point_ids, dtype=np.int64)
-    cids = np.asarray(point_cluster_ids, dtype=np.int64)
-    flagged = np.array(
-        sorted(c for c, f in flags.items() if f), dtype=np.int64
+    survivors, flags = score_clusters(window_clusters, k, n, kernel)
+    cand_pids, cand_X = flagged_candidates(
+        flags, point_ids, point_cluster_ids, point_features
     )
-    sel = np.isin(cids, flagged)
-    cand_pids = pids[sel]
-    cand_X = np.asarray(point_features, dtype=np.float64)[sel]
-    order = np.argsort(cand_pids, kind="stable")
-    cand_pids = cand_pids[order]
-    cand_X = cand_X[order] if cand_X.size else cand_X
 
     surv_cids = np.fromiter(survivors.keys(), dtype=np.int64, count=len(survivors))
     if len(surv_cids):
@@ -1026,9 +887,79 @@ def window_pipeline(
         surv_dens = np.empty(0)
 
     outliers = _point_stage(
-        cand_pids, cand_X, surv_cids, surv_cent, surv_dens, k, n, kernel_fn
+        cand_pids, cand_X, surv_cids, surv_cent, surv_dens, k, n,
+        KERNELS[kernel],
     )
     return outliers, flags, [int(p) for p in cand_pids]
+
+
+# ---------------------------------------------------------------------------
+# Pane close — the one pane-close state machine (cluster -> window
+# synthesis -> carry -> ring -> window pipeline) every engine calls
+# ---------------------------------------------------------------------------
+
+
+def advance_pane(
+    state: ShardState,
+    ids: np.ndarray,
+    X: np.ndarray,
+    threshold: float,
+    k: int,
+    panes_per_window: int,
+) -> Tuple[np.ndarray, np.ndarray, np.ndarray, "OrderedMap[int, WindowCluster]"]:
+    """Close one pane of a shard: greedy clustering against the carried
+    clusters, sliding-window synthesis, carry-over update (mutates
+    ``state``).  Returns ``(ids, X, assignments, window_clusters)`` with
+    ``ids``/``X`` sorted by point id, the order ``assignments`` follows."""
+    order = np.argsort(ids, kind="stable")
+    ids, X = ids[order], X[order]
+    assignments, pane_clusters = cluster_pane(
+        ids, X, state.carry, threshold, k
+    )
+    window_clusters = aggregate_window(state, pane_clusters, panes_per_window)
+    state.carry = carry_from_window(window_clusters)
+    return ids, X, assignments, window_clusters
+
+
+def close_pane(
+    state: ShardState,
+    ring: List[Tuple[np.ndarray, np.ndarray, np.ndarray]],
+    pane: int,
+    ids: np.ndarray,
+    X: np.ndarray,
+    threshold: float,
+    k: int,
+    n: int,
+    panes_per_window: int,
+    kernel: str = "gaussian",
+) -> Tuple[WindowResult, int]:
+    """``advance_pane``, then the window pipeline over the ring of the
+    last ``panes_per_window`` panes' ``(ids, assignments, X)`` — the
+    Filter stage's window store (retention = panes_per_window panes,
+    Main.java:142-148).  Mutates ``state`` and ``ring``; returns the
+    window's result and its point count."""
+    ids, X, assignments, window_clusters = advance_pane(
+        state, ids, X, threshold, k, panes_per_window
+    )
+    ring.append((ids, assignments, X))
+    if len(ring) > panes_per_window:
+        ring.pop(0)
+    w_ids = np.concatenate([r[0] for r in ring])
+    w_cids = np.concatenate([r[1] for r in ring])
+    # an empty pane's features may be (0, 0)-shaped: leave them out
+    populated = [r[2] for r in ring if len(r[0])]
+    w_X = np.concatenate(populated) if populated else np.empty((0, 0))
+    outliers, flags, cand_ids = window_pipeline(
+        window_clusters, w_ids, w_cids, w_X, k, n, kernel
+    )
+    result = WindowResult(
+        pane_id=pane,
+        outliers=outliers,
+        window_clusters=window_clusters,
+        flags=flags,
+        candidate_ids=cand_ids,
+    )
+    return result, len(w_ids)
 
 
 # ---------------------------------------------------------------------------
@@ -1059,48 +990,17 @@ def run_stream(
     ts_a = np.asarray(list(timestamps), dtype=np.float64)
     feat_a = np.asarray(features, dtype=np.float64)
     pane_ids = np.floor(ts_a / pane_seconds).astype(np.int64)
+    if len(pid_a) == 0:
+        return []
 
     state = ShardState()
+    ring: List[Tuple[np.ndarray, np.ndarray, np.ndarray]] = []
     results: List[WindowResult] = []
-    # Ring of the last panes' assignments for the Filter stage's window
-    # store (retention = panes_per_window panes, Main.java:142-148).
-    assign_ring: List[Tuple[np.ndarray, np.ndarray, np.ndarray]] = []
-
-    if len(pid_a) == 0:
-        return results
-
     for pane in range(int(pane_ids.min()), int(pane_ids.max()) + 1):
         sel = pane_ids == pane
-        ids = pid_a[sel]
-        X = feat_a[sel] if sel.any() else np.empty((0, feat_a.shape[1]))
-        order = np.argsort(ids, kind="stable")
-        ids, X = ids[order], X[order]
-
-        assignments, pane_clusters = cluster_pane(
-            ids, X, state.carry, threshold, k
+        result, _ = close_pane(
+            state, ring, pane, pid_a[sel], feat_a[sel],
+            threshold, k, n, panes_per_window, kernel,
         )
-        window_clusters = aggregate_window(
-            state, pane_clusters, panes_per_window
-        )
-        state.carry = carry_from_window(window_clusters)
-
-        assign_ring.append((ids, assignments, X))
-        if len(assign_ring) > panes_per_window:
-            assign_ring.pop(0)
-        w_ids = np.concatenate([a[0] for a in assign_ring])
-        w_cids = np.concatenate([a[1] for a in assign_ring])
-        w_X = np.concatenate([a[2] for a in assign_ring])
-
-        outliers, flags, cand_ids = window_pipeline(
-            window_clusters, w_ids, w_cids, w_X, k, n, kernel
-        )
-        results.append(
-            WindowResult(
-                pane_id=pane,
-                outliers=outliers,
-                window_clusters=window_clusters,
-                flags=flags,
-                candidate_ids=cand_ids,
-            )
-        )
+        results.append(result)
     return results

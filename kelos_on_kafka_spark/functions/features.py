@@ -18,7 +18,7 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, DoubleType, StringType
+from pyspark.sql.types import ArrayType, DoubleType
 
 FEATURE_DIM = 4
 FEATURE_NAMES = [
@@ -150,11 +150,6 @@ def page_features_pandas(
 
 # Spark-facing UDFs (Arrow-batched).  pandas_udf infers types from the
 # signature, so each wrapper has a plain (pd.Series, ...) signature.
-
-
-@F.pandas_udf(StringType())
-def extract_text(html: pd.Series) -> pd.Series:
-    return extract_text_pandas(html)
 
 
 @F.pandas_udf(ArrayType(DoubleType()))

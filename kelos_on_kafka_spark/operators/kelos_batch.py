@@ -109,192 +109,174 @@ OUTLIER_SCHEMA = StructType(
 )
 
 
-def _stage_a_rows(
-    shard: int,
-    pane: int,
-    ids: np.ndarray,
-    X: np.ndarray,
-    state: core.ShardState,
-    cfg: KelosConfig,
-) -> List[tuple]:
-    """Close one pane for one shard: greedy clustering + window synthesis +
-    carry-over update.  Returns union-typed output rows."""
-    assignments, pane_clusters = core.cluster_pane(
-        ids, X, state.carry, cfg.distance_threshold, cfg.k
-    )
-    window_clusters = core.aggregate_window(
-        state, pane_clusters, cfg.panes_per_window
-    )
-    state.carry = core.carry_from_window(window_clusters)
+def _walk_panes(
+    batches: Iterator[pd.DataFrame], close
+) -> Iterator[list]:
+    """Walk Arrow batches sorted by ``(shard, pane_id, point_id)`` pane by
+    pane with bounded memory (one pane buffered at a time).  Each shard
+    starts from fresh state and closes every pane from its first to its
+    last in order — empty gap panes too (catch-up punctuation;
+    SURVEY.md §3.1).  ``close(state, ring, shard, pane, ids, X)`` returns
+    a list of outputs; they are yielded once per input batch that closed
+    a pane, and once more after the last batch."""
+    state: Optional[core.ShardState] = None
+    ring: List[Tuple[np.ndarray, np.ndarray, np.ndarray]] = []
+    cur: Optional[Tuple[int, int]] = None  # (shard, pane)
+    buf_ids: List[np.ndarray] = []
+    buf_X: List[np.ndarray] = []
+    out: list = []
 
-    order = np.argsort(ids, kind="stable")
-    rows = [
-        (
-            "a",
-            shard,
-            pane,
-            int(assignments[i]),
-            int(ids[order[i]]),
-            [float(v) for v in X[order[i]]],
-            None,
-            None,
-            None,
-            None,
+    def flush() -> None:
+        ids = np.concatenate(buf_ids) if buf_ids else np.empty(0, dtype=np.int64)
+        X = np.concatenate(buf_X) if buf_X else np.empty((0, 0))
+        buf_ids.clear()
+        buf_X.clear()
+        out.extend(close(state, ring, cur[0], cur[1], ids, X))
+
+    for pdf in batches:
+        if pdf.empty:
+            continue
+        shards = pdf["shard"].to_numpy()
+        panes = pdf["pane_id"].to_numpy()
+        pids = pdf["point_id"].to_numpy(dtype=np.int64)
+        feats = np.stack(
+            [np.asarray(f, dtype=np.float64) for f in pdf["features"]]
         )
-        for i in range(len(ids))
-    ]
-    rows.extend(
-        (
-            "w",
-            shard,
-            pane,
-            int(cid),
-            None,
-            [float(v) for v in wc.centroid],
-            int(wc.size),
-            [float(v) for v in wc.linear_sums],
-            [float(v) for v in wc.mins],
-            [float(v) for v in wc.maxs],
-        )
-        for cid, wc in window_clusters.items()
-    )
-    return rows
+        # split the sorted batch at (shard, pane) boundaries
+        change = np.nonzero(
+            (shards[1:] != shards[:-1]) | (panes[1:] != panes[:-1])
+        )[0]
+        starts = np.concatenate([[0], change + 1])
+        ends = np.concatenate([change + 1, [len(pdf)]])
+        for s, e in zip(starts, ends):
+            key = (int(shards[s]), int(panes[s]))
+            if cur is not None and key != cur:
+                flush()
+                if key[0] == cur[0]:
+                    for gap in range(cur[1] + 1, key[1]):
+                        cur = (key[0], gap)
+                        flush()
+                else:
+                    state = None
+            if state is None:
+                state, ring = core.ShardState(), []
+            cur = key
+            buf_ids.append(pids[s:e])
+            buf_X.append(feats[s:e])
+        if out:
+            yield out
+            out = []
+    if cur is not None:
+        flush()
+    if out:
+        yield out
 
 
 def _make_stage_a_fn(cfg: KelosConfig):
+    def close(state, ring, shard, pane, ids, X) -> List[tuple]:
+        """Union-typed rows of one closed pane: its point assignments and
+        its window's cluster aggregates."""
+        ids, X, assignments, window_clusters = core.advance_pane(
+            state, ids, X, cfg.distance_threshold, cfg.k, cfg.panes_per_window
+        )
+        rows = [
+            ("a", shard, pane, int(cid), int(pid), [float(v) for v in x],
+             None, None, None, None)
+            for pid, cid, x in zip(ids, assignments, X)
+        ]
+        rows.extend(
+            (
+                "w",
+                shard,
+                pane,
+                int(cid),
+                None,
+                [float(v) for v in wc.centroid],
+                int(wc.size),
+                [float(v) for v in wc.linear_sums],
+                [float(v) for v in wc.mins],
+                [float(v) for v in wc.maxs],
+            )
+            for cid, wc in window_clusters.items()
+        )
+        return rows
+
     def stage_a(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        state: Optional[core.ShardState] = None
-        cur: Optional[Tuple[int, int]] = None  # (shard, pane)
-        buf_ids: List[np.ndarray] = []
-        buf_X: List[np.ndarray] = []
-        out_rows: List[tuple] = []
-
-        def flush_pane() -> None:
-            nonlocal buf_ids, buf_X
-            shard, pane = cur
-            ids = (
-                np.concatenate(buf_ids)
-                if buf_ids
-                else np.empty(0, dtype=np.int64)
-            )
-            X = (
-                np.concatenate(buf_X)
-                if buf_X
-                else np.empty((0, 0))
-            )
-            out_rows.extend(_stage_a_rows(shard, pane, ids, X, state, cfg))
-            buf_ids, buf_X = [], []
-
-        def close_gap_panes(shard: int, upto_exclusive: int) -> None:
-            """Empty panes between populated ones still close windows
-            (catch-up punctuation; SURVEY.md §3.1)."""
-            nonlocal cur
-            pane = cur[1] + 1
-            while pane < upto_exclusive:
-                cur = (shard, pane)
-                flush_pane()
-                pane += 1
-
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            shards = pdf["shard"].to_numpy()
-            panes = pdf["pane_id"].to_numpy()
-            pids = pdf["point_id"].to_numpy(dtype=np.int64)
-            feats = np.stack(
-                [np.asarray(f, dtype=np.float64) for f in pdf["features"]]
-            )
-            # split the sorted batch at (shard, pane) boundaries
-            change = np.nonzero(
-                (shards[1:] != shards[:-1]) | (panes[1:] != panes[:-1])
-            )[0]
-            starts = np.concatenate([[0], change + 1])
-            ends = np.concatenate([change + 1, [len(pdf)]])
-            for s, e in zip(starts, ends):
-                key = (int(shards[s]), int(panes[s]))
-                if cur is not None and key != cur:
-                    flush_pane()
-                    if key[0] == cur[0]:
-                        close_gap_panes(key[0], key[1])
-                    else:
-                        state = None
-                    cur = None
-                if cur is None:
-                    cur = key
-                    if state is None:
-                        state = core.ShardState()
-                buf_ids.append(pids[s:e])
-                buf_X.append(feats[s:e])
-            if out_rows:
-                yield pd.DataFrame(
-                    out_rows, columns=STAGE_A_SCHEMA.fieldNames()
-                )
-                out_rows = []
-        if cur is not None:
-            flush_pane()
-        if out_rows:
-            yield pd.DataFrame(out_rows, columns=STAGE_A_SCHEMA.fieldNames())
+        for rows in _walk_panes(batches, close):
+            yield pd.DataFrame(rows, columns=STAGE_A_SCHEMA.fieldNames())
 
     return stage_a
 
 
-def _make_window_fn(cfg: KelosConfig):
+def outliers_frame(
+    shard: int, window_id: int, outliers: List[core.Outlier], cfg: KelosConfig
+) -> pd.DataFrame:
+    """``OUTLIER_SCHEMA`` rows of one window's top-N outliers."""
     pane_s = cfg.pane_seconds
-    panes = cfg.panes_per_window
+    start_s = (window_id + 1 - cfg.panes_per_window) * pane_s
+    return pd.DataFrame(
+        {
+            "shard": np.int64(shard),
+            "window_id": np.int64(window_id),
+            "window_start": pd.Timestamp(start_s, unit="s", tz="UTC"),
+            "window_end": pd.Timestamp((window_id + 1) * pane_s, unit="s", tz="UTC"),
+            "rank": np.array([o.rank for o in outliers], dtype=np.int32),
+            "point_id": np.array([o.point_id for o in outliers], dtype=np.int64),
+            "klome": [o.klome for o in outliers],
+            "density": [o.density for o in outliers],
+            "features": [list(o.features) for o in outliers],
+        }
+    )
 
+
+def _window_clusters(
+    clusters_pdf: pd.DataFrame,
+) -> "core.OrderedMap[int, core.WindowCluster]":
+    """One window's stage-A cluster rows as ``WindowCluster``s in
+    ascending cluster-id order."""
+    wcs: "core.OrderedMap[int, core.WindowCluster]" = {}
+    for row in clusters_pdf.sort_values("cluster_id").itertuples(index=False):
+        cid = int(row.cluster_id)
+        wcs[cid] = core.WindowCluster(
+            cluster_id=cid,
+            size=int(row.size),
+            linear_sums=np.asarray(row.linear_sums, dtype=np.float64),
+            centroid=np.asarray(row.features, dtype=np.float64),
+            mins=np.asarray(row.mins, dtype=np.float64),
+            maxs=np.asarray(row.maxs, dtype=np.float64),
+        )
+    return wcs
+
+
+def _window_points(
+    assigns_pdf: pd.DataFrame,
+) -> Tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """One window's exploded assignment rows as (point ids, cluster ids,
+    features)."""
+    if assigns_pdf.empty:
+        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64), np.empty((0, 0))
+    return (
+        assigns_pdf["point_id"].to_numpy(dtype=np.int64),
+        assigns_pdf["p_cluster_id"].to_numpy(dtype=np.int64),
+        np.stack(
+            [np.asarray(f, dtype=np.float64) for f in assigns_pdf["p_features"]]
+        ),
+    )
+
+
+def _make_window_fn(cfg: KelosConfig):
     def window_fn(
         key: tuple, clusters_pdf: pd.DataFrame, assigns_pdf: pd.DataFrame
     ) -> pd.DataFrame:
-        shard, window_id = int(key[0]), int(key[1])
-        if clusters_pdf.empty:
-            return pd.DataFrame(columns=OUTLIER_SCHEMA.fieldNames())
-        clusters_pdf = clusters_pdf.sort_values("cluster_id")
-        wcs: "core.OrderedMap[int, core.WindowCluster]" = {}
-        for row in clusters_pdf.itertuples(index=False):
-            cid = int(row.cluster_id)
-            wcs[cid] = core.WindowCluster(
-                cluster_id=cid,
-                size=int(row.size),
-                linear_sums=np.asarray(row.linear_sums, dtype=np.float64),
-                centroid=np.asarray(row.features, dtype=np.float64),
-                mins=np.asarray(row.mins, dtype=np.float64),
-                maxs=np.asarray(row.maxs, dtype=np.float64),
+        if not clusters_pdf.empty:
+            outliers, _flags, _cands = core.window_pipeline(
+                _window_clusters(clusters_pdf),
+                *_window_points(assigns_pdf),
+                cfg.k, cfg.n, cfg.kernel,
             )
-        if assigns_pdf.empty:
-            pids = np.empty(0, dtype=np.int64)
-            cids = np.empty(0, dtype=np.int64)
-            X = np.empty((0, 0))
-        else:
-            pids = assigns_pdf["point_id"].to_numpy(dtype=np.int64)
-            cids = assigns_pdf["p_cluster_id"].to_numpy(dtype=np.int64)
-            X = np.stack(
-                [
-                    np.asarray(f, dtype=np.float64)
-                    for f in assigns_pdf["p_features"]
-                ]
-            )
-        outliers, _flags, _cands = core.window_pipeline(
-            wcs, pids, cids, X, cfg.k, cfg.n, cfg.kernel
-        )
-        if not outliers:
-            return pd.DataFrame(columns=OUTLIER_SCHEMA.fieldNames())
-        end_s = (window_id + 1) * pane_s
-        start_s = (window_id + 1 - panes) * pane_s
-        return pd.DataFrame(
-            {
-                "shard": np.int64(shard),
-                "window_id": np.int64(window_id),
-                "window_start": pd.Timestamp(start_s, unit="s", tz="UTC"),
-                "window_end": pd.Timestamp(end_s, unit="s", tz="UTC"),
-                "rank": np.array([o.rank for o in outliers], dtype=np.int32),
-                "point_id": np.array(
-                    [o.point_id for o in outliers], dtype=np.int64
-                ),
-                "klome": [o.klome for o in outliers],
-                "density": [o.density for o in outliers],
-                "features": [list(o.features) for o in outliers],
-            }
-        )
+            if outliers:
+                return outliers_frame(int(key[0]), int(key[1]), outliers, cfg)
+        return pd.DataFrame(columns=OUTLIER_SCHEMA.fieldNames())
 
     return window_fn
 
@@ -322,23 +304,25 @@ def prepare_points(
     )
 
 
-def run_stage_a(points: DataFrame, cfg: KelosConfig = DEFAULT_CONFIG) -> DataFrame:
-    """Sequential-per-shard pane clustering + window synthesis.
+def _sorted_by_shard(points: DataFrame) -> DataFrame:
+    """Give each task a contiguous, pane-ordered view of its shards, the
+    input the pane walker needs.
 
-    ``repartition(shard)`` + ``sortWithinPartitions`` gives each task a
-    contiguous, pane-ordered view of its shards; the mapInPandas iterator
-    holds only one pane in memory at a time.
-    """
-    # Hash repartition on shard: single-pass (repartitionByRange's
-    # sampler re-evaluates the whole upstream — incl. the feature UDF —
-    # once more, doubling e2e cost).  Balance comes from shards >>
-    # partitions (hash collisions average out); sortWithinPartitions
-    # gives the pane-ordered iterator the stage needs.
+    Hash repartition on shard: single-pass (repartitionByRange's sampler
+    re-evaluates the whole upstream — incl. the feature UDF — once more,
+    doubling e2e cost).  Balance comes from shards >> partitions (hash
+    collisions average out)."""
     n_part = points.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    return (
-        points.repartition(int(n_part), "shard")
-        .sortWithinPartitions("shard", "pane_id", "point_id")
-        .mapInPandas(_make_stage_a_fn(cfg), STAGE_A_SCHEMA)
+    return points.repartition(int(n_part), "shard").sortWithinPartitions(
+        "shard", "pane_id", "point_id"
+    )
+
+
+def run_stage_a(points: DataFrame, cfg: KelosConfig = DEFAULT_CONFIG) -> DataFrame:
+    """Sequential-per-shard pane clustering + window synthesis; the
+    mapInPandas iterator holds only one pane in memory at a time."""
+    return _sorted_by_shard(points).mapInPandas(
+        _make_stage_a_fn(cfg), STAGE_A_SCHEMA
     )
 
 
@@ -348,113 +332,19 @@ def _make_streamwise_fn(cfg: KelosConfig):
     outlier rows directly.  One shuffle total (the shard sort), no
     assignment explode, no cogroup — the right physical plan when
     #shards >= #cores."""
-    pane_s = cfg.pane_seconds
-    panes = cfg.panes_per_window
+
+    def close(state, ring, shard, pane, ids, X) -> List[pd.DataFrame]:
+        result, _ = core.close_pane(
+            state, ring, pane, ids, X, cfg.distance_threshold, cfg.k,
+            cfg.n, cfg.panes_per_window, cfg.kernel,
+        )
+        if not result.outliers:
+            return []
+        return [outliers_frame(shard, pane, result.outliers, cfg)]
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        state: Optional[core.ShardState] = None
-        ring: List[Tuple[np.ndarray, np.ndarray, np.ndarray]] = []
-        cur: Optional[Tuple[int, int]] = None
-        buf_ids: List[np.ndarray] = []
-        buf_X: List[np.ndarray] = []
-        out_frames: List[pd.DataFrame] = []
-
-        def close_pane() -> None:
-            nonlocal buf_ids, buf_X
-            shard, pane = cur
-            ids = (
-                np.concatenate(buf_ids) if buf_ids else np.empty(0, dtype=np.int64)
-            )
-            X = np.concatenate(buf_X) if buf_X else np.empty((0, 0))
-            buf_ids, buf_X = [], []
-            order = np.argsort(ids, kind="stable")
-            ids, X = ids[order], X[order]
-            assignments, pane_clusters = core.cluster_pane(
-                ids, X, state.carry, cfg.distance_threshold, cfg.k
-            )
-            window_clusters = core.aggregate_window(state, pane_clusters, panes)
-            state.carry = core.carry_from_window(window_clusters)
-            ring.append((ids, assignments, X))
-            if len(ring) > panes:
-                ring.pop(0)
-            w_ids = np.concatenate([a[0] for a in ring])
-            w_cids = np.concatenate([a[1] for a in ring])
-            w_X = (
-                np.concatenate([a[2] for a in ring if a[2].size])
-                if any(a[2].size for a in ring)
-                else np.empty((0, 0))
-            )
-            outliers, _f, _c = core.window_pipeline(
-                window_clusters, w_ids, w_cids, w_X, cfg.k, cfg.n, cfg.kernel
-            )
-            if outliers:
-                out_frames.append(
-                    pd.DataFrame(
-                        {
-                            "shard": np.int64(shard),
-                            "window_id": np.int64(pane),
-                            "window_start": pd.Timestamp(
-                                (pane + 1 - panes) * pane_s, unit="s", tz="UTC"
-                            ),
-                            "window_end": pd.Timestamp(
-                                (pane + 1) * pane_s, unit="s", tz="UTC"
-                            ),
-                            "rank": np.array(
-                                [o.rank for o in outliers], dtype=np.int32
-                            ),
-                            "point_id": np.array(
-                                [o.point_id for o in outliers], dtype=np.int64
-                            ),
-                            "klome": [o.klome for o in outliers],
-                            "density": [o.density for o in outliers],
-                            "features": [list(o.features) for o in outliers],
-                        }
-                    )
-                )
-
-        buf_ids = []
-        buf_X = []
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            shards = pdf["shard"].to_numpy()
-            panes_col = pdf["pane_id"].to_numpy()
-            pids = pdf["point_id"].to_numpy(dtype=np.int64)
-            feats = np.stack(
-                [np.asarray(f, dtype=np.float64) for f in pdf["features"]]
-            )
-            change = np.nonzero(
-                (shards[1:] != shards[:-1]) | (panes_col[1:] != panes_col[:-1])
-            )[0]
-            starts = np.concatenate([[0], change + 1])
-            ends = np.concatenate([change + 1, [len(pdf)]])
-            for s, e in zip(starts, ends):
-                key = (int(shards[s]), int(panes_col[s]))
-                if cur is not None and key != cur:
-                    close_pane()
-                    if key[0] == cur[0]:
-                        pane = cur[1] + 1
-                        while pane < key[1]:
-                            cur = (key[0], pane)
-                            close_pane()
-                            pane += 1
-                    else:
-                        state = None
-                        ring.clear()
-                    cur = None
-                if cur is None:
-                    cur = key
-                    if state is None:
-                        state = core.ShardState()
-                buf_ids.append(pids[s:e])
-                buf_X.append(feats[s:e])
-            if out_frames:
-                yield pd.concat(out_frames, ignore_index=True)
-                out_frames = []
-        if cur is not None:
-            close_pane()
-        if out_frames:
-            yield pd.concat(out_frames, ignore_index=True)
+        for frames in _walk_panes(batches, close):
+            yield pd.concat(frames, ignore_index=True)
 
     return fn
 
@@ -471,11 +361,8 @@ def detect_outliers_streamwise(
     when #shards >= #cores — see detect_outliers for the window-parallel
     plan used when shards are few)."""
     points = prepare_points(df, cfg, id_col, ts_col, features_col, shard_col)
-    n_part = points.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    return (
-        points.repartition(int(n_part), "shard")
-        .sortWithinPartitions("shard", "pane_id", "point_id")
-        .mapInPandas(_make_streamwise_fn(cfg), OUTLIER_SCHEMA)
+    return _sorted_by_shard(points).mapInPandas(
+        _make_streamwise_fn(cfg), OUTLIER_SCHEMA
     )
 
 
@@ -503,160 +390,51 @@ CANDIDATE_DEBUG_SCHEMA = StructType(
 )
 
 
-def _make_debug_window_fn(cfg: KelosConfig, which: str):
+# Union of both debug tables, split by ``kelos_debug_tables``:
+# 'c' = scored cluster (CLUSTER_DEBUG_SCHEMA), 'p' = candidate point
+# (CANDIDATE_DEBUG_SCHEMA).
+DEBUG_SCHEMA = StructType(
+    [StructField("row_type", StringType())]
+    + CLUSTER_DEBUG_SCHEMA.fields
+    + CANDIDATE_DEBUG_SCHEMA.fields[2:]
+)
+
+
+def _make_debug_window_fn(cfg: KelosConfig):
     """Debug taps mirroring the reference's densities/candidates topics
     (ClusterConsumer.java reads `densities`; CandidatesConsumer filters
-    flag=true — SURVEY.md §2.1 S4)."""
+    flag=true — SURVEY.md §2.1 S4), both from one pass per window."""
 
     def fn(key, clusters_pdf, assigns_pdf):
         shard, window_id = int(key[0]), int(key[1])
         if clusters_pdf.empty:
-            schema = (
-                CLUSTER_DEBUG_SCHEMA if which == "clusters" else CANDIDATE_DEBUG_SCHEMA
-            )
-            return pd.DataFrame(columns=schema.fieldNames())
-        clusters_pdf = clusters_pdf.sort_values("cluster_id")
-        wcs: "core.OrderedMap[int, core.WindowCluster]" = {}
-        for row in clusters_pdf.itertuples(index=False):
-            cid = int(row.cluster_id)
-            wcs[cid] = core.WindowCluster(
-                cluster_id=cid,
-                size=int(row.size),
-                linear_sums=np.asarray(row.linear_sums, dtype=np.float64),
-                centroid=np.asarray(row.features, dtype=np.float64),
-                mins=np.asarray(row.mins, dtype=np.float64),
-                maxs=np.asarray(row.maxs, dtype=np.float64),
-            )
-        core.knn_clusters(wcs, cfg.k)
-        survivors = core.estimate_cluster_densities(
-            wcs, core.KERNELS[cfg.kernel]
+            return pd.DataFrame(columns=DEBUG_SCHEMA.fieldNames())
+        survivors, flags = core.score_clusters(
+            _window_clusters(clusters_pdf), cfg.k, cfg.n, cfg.kernel
         )
-        flags = core.prune_clusters(survivors, cfg.n)
-        if which == "clusters":
-            return pd.DataFrame(
-                {
-                    "shard": np.int64(shard),
-                    "window_id": np.int64(window_id),
-                    "cluster_id": np.array(list(survivors), dtype=np.int64),
-                    "size": np.array(
-                        [survivors[c].size for c in survivors], dtype=np.int64
-                    ),
-                    "centroid": [list(survivors[c].centroid) for c in survivors],
-                    "density": [survivors[c].density for c in survivors],
-                    "min_density_bound": [
-                        survivors[c].min_density_bound for c in survivors
-                    ],
-                    "max_density_bound": [
-                        survivors[c].max_density_bound for c in survivors
-                    ],
-                    "might_contain_outliers": [flags[c] for c in survivors],
-                }
-            )
-        # candidates
-        if assigns_pdf.empty:
-            return pd.DataFrame(columns=CANDIDATE_DEBUG_SCHEMA.fieldNames())
-        pids = assigns_pdf["point_id"].to_numpy(dtype=np.int64)
-        cids = assigns_pdf["p_cluster_id"].to_numpy(dtype=np.int64)
-        X = np.stack(
-            [np.asarray(f, dtype=np.float64) for f in assigns_pdf["p_features"]]
+        cand_pids, cand_X = core.flagged_candidates(
+            flags, *_window_points(assigns_pdf)
         )
-        cands = core.filter_candidates(pids, cids, X, flags)
-        if not cands:
-            return pd.DataFrame(columns=CANDIDATE_DEBUG_SCHEMA.fieldNames())
-        return pd.DataFrame(
-            {
-                "shard": np.int64(shard),
-                "window_id": np.int64(window_id),
-                "point_id": np.array(list(cands), dtype=np.int64),
-                "features": [list(v) for v in cands.values()],
-            }
+        rows = [
+            ("c", shard, window_id, int(cid), int(wc.size),
+             [float(v) for v in wc.centroid], wc.density,
+             wc.min_density_bound, wc.max_density_bound, flags[cid],
+             None, None)
+            for cid, wc in survivors.items()
+        ]
+        rows.extend(
+            ("p", shard, window_id, None, None, None, None, None, None, None,
+             int(pid), [float(v) for v in x])
+            for pid, x in zip(cand_pids, cand_X)
         )
+        return pd.DataFrame(rows, columns=DEBUG_SCHEMA.fieldNames())
 
     return fn
 
 
-def kelos_debug_tables(
-    df: DataFrame,
-    cfg: KelosConfig = DEFAULT_CONFIG,
-    id_col: str = "id",
-    ts_col: str = "ts",
-    features_col: str = "features",
-    shard_col: Optional[str] = None,
-) -> dict:
-    """The reference's debug topic surfaces as DataFrames
-    (cluster-assignments / densities / candidates; SURVEY.md §2.1 S3-S4):
-    returns {'assignments': ..., 'clusters': ..., 'candidates': ...}."""
-    points = prepare_points(df, cfg, id_col, ts_col, features_col, shard_col)
-    stage_a = _persist_stage(run_stage_a(points, cfg))
-
-    assignments = stage_a.filter(F.col("row_type") == "a").select(
-        "shard",
-        "pane_id",
-        F.col("point_id"),
-        F.col("cluster_id"),
-        F.col("features"),
-    )
-    wdf = stage_a.filter(F.col("row_type") == "w").select(
-        "shard",
-        F.col("pane_id").alias("window_id"),
-        "cluster_id",
-        "features",
-        "size",
-        "linear_sums",
-        "mins",
-        "maxs",
-    )
-    offsets = F.array(*[F.lit(i) for i in range(cfg.panes_per_window)])
-    adf = (
-        stage_a.filter(F.col("row_type") == "a")
-        .withColumn("off", F.explode(offsets))
-        .withColumn("window_id", F.col("pane_id") + F.col("off"))
-        .select(
-            "shard",
-            "window_id",
-            F.col("cluster_id").alias("p_cluster_id"),
-            "point_id",
-            F.col("features").alias("p_features"),
-        )
-    )
-    clusters = (
-        wdf.groupBy("shard", "window_id")
-        .cogroup(adf.groupBy("shard", "window_id"))
-        .applyInPandas(_make_debug_window_fn(cfg, "clusters"), CLUSTER_DEBUG_SCHEMA)
-    )
-    candidates = (
-        wdf.groupBy("shard", "window_id")
-        .cogroup(adf.groupBy("shard", "window_id"))
-        .applyInPandas(
-            _make_debug_window_fn(cfg, "candidates"), CANDIDATE_DEBUG_SCHEMA
-        )
-    )
-    return {
-        "assignments": assignments,
-        "clusters": clusters,
-        "candidates": candidates,
-    }
-
-
-def detect_outliers(
-    df: DataFrame,
-    cfg: KelosConfig = DEFAULT_CONFIG,
-    id_col: str = "id",
-    ts_col: str = "ts",
-    features_col: str = "features",
-    shard_col: Optional[str] = None,
-    persist_stage_a: bool = True,
-) -> DataFrame:
-    """Top-N outliers per sliding window — the engine's flagship query.
-
-    Returns a DataFrame with schema ``OUTLIER_SCHEMA`` ordered by
-    (shard, window_id, rank) semantics (call ``orderBy`` for display).
-    """
-    points = prepare_points(df, cfg, id_col, ts_col, features_col, shard_col)
-    stage_a = run_stage_a(points, cfg)
-    if persist_stage_a:
-        stage_a = _persist_stage(stage_a)
-
+def _window_groups(stage_a: DataFrame, cfg: KelosConfig):
+    """Stage A's window clusters cogrouped with its assignments exploded
+    to every window their pane belongs to, keyed by (shard, window_id)."""
     wdf = stage_a.filter(F.col("row_type") == "w").select(
         "shard",
         F.col("pane_id").alias("window_id"),
@@ -683,9 +461,58 @@ def detect_outliers(
             F.col("features").alias("p_features"),
         )
     )
+    return wdf.groupBy("shard", "window_id").cogroup(
+        adf.groupBy("shard", "window_id")
+    )
 
-    return (
-        wdf.groupBy("shard", "window_id")
-        .cogroup(adf.groupBy("shard", "window_id"))
-        .applyInPandas(_make_window_fn(cfg), OUTLIER_SCHEMA)
+
+def kelos_debug_tables(
+    df: DataFrame,
+    cfg: KelosConfig = DEFAULT_CONFIG,
+    id_col: str = "id",
+    ts_col: str = "ts",
+    features_col: str = "features",
+    shard_col: Optional[str] = None,
+) -> dict:
+    """The reference's debug topic surfaces as DataFrames
+    (cluster-assignments / densities / candidates; SURVEY.md §2.1 S3-S4):
+    returns {'assignments': ..., 'clusters': ..., 'candidates': ...}."""
+    points = prepare_points(df, cfg, id_col, ts_col, features_col, shard_col)
+    stage_a = _persist_stage(run_stage_a(points, cfg))
+    assignments = stage_a.filter(F.col("row_type") == "a").select(
+        "shard", "pane_id", "point_id", "cluster_id", "features"
+    )
+    debug = _persist_stage(
+        _window_groups(stage_a, cfg).applyInPandas(
+            _make_debug_window_fn(cfg), DEBUG_SCHEMA
+        )
+    )
+    return {
+        "assignments": assignments,
+        "clusters": debug.filter(F.col("row_type") == "c").select(
+            *CLUSTER_DEBUG_SCHEMA.fieldNames()
+        ),
+        "candidates": debug.filter(F.col("row_type") == "p").select(
+            *CANDIDATE_DEBUG_SCHEMA.fieldNames()
+        ),
+    }
+
+
+def detect_outliers(
+    df: DataFrame,
+    cfg: KelosConfig = DEFAULT_CONFIG,
+    id_col: str = "id",
+    ts_col: str = "ts",
+    features_col: str = "features",
+    shard_col: Optional[str] = None,
+) -> DataFrame:
+    """Top-N outliers per sliding window — the engine's flagship query.
+
+    Returns a DataFrame with schema ``OUTLIER_SCHEMA`` ordered by
+    (shard, window_id, rank) semantics (call ``orderBy`` for display).
+    """
+    points = prepare_points(df, cfg, id_col, ts_col, features_col, shard_col)
+    stage_a = _persist_stage(run_stage_a(points, cfg))
+    return _window_groups(stage_a, cfg).applyInPandas(
+        _make_window_fn(cfg), OUTLIER_SCHEMA
     )

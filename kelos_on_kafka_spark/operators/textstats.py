@@ -27,12 +27,6 @@ def n_digit_chars(text_col: str = "text") -> Column:
     ).cast("long")
 
 
-def n_punct_chars(text_col: str = "text") -> Column:
-    return F.length(
-        F.regexp_replace(F.col(text_col), "[^.,;:!?]", "")
-    ).cast("long")
-
-
 def doc_fingerprint(text_col: str = "text", prefix_tokens: int = 8) -> Column:
     """Prefix fingerprint: md5 of the first N whitespace tokens — a cheap
     near-dup blocking key (rolling-hash stand-in, engine-portable)."""

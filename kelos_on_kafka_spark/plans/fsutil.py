@@ -73,13 +73,6 @@ def table_exists(spark, path: str) -> bool:
         raise
 
 
-def path_exists(path: str) -> bool:
-    """True iff the path exists; raises on I/O / permission errors
-    (NotFound is the only condition mapped to False)."""
-    fs, p = resolve(path)
-    return fs.get_file_info(p).type != pafs.FileType.NotFound
-
-
 def list_subdirs(path: str) -> list[tuple[str, str]]:
     """Immediate subdirectories of ``path`` as (base_name, full_path);
     empty when ``path`` itself does not exist."""

@@ -114,24 +114,3 @@ def F_bucket(n: int, col: str):
     from pyspark.sql import functions as F
 
     return F.bucket(n, col)
-
-
-def write_outlier_stream_iceberg(
-    outliers: DataFrame,
-    table: str,
-    checkpoint: str,
-    trigger: dict | None = None,
-):
-    """Exactly-once streaming sink into an Iceberg table (fanout append;
-    Iceberg's commit protocol makes replayed epochs idempotent).  The
-    parquet-path equivalent is streaming/sink.py:write_outlier_stream —
-    same window-at-once semantics, different commit mechanism."""
-    writer = (
-        outliers.writeStream.format("iceberg")
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .option("fanout-enabled", "true")
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.toTable(table)

@@ -105,27 +105,6 @@ def serialize_point_records(
     raise ValueError(f"unknown value_format: {value_format}")
 
 
-def write_kafka_points(
-    points: DataFrame,
-    bootstrap_servers: str,
-    topic: str = "data-input",
-    value_format: str = "json",
-    checkpoint_dir: str | None = None,
-):
-    """Produce points to a Kafka topic (plan-level only in this sandbox —
-    no broker; the serialization above carries the semantics and is
-    round-trip tested against ``parse_point_records``)."""
-    out = serialize_point_records(points, value_format)
-    writer = (
-        out.writeStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("topic", topic)
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
-
-
 def read_kafka_points(
     spark: SparkSession,
     bootstrap_servers: str,

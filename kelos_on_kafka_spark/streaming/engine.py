@@ -35,6 +35,7 @@ from pyspark.sql.types import (
 
 from kelos_on_kafka_spark import core
 from kelos_on_kafka_spark.config import DEFAULT_CONFIG, KelosConfig
+from kelos_on_kafka_spark.operators.kelos_batch import outliers_frame
 
 STREAM_OUTLIER_SCHEMA = StructType(
     [
@@ -83,55 +84,20 @@ def _close_pane(
     shard: int, pane: int, st: _StreamShard, cfg: KelosConfig
 ) -> Optional[pd.DataFrame]:
     ids_l, X_l = st.pending.pop(pane, ([], []))
-    ids = (
-        np.concatenate(ids_l) if ids_l else np.empty(0, dtype=np.int64)
-    )
+    ids = np.concatenate(ids_l) if ids_l else np.empty(0, dtype=np.int64)
     X = np.concatenate(X_l) if X_l else np.empty((0, 0))
-    order = np.argsort(ids, kind="stable")
-    ids, X = ids[order], X[order]
-
-    assignments, pane_clusters = core.cluster_pane(
-        ids, X, st.algo.carry, cfg.distance_threshold, cfg.k
+    result, n_window_points = core.close_pane(
+        st.algo, st.ring, pane, ids, X, cfg.distance_threshold, cfg.k,
+        cfg.n, cfg.panes_per_window, cfg.kernel,
     )
-    window_clusters = core.aggregate_window(
-        st.algo, pane_clusters, cfg.panes_per_window
-    )
-    st.algo.carry = core.carry_from_window(window_clusters)
-    st.ring.append((ids, assignments, X))
-    if len(st.ring) > cfg.panes_per_window:
-        st.ring.pop(0)
     st.last_closed = pane
-
-    w_ids = np.concatenate([r[0] for r in st.ring])
-    w_cids = np.concatenate([r[1] for r in st.ring])
-    nonempty = [r[2] for r in st.ring if r[2].size]
-    w_X = np.concatenate(nonempty) if nonempty else np.empty((0, 0))
-    outliers, flags, cand_ids = core.window_pipeline(
-        window_clusters, w_ids, w_cids, w_X, cfg.k, cfg.n, cfg.kernel
-    )
-    if not outliers:
+    if not result.outliers:
         return None
-    pane_s = cfg.pane_seconds
-    return pd.DataFrame(
-        {
-            "shard": np.int64(shard),
-            "window_id": np.int64(pane),
-            "window_start": pd.Timestamp(
-                (pane + 1 - cfg.panes_per_window) * pane_s, unit="s", tz="UTC"
-            ),
-            "window_end": pd.Timestamp((pane + 1) * pane_s, unit="s", tz="UTC"),
-            "rank": np.array([o.rank for o in outliers], dtype=np.int32),
-            "point_id": np.array(
-                [o.point_id for o in outliers], dtype=np.int64
-            ),
-            "klome": [o.klome for o in outliers],
-            "density": [o.density for o in outliers],
-            "features": [list(o.features) for o in outliers],
-            "n_window_points": np.int64(len(w_ids)),
-            "n_clusters": np.int64(len(window_clusters)),
-            "n_candidates": np.int64(len(cand_ids)),
-        }
-    )
+    frame = outliers_frame(shard, pane, result.outliers, cfg)
+    frame["n_window_points"] = np.int64(n_window_points)
+    frame["n_clusters"] = np.int64(len(result.window_clusters))
+    frame["n_candidates"] = np.int64(len(result.candidate_ids))
+    return frame
 
 
 def _make_stateful_fn(cfg: KelosConfig):
