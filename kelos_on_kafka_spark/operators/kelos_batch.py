@@ -6,12 +6,13 @@ Physical plan, designed for the 100 TB target:
 1. **Stage A — pane clustering** (the only inherently sequential part,
    reference: ClusteringProcessorSupplier + AggregationProcessor).  Input
    is hash-partitioned by shard and sorted ``(shard, pane_id, point_id)``
-   within partitions; a ``mapInPandas`` iterator walks the sorted stream
-   pane-by-pane with **bounded memory** (one pane at a time — the whole
-   group is never materialized), maintaining carry-over cluster state per
-   shard exactly like the reference's TempClusters/ClusterStates/global
-   store.  Emits a union-typed stream of per-point assignments and
-   per-window cluster aggregates.  Parallelism = #shards: the greedy
+   within partitions; a ``mapInArrow`` iterator walks the sorted Arrow
+   batches pane-by-pane with **bounded memory** (one pane at a time — the
+   whole group is never materialized), maintaining carry-over cluster
+   state per shard exactly like the reference's
+   TempClusters/ClusterStates/global store.  Emits a union-typed stream
+   of per-point assignments and per-window cluster aggregates, one Arrow
+   batch of numpy-built columns per input batch.  Parallelism = #shards: the greedy
    clustering is order-dependent (SURVEY.md §7.3), so within a shard it
    cannot be parallelized without changing results — the reference is
    single-partition for the same reason (InputProducer.java:67).
@@ -28,6 +29,10 @@ Physical plan, designed for the 100 TB target:
 The shuffle between A and B is the deliberate repartition to window
 groups; everything upstream (feature extraction) is embarrassingly
 parallel and everything inside stages is Arrow-vectorized NumPy.
+
+``detect_outliers_streamwise`` runs the whole dataflow in stage A's
+walker instead (one shuffle, no cogroup), also Arrow batch in, Arrow
+batch out.
 """
 
 from __future__ import annotations
@@ -36,8 +41,10 @@ from typing import Iterator, List, Optional, Tuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
@@ -109,8 +116,25 @@ OUTLIER_SCHEMA = StructType(
 )
 
 
+def _features(col: pa.ListArray) -> np.ndarray:
+    """A batch's ``features`` list column as an (n, d) matrix, read from
+    the list's flat values and offsets.  A null or ragged list would
+    shift every later point onto another point's features, so either
+    one raises."""
+    offsets = col.offsets.to_numpy()
+    lengths = np.diff(offsets)
+    if col.null_count or (lengths != lengths[0]).any():
+        raise ValueError(
+            "features column: every point needs a non-null feature list "
+            f"of one length; a batch has {col.null_count} null list(s) "
+            f"and list lengths {sorted(set(lengths.tolist()))}"
+        )
+    values = col.values.to_numpy(zero_copy_only=False)
+    return values[offsets[0]:offsets[-1]].reshape(len(col), lengths[0])
+
+
 def _walk_panes(
-    batches: Iterator[pd.DataFrame], close
+    batches: Iterator[pa.RecordBatch], close
 ) -> Iterator[list]:
     """Walk Arrow batches sorted by ``(shard, pane_id, point_id)`` pane by
     pane with bounded memory (one pane buffered at a time).  Each shard
@@ -133,21 +157,19 @@ def _walk_panes(
         buf_X.clear()
         out.extend(close(state, ring, cur[0], cur[1], ids, X))
 
-    for pdf in batches:
-        if pdf.empty:
+    for batch in batches:
+        if batch.num_rows == 0:
             continue
-        shards = pdf["shard"].to_numpy()
-        panes = pdf["pane_id"].to_numpy()
-        pids = pdf["point_id"].to_numpy(dtype=np.int64)
-        feats = np.stack(
-            [np.asarray(f, dtype=np.float64) for f in pdf["features"]]
-        )
+        shards = batch.column("shard").to_numpy()
+        panes = batch.column("pane_id").to_numpy()
+        pids = batch.column("point_id").to_numpy()
+        feats = _features(batch.column("features"))
         # split the sorted batch at (shard, pane) boundaries
         change = np.nonzero(
             (shards[1:] != shards[:-1]) | (panes[1:] != panes[:-1])
         )[0]
         starts = np.concatenate([[0], change + 1])
-        ends = np.concatenate([change + 1, [len(pdf)]])
+        ends = np.concatenate([change + 1, [batch.num_rows]])
         for s, e in zip(starts, ends):
             key = (int(shards[s]), int(panes[s]))
             if cur is not None and key != cur:
@@ -172,61 +194,120 @@ def _walk_panes(
         yield out
 
 
+def _record_batch(parts: List[dict], schema: pa.Schema) -> pa.RecordBatch:
+    """One Arrow batch of ``schema`` from column parts.  A part maps field
+    names to numpy columns of one length (a list field: a 2-D array, one
+    list per row); a field a part leaves out is null in its rows."""
+    sizes = [len(next(iter(p.values()))) for p in parts]
+    arrays = []
+    for field in schema:
+        cols = [p.get(field.name) for p in parts]
+        valid = np.concatenate(
+            [np.full(n, c is not None) for n, c in zip(sizes, cols)]
+        )
+        if not valid.any():
+            arrays.append(pa.nulls(len(valid), field.type))
+            continue
+        mask = None if valid.all() else ~valid
+        if pa.types.is_list(field.type):
+            rows = [np.empty((n, 0)) if c is None else c for n, c in zip(sizes, cols)]
+            lengths = np.concatenate(
+                [np.full(n, r.shape[1], dtype=np.int32) for n, r in zip(sizes, rows)]
+            )
+            offsets = np.concatenate([[0], np.cumsum(lengths, dtype=np.int32)])
+            values = pa.array(
+                np.concatenate([r.ravel() for r in rows]), type=field.type.value_type
+            )
+            arrays.append(pa.ListArray.from_arrays(
+                offsets, values, mask=None if mask is None else pa.array(mask)
+            ))
+        else:
+            dtype = next(c.dtype for c in cols if c is not None)
+            values = np.concatenate(
+                [np.zeros(n, dtype) if c is None else c for n, c in zip(sizes, cols)]
+            )
+            arrays.append(pa.array(values, type=field.type, mask=mask))
+    return pa.RecordBatch.from_arrays(arrays, schema=schema)
+
+
 def _make_stage_a_fn(cfg: KelosConfig):
-    def close(state, ring, shard, pane, ids, X) -> List[tuple]:
-        """Union-typed rows of one closed pane: its point assignments and
+    schema = to_arrow_schema(STAGE_A_SCHEMA)
+
+    def close(state, ring, shard, pane, ids, X) -> List[dict]:
+        """Column parts of one closed pane: its point assignments, then
         its window's cluster aggregates."""
         ids, X, assignments, window_clusters = core.advance_pane(
             state, ids, X, cfg.distance_threshold, cfg.k, cfg.panes_per_window
         )
-        rows = [
-            ("a", shard, pane, int(cid), int(pid), [float(v) for v in x],
-             None, None, None, None)
-            for pid, cid, x in zip(ids, assignments, X)
-        ]
-        rows.extend(
-            (
-                "w",
-                shard,
-                pane,
-                int(cid),
-                None,
-                [float(v) for v in wc.centroid],
-                int(wc.size),
-                [float(v) for v in wc.linear_sums],
-                [float(v) for v in wc.mins],
-                [float(v) for v in wc.maxs],
-            )
-            for cid, wc in window_clusters.items()
-        )
-        return rows
 
-    def stage_a(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for rows in _walk_panes(batches, close):
-            yield pd.DataFrame(rows, columns=STAGE_A_SCHEMA.fieldNames())
+        def keys(row_type: str, n: int) -> dict:
+            return {
+                "row_type": np.full(n, row_type),
+                "shard": np.full(n, shard, dtype=np.int64),
+                "pane_id": np.full(n, pane, dtype=np.int64),
+            }
+
+        parts = [
+            {
+                **keys("a", len(ids)),
+                "cluster_id": np.asarray(assignments, dtype=np.int64),
+                "point_id": ids,
+                "features": X,
+            }
+        ]
+        if window_clusters:
+            wcs = list(window_clusters.values())
+            parts.append(
+                {
+                    **keys("w", len(wcs)),
+                    "cluster_id": np.fromiter(window_clusters, np.int64, len(wcs)),
+                    "features": np.stack([wc.centroid for wc in wcs]),
+                    "size": np.fromiter((wc.size for wc in wcs), np.int64, len(wcs)),
+                    "linear_sums": np.stack([wc.linear_sums for wc in wcs]),
+                    "mins": np.stack([wc.mins for wc in wcs]),
+                    "maxs": np.stack([wc.maxs for wc in wcs]),
+                }
+            )
+        return parts
+
+    def stage_a(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for parts in _walk_panes(batches, close):
+            yield _record_batch(parts, schema)
 
     return stage_a
+
+
+def outlier_columns(
+    shard: int, window_id: int, outliers: List[core.Outlier], cfg: KelosConfig
+) -> dict:
+    """``OUTLIER_SCHEMA`` columns of one window's (non-empty) top-N
+    outliers as numpy arrays: window bounds in epoch microseconds,
+    features as an (n, d) matrix."""
+    n = len(outliers)
+    pane_us = cfg.pane_seconds * 1_000_000
+    start_us = (window_id + 1 - cfg.panes_per_window) * pane_us
+    return {
+        "shard": np.full(n, shard, dtype=np.int64),
+        "window_id": np.full(n, window_id, dtype=np.int64),
+        "window_start": np.full(n, start_us, dtype=np.int64),
+        "window_end": np.full(n, (window_id + 1) * pane_us, dtype=np.int64),
+        "rank": np.fromiter((o.rank for o in outliers), np.int32, n),
+        "point_id": np.fromiter((o.point_id for o in outliers), np.int64, n),
+        "klome": np.fromiter((o.klome for o in outliers), np.float64, n),
+        "density": np.fromiter((o.density for o in outliers), np.float64, n),
+        "features": np.stack([o.features for o in outliers]),
+    }
 
 
 def outliers_frame(
     shard: int, window_id: int, outliers: List[core.Outlier], cfg: KelosConfig
 ) -> pd.DataFrame:
-    """``OUTLIER_SCHEMA`` rows of one window's top-N outliers."""
-    pane_s = cfg.pane_seconds
-    start_s = (window_id + 1 - cfg.panes_per_window) * pane_s
-    return pd.DataFrame(
-        {
-            "shard": np.int64(shard),
-            "window_id": np.int64(window_id),
-            "window_start": pd.Timestamp(start_s, unit="s", tz="UTC"),
-            "window_end": pd.Timestamp((window_id + 1) * pane_s, unit="s", tz="UTC"),
-            "rank": np.array([o.rank for o in outliers], dtype=np.int32),
-            "point_id": np.array([o.point_id for o in outliers], dtype=np.int64),
-            "klome": [o.klome for o in outliers],
-            "density": [o.density for o in outliers],
-            "features": [list(o.features) for o in outliers],
-        }
-    )
+    """``OUTLIER_SCHEMA`` rows of one window's (non-empty) top-N outliers."""
+    cols = outlier_columns(shard, window_id, outliers, cfg)
+    for bound in ("window_start", "window_end"):
+        cols[bound] = pd.to_datetime(cols[bound], unit="us", utc=True)
+    cols["features"] = cols["features"].tolist()
+    return pd.DataFrame(cols)
 
 
 def _window_clusters(
@@ -320,8 +401,8 @@ def _sorted_by_shard(points: DataFrame) -> DataFrame:
 
 def run_stage_a(points: DataFrame, cfg: KelosConfig = DEFAULT_CONFIG) -> DataFrame:
     """Sequential-per-shard pane clustering + window synthesis; the
-    mapInPandas iterator holds only one pane in memory at a time."""
-    return _sorted_by_shard(points).mapInPandas(
+    mapInArrow iterator holds only one pane in memory at a time."""
+    return _sorted_by_shard(points).mapInArrow(
         _make_stage_a_fn(cfg), STAGE_A_SCHEMA
     )
 
@@ -333,18 +414,20 @@ def _make_streamwise_fn(cfg: KelosConfig):
     assignment explode, no cogroup — the right physical plan when
     #shards >= #cores."""
 
-    def close(state, ring, shard, pane, ids, X) -> List[pd.DataFrame]:
+    schema = to_arrow_schema(OUTLIER_SCHEMA)
+
+    def close(state, ring, shard, pane, ids, X) -> List[dict]:
         result, _ = core.close_pane(
             state, ring, pane, ids, X, cfg.distance_threshold, cfg.k,
             cfg.n, cfg.panes_per_window, cfg.kernel,
         )
         if not result.outliers:
             return []
-        return [outliers_frame(shard, pane, result.outliers, cfg)]
+        return [outlier_columns(shard, pane, result.outliers, cfg)]
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for frames in _walk_panes(batches, close):
-            yield pd.concat(frames, ignore_index=True)
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for parts in _walk_panes(batches, close):
+            yield _record_batch(parts, schema)
 
     return fn
 
@@ -361,7 +444,7 @@ def detect_outliers_streamwise(
     when #shards >= #cores — see detect_outliers for the window-parallel
     plan used when shards are few)."""
     points = prepare_points(df, cfg, id_col, ts_col, features_col, shard_col)
-    return _sorted_by_shard(points).mapInPandas(
+    return _sorted_by_shard(points).mapInArrow(
         _make_streamwise_fn(cfg), OUTLIER_SCHEMA
     )
 

@@ -185,3 +185,32 @@ def test_window_bounds_session_timezone_independent(spark):
     finally:
         spark.conf.set("spark.sql.session.timeZone", old)
     assert utc == shifted and len(utc) > 0
+
+
+@pytest.mark.parametrize("operator", ["detect_outliers", "detect_outliers_streamwise"])
+@pytest.mark.parametrize(
+    "features",
+    [
+        [[0.1, 0.2], None, [0.3, 0.4]],
+        # 6 values = 3 points x 2 dims: a reshape alone would pass
+        [[0.1, 0.2], [0.3], [0.4, 0.5, 0.6]],
+    ],
+    ids=["null", "ragged"],
+)
+def test_malformed_feature_lists_raise(spark, operator, features):
+    """The pane walker reads features from the Arrow list's flat values;
+    a null or ragged list must fail loudly, naming the column, instead of
+    pairing points with another point's features."""
+    import datetime
+
+    from kelos_on_kafka_spark.operators import kelos_batch
+
+    ts = datetime.datetime(2024, 1, 1, tzinfo=datetime.timezone.utc)
+    sdf = spark.createDataFrame(
+        [(i, ts, f) for i, f in enumerate(features, start=1)],
+        schema="id long, ts timestamp, features array<double>",
+    )
+    # a worker error reaches the driver as a PythonException, or inside a
+    # Py4JJavaError when it fails a persisted stage
+    with pytest.raises(Exception, match="ValueError: features column"):
+        getattr(kelos_batch, operator)(sdf, CFG).collect()
