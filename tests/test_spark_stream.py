@@ -19,6 +19,11 @@ from kelos_on_kafka_spark.streaming.engine import kelos_stream
 from kelos_on_kafka_spark.streaming.sink import write_outlier_stream
 
 CFG = KelosConfig(n=15)
+CHECKPOINT_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
+FILE_CONTEXT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileContextBasedCheckpointFileManager"
+)
 
 
 def _write_point_files(
@@ -113,19 +118,29 @@ def test_stream_resume_from_checkpoint_exactly_once(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     os.makedirs(src, exist_ok=True)
 
-    # phase 1: only the first half of the files exists
+    # phase 1: only the first half of the files exists, and the
+    # checkpoint is written by Spark's default FileContext-based manager
+    # (the one the session replaced): its checkpoints must resume
     half = len(full) // 2
     _write_point_files(spark, full.iloc[:half], src, n_files=2)
-    out = kelos_stream(_read_stream(spark, src), CFG)
-    q = write_outlier_stream(out, sink, ckpt, trigger={"availableNow": True})
-    q.awaitTermination(300)
+    session_manager = spark.conf.get(CHECKPOINT_MANAGER)
+    spark.conf.set(CHECKPOINT_MANAGER, FILE_CONTEXT_MANAGER)
+    try:
+        out = kelos_stream(_read_stream(spark, src), CFG)
+        q = write_outlier_stream(
+            out, sink, ckpt, trigger={"availableNow": True}
+        )
+        q.awaitTermination(300)
+    finally:
+        spark.conf.set(CHECKPOINT_MANAGER, session_manager)
     n_phase1 = (
         spark.read.parquet(sink).count()
         if os.path.exists(os.path.join(sink, "_SUCCESS")) or os.listdir(sink)
         else 0
     )
 
-    # phase 2: the rest arrives; restart from the same checkpoint
+    # phase 2: the rest arrives; restart from the same checkpoint under
+    # the session's FileSystem-based manager
     rest = full.iloc[half:].reset_index(drop=True)
     os.rename(
         os.path.join(src, "part-000.parquet"),
