@@ -20,7 +20,7 @@ produce d=4; the reference's datasets are d=2 and d=3).
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Dict, Iterable, List, Optional, Tuple
+from typing import Any, Callable, Dict, Iterable, List, Optional, Tuple
 
 import numpy as np
 
@@ -960,6 +960,59 @@ def close_pane(
         candidate_ids=cand_ids,
     )
     return result, len(w_ids)
+
+
+class PaneSequence:
+    """One shard's panes in stream-time order: the cross-pane state, the
+    ring ``close_pane`` keeps, and the points of panes not closed yet.
+
+    Panes close in order from the shard's first buffered pane, empty gap
+    panes too (the reference's catch-up punctuation, SURVEY.md §3.1),
+    except a stretch of empty panes while the sequence is ``quiet``:
+    with no carry there are no pane states either, so closing an empty
+    pane then only adds an empty ring entry, which no later window sees.
+    The streaming engine keeps one pickled sequence per shard as its
+    state; the batch walkers keep one per shard of their sorted input."""
+
+    __slots__ = ("algo", "ring", "pending", "last_closed")
+
+    def __init__(self) -> None:
+        self.algo = ShardState()
+        self.ring: List[Tuple[np.ndarray, np.ndarray, np.ndarray]] = []
+        self.pending: Dict[int, Tuple[List[np.ndarray], List[np.ndarray]]] = {}
+        self.last_closed: Optional[int] = None
+
+    def add(self, pane: int, ids: np.ndarray, X: np.ndarray) -> None:
+        """Buffer points of a pane that is not closed yet."""
+        ids_l, X_l = self.pending.setdefault(int(pane), ([], []))
+        ids_l.append(ids)
+        X_l.append(X)
+
+    def quiet(self) -> bool:
+        """True when closing an empty pane is a provable no-op: no live
+        clusters to carry or tombstone, no points left in the ring."""
+        return not self.algo.carry and not any(len(r[0]) for r in self.ring)
+
+    def close_before(self, bound: int, close: Callable[..., Any]) -> list:
+        """Close every pane below ``bound`` that is not closed yet, in
+        order, through ``close(algo, ring, pane, ids, X)``, which calls
+        ``close_pane`` or ``advance_pane``; returns its results."""
+        if self.last_closed is None:
+            self.last_closed = min(self.pending, default=bound) - 1
+        out = []
+        pane = self.last_closed + 1
+        while pane < bound:
+            nxt = min(self.pending, default=bound)
+            if pane < nxt and self.quiet():
+                pane = min(nxt, bound)
+                continue
+            ids_l, X_l = self.pending.pop(pane, ([], []))
+            ids = np.concatenate(ids_l) if ids_l else np.empty(0, dtype=np.int64)
+            X = np.concatenate(X_l) if X_l else np.empty((0, 0))
+            out.append(close(self.algo, self.ring, pane, ids, X))
+            pane += 1
+        self.last_closed = pane - 1
+        return out
 
 
 # ---------------------------------------------------------------------------

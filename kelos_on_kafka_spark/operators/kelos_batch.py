@@ -37,6 +37,7 @@ batch out.
 
 from __future__ import annotations
 
+import functools
 from typing import Iterator, List, Optional, Tuple
 
 import numpy as np
@@ -136,26 +137,20 @@ def _features(col: pa.ListArray) -> np.ndarray:
 def _walk_panes(
     batches: Iterator[pa.RecordBatch], close
 ) -> Iterator[list]:
-    """Walk Arrow batches sorted by ``(shard, pane_id, point_id)`` pane by
-    pane with bounded memory (one pane buffered at a time).  Each shard
-    starts from fresh state and closes every pane from its first to its
-    last in order — empty gap panes too (catch-up punctuation;
-    SURVEY.md §3.1).  ``close(state, ring, shard, pane, ids, X)`` returns
-    a list of outputs; they are yielded once per input batch that closed
-    a pane, and once more after the last batch."""
-    state: Optional[core.ShardState] = None
-    ring: List[Tuple[np.ndarray, np.ndarray, np.ndarray]] = []
-    cur: Optional[Tuple[int, int]] = None  # (shard, pane)
-    buf_ids: List[np.ndarray] = []
-    buf_X: List[np.ndarray] = []
+    """Walk Arrow batches sorted by ``(shard, pane_id, point_id)`` with
+    bounded memory: each shard gets a fresh ``core.PaneSequence``, which
+    holds one pane at a time and closes the shard's panes in order.
+    ``close(shard, state, ring, pane, ids, X)`` returns a list of
+    outputs; they are yielded once per input batch that closed a pane,
+    and once more after the last batch."""
+    # the last segment's shard, its pane sequence and its pane
+    shard: Optional[int] = None
+    seq, pane = core.PaneSequence(), 0
     out: list = []
 
-    def flush() -> None:
-        ids = np.concatenate(buf_ids) if buf_ids else np.empty(0, dtype=np.int64)
-        X = np.concatenate(buf_X) if buf_X else np.empty((0, 0))
-        buf_ids.clear()
-        buf_X.clear()
-        out.extend(close(state, ring, cur[0], cur[1], ids, X))
+    def close_before(bound: int) -> None:
+        for parts in seq.close_before(bound, functools.partial(close, shard)):
+            out.extend(parts)
 
     for batch in batches:
         if batch.num_rows == 0:
@@ -171,25 +166,16 @@ def _walk_panes(
         starts = np.concatenate([[0], change + 1])
         ends = np.concatenate([change + 1, [batch.num_rows]])
         for s, e in zip(starts, ends):
-            key = (int(shards[s]), int(panes[s]))
-            if cur is not None and key != cur:
-                flush()
-                if key[0] == cur[0]:
-                    for gap in range(cur[1] + 1, key[1]):
-                        cur = (key[0], gap)
-                        flush()
-                else:
-                    state = None
-            if state is None:
-                state, ring = core.ShardState(), []
-            cur = key
-            buf_ids.append(pids[s:e])
-            buf_X.append(feats[s:e])
+            if int(shards[s]) != shard:
+                close_before(pane + 1)
+                shard, seq = int(shards[s]), core.PaneSequence()
+            pane = int(panes[s])
+            close_before(pane)
+            seq.add(pane, pids[s:e], feats[s:e])
         if out:
             yield out
             out = []
-    if cur is not None:
-        flush()
+    close_before(pane + 1)
     if out:
         yield out
 
@@ -233,7 +219,7 @@ def _record_batch(parts: List[dict], schema: pa.Schema) -> pa.RecordBatch:
 def _make_stage_a_fn(cfg: KelosConfig):
     schema = to_arrow_schema(STAGE_A_SCHEMA)
 
-    def close(state, ring, shard, pane, ids, X) -> List[dict]:
+    def close(shard, state, ring, pane, ids, X) -> List[dict]:
         """Column parts of one closed pane: its point assignments, then
         its window's cluster aggregates."""
         ids, X, assignments, window_clusters = core.advance_pane(
@@ -362,6 +348,28 @@ def _make_window_fn(cfg: KelosConfig):
     return window_fn
 
 
+def point_columns(
+    cfg: KelosConfig,
+    id_col: str = "id",
+    ts_col: str = "ts",
+    features_col: str = "features",
+    shard_col: Optional[str] = None,
+) -> list:
+    """The engine's point model ``(shard, point_id, pane_id, features)``
+    as columns over an input DataFrame.  Pane assignment is
+    epoch-aligned: ``pane_id = floor(unix_micros(ts) / pane_micros)``."""
+    pane_us = cfg.pane_seconds * 1_000_000
+    shard = F.col(shard_col).cast("long") if shard_col else F.lit(0).cast("long")
+    return [
+        shard.alias("shard"),
+        F.col(id_col).cast("long").alias("point_id"),
+        F.floor(F.unix_micros(F.col(ts_col)) / F.lit(pane_us))
+        .cast("long")
+        .alias("pane_id"),
+        F.col(features_col).cast("array<double>").alias("features"),
+    ]
+
+
 def prepare_points(
     df: DataFrame,
     cfg: KelosConfig = DEFAULT_CONFIG,
@@ -371,18 +379,8 @@ def prepare_points(
     shard_col: Optional[str] = None,
 ) -> DataFrame:
     """Normalize an input DataFrame to the engine's point model
-    ``(shard, point_id, pane_id, features)``.  Pane assignment is
-    epoch-aligned: ``pane_id = floor(unix_micros(ts) / pane_micros)``."""
-    pane_us = cfg.pane_seconds * 1_000_000
-    shard = F.col(shard_col).cast("long") if shard_col else F.lit(0).cast("long")
-    return df.select(
-        shard.alias("shard"),
-        F.col(id_col).cast("long").alias("point_id"),
-        F.floor(F.unix_micros(F.col(ts_col)) / F.lit(pane_us))
-        .cast("long")
-        .alias("pane_id"),
-        F.col(features_col).cast("array<double>").alias("features"),
-    )
+    (``point_columns``)."""
+    return df.select(*point_columns(cfg, id_col, ts_col, features_col, shard_col))
 
 
 def _sorted_by_shard(points: DataFrame) -> DataFrame:
@@ -416,7 +414,7 @@ def _make_streamwise_fn(cfg: KelosConfig):
 
     schema = to_arrow_schema(OUTLIER_SCHEMA)
 
-    def close(state, ring, shard, pane, ids, X) -> List[dict]:
+    def close(shard, state, ring, pane, ids, X) -> List[dict]:
         result, _ = core.close_pane(
             state, ring, pane, ids, X, cfg.distance_threshold, cfg.k,
             cfg.n, cfg.panes_per_window, cfg.kernel,

@@ -31,19 +31,8 @@ from pyspark.sql.types import (
     DoubleType,
     IntegerType,
     LongType,
-    StringType,
     StructField,
     StructType,
-)
-
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("asset_id", LongType()),
-        StructField("media_type", StringType()),  # image | audio | video
-        StructField("payload", BinaryType()),
-        StructField("n_bytes", LongType()),
-        StructField("checksum", StringType()),
-    ]
 )
 
 IMAGE_FEATURES_SCHEMA = StructType(

@@ -2,10 +2,12 @@
 
 Event-time semantics replace the reference's stream-time punctuation
 tokens (SURVEY.md §2.2 P10): a pane closes when the watermark passes its
-end, window results are emitted exactly once in append mode, and state
-(carry-over clusters, pane ring, buffered open panes) lives in Spark's
-checkpointed state store keyed by shard — so the query is
-kill-and-resume safe.  Late rows beyond the watermark are dropped by
+end, window results are emitted exactly once in append mode, and each
+shard's ``core.PaneSequence`` (carry-over clusters, pane ring, buffered
+open panes), pickled, lives in Spark's checkpointed state store keyed by
+shard — so the query is kill-and-resume safe.  The sequence closes the
+panes below the watermark's pane, as the batch walkers' sequences close
+a shard's panes.  Late rows beyond the watermark are dropped by
 Spark; the output-parity contract is defined for a fixed input stream +
 watermark (north_rule).
 
@@ -16,10 +18,11 @@ n_candidates) ride along with every outlier row.
 from __future__ import annotations
 
 import pickle
-from typing import Any, Iterator, List, Optional, Tuple
+from typing import Any, Iterator, Optional
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
@@ -35,7 +38,11 @@ from pyspark.sql.types import (
 
 from kelos_on_kafka_spark import core
 from kelos_on_kafka_spark.config import DEFAULT_CONFIG, KelosConfig
-from kelos_on_kafka_spark.operators.kelos_batch import outliers_frame
+from kelos_on_kafka_spark.operators.kelos_batch import (
+    _features,
+    outliers_frame,
+    point_columns,
+)
 
 STREAM_OUTLIER_SCHEMA = StructType(
     [
@@ -57,47 +64,10 @@ STREAM_OUTLIER_SCHEMA = StructType(
 STATE_SCHEMA = StructType([StructField("blob", BinaryType())])
 
 
-class _StreamShard:
-    """Per-shard streaming state: the cross-pane algorithm state plus the
-    buffer of not-yet-closed panes."""
-
-    __slots__ = ("algo", "ring", "pending", "last_closed")
-
-    def __init__(self) -> None:
-        self.algo = core.ShardState()
-        self.ring: List[Tuple[np.ndarray, np.ndarray, np.ndarray]] = []
-        self.pending: dict = {}  # pane_id -> (list[ids], list[X])
-        self.last_closed: Optional[int] = None
-
-    def algo_quiet(self) -> bool:
-        """True when closing an empty pane is a provable no-op: no live
-        clusters to carry/tombstone, no points left in the window ring."""
-        return not self.algo.carry and not any(
-            len(r[0]) for r in self.ring
-        )
-
-    def is_trivial(self) -> bool:
-        return not self.pending and self.algo_quiet()
-
-
-def _close_pane(
-    shard: int, pane: int, st: _StreamShard, cfg: KelosConfig
-) -> Optional[pd.DataFrame]:
-    ids_l, X_l = st.pending.pop(pane, ([], []))
-    ids = np.concatenate(ids_l) if ids_l else np.empty(0, dtype=np.int64)
-    X = np.concatenate(X_l) if X_l else np.empty((0, 0))
-    result, n_window_points = core.close_pane(
-        st.algo, st.ring, pane, ids, X, cfg.distance_threshold, cfg.k,
-        cfg.n, cfg.panes_per_window, cfg.kernel,
-    )
-    st.last_closed = pane
-    if not result.outliers:
-        return None
-    frame = outliers_frame(shard, pane, result.outliers, cfg)
-    frame["n_window_points"] = np.int64(n_window_points)
-    frame["n_clusters"] = np.int64(len(result.window_clusters))
-    frame["n_candidates"] = np.int64(len(result.candidate_ids))
-    return frame
+# Checkpoints written before the pane sequence moved to ``core`` pickle
+# their state as this module's ``_StreamShard``, with the same four slots:
+# the name stays so that they resume.
+_StreamShard = core.PaneSequence
 
 
 def _make_stateful_fn(cfg: KelosConfig):
@@ -107,11 +77,7 @@ def _make_stateful_fn(cfg: KelosConfig):
         key: tuple, batches: Iterator[pd.DataFrame], state: Any
     ) -> Iterator[pd.DataFrame]:
         shard = int(key[0])
-        st: _StreamShard
-        if state.exists:
-            st = pickle.loads(state.get[0])
-        else:
-            st = _StreamShard()
+        seq = pickle.loads(state.get[0]) if state.exists else core.PaneSequence()
 
         if not state.hasTimedOut:
             for pdf in batches:
@@ -119,63 +85,43 @@ def _make_stateful_fn(cfg: KelosConfig):
                     continue
                 panes = pdf["pane_id"].to_numpy()
                 pids = pdf["point_id"].to_numpy(dtype=np.int64)
-                feats = np.stack(
-                    [np.asarray(f, dtype=np.float64) for f in pdf["features"]]
-                )
+                feats = _features(pa.array(pdf["features"], pa.list_(pa.float64())))
                 for pane in np.unique(panes):
                     sel = panes == pane
-                    ids_l, X_l = st.pending.setdefault(int(pane), ([], []))
-                    ids_l.append(pids[sel])
-                    X_l.append(feats[sel])
+                    seq.add(pane, pids[sel], feats[sel])
+
+        def close(algo, ring, pane, ids, X) -> Optional[pd.DataFrame]:
+            result, n_window_points = core.close_pane(
+                algo, ring, pane, ids, X, cfg.distance_threshold, cfg.k,
+                cfg.n, cfg.panes_per_window, cfg.kernel,
+            )
+            if not result.outliers:
+                return None
+            frame = outliers_frame(shard, pane, result.outliers, cfg)
+            frame["n_window_points"] = np.int64(n_window_points)
+            frame["n_clusters"] = np.int64(len(result.window_clusters))
+            frame["n_candidates"] = np.int64(len(result.candidate_ids))
+            return frame
 
         # Close every pane whose end <= watermark (event-time pane
-        # punctuation; empty gap panes close too, like the reference's
-        # catch-up punctuation).  When the algorithm state is already
-        # empty, fast-forward over the gap instead of iterating it.
+        # punctuation): the panes below the watermark's pane.
         wm = state.getCurrentWatermarkMs()
-        out_frames: List[pd.DataFrame] = []
-        if wm > 0:
-            wm_pane = int(wm // pane_ms)  # panes < wm_pane have end <= wm
-            if st.last_closed is None:
-                st.last_closed = (
-                    min(st.pending) - 1 if st.pending else wm_pane
-                )
-            pane = st.last_closed + 1
-            while pane < wm_pane:
-                if st.algo_quiet() and (
-                    not st.pending or pane < min(st.pending)
-                ):
-                    # fast-forward over an empty stretch
-                    nxt = min(st.pending) if st.pending else wm_pane
-                    pane = min(int(nxt), wm_pane)
-                    st.last_closed = pane - 1
-                    if pane >= wm_pane:
-                        break
-                frame = _close_pane(shard, int(pane), st, cfg)
-                if frame is not None:
-                    out_frames.append(frame)
-                pane += 1
+        frames = seq.close_before(int(wm // pane_ms), close) if wm > 0 else []
 
-        if st.is_trivial():
+        quiet = seq.quiet()
+        if quiet and not seq.pending:
             # no buffered points, no live clusters: drop the state
             if state.exists:
                 state.remove()
         else:
-            state.update((pickle.dumps(st),))
+            state.update((pickle.dumps(seq),))
             # wake when the watermark passes the next closeable pane end
-            if st.algo_quiet() and st.pending:
-                wake = (int(min(st.pending)) + 1) * pane_ms
-            elif st.last_closed is not None:
-                wake = (st.last_closed + 2) * pane_ms
-            elif st.pending:
-                wake = (int(min(st.pending)) + 1) * pane_ms
-            else:
-                wake = None
-            if wake is not None:
-                state.setTimeoutTimestamp(max(wake, wm + 1))
+            nxt = min(seq.pending) if quiet else seq.last_closed + 1
+            state.setTimeoutTimestamp(max((nxt + 1) * pane_ms, wm + 1))
 
-        if out_frames:
-            yield pd.concat(out_frames, ignore_index=True)
+        frames = [f for f in frames if f is not None]
+        if frames:
+            yield pd.concat(frames, ignore_index=True)
 
     return fn
 
@@ -197,23 +143,11 @@ def kelos_stream(
     everything upstream (source scan, feature extraction) is stateless
     and fully parallel.
     """
-    pane_us = cfg.pane_seconds * 1_000_000
-    shard = (
-        F.col(shard_col).cast("long") if shard_col else F.lit(0).cast("long")
-    )
-    prepared = (
-        points.withWatermark(ts_col, watermark_delay)
-        .select(
-            shard.alias("shard"),
-            F.col(id_col).cast("long").alias("point_id"),
-            F.floor(F.unix_micros(F.col(ts_col)) / F.lit(pane_us))
-            .cast("long")
-            .alias("pane_id"),
-            F.col(features_col).cast("array<double>").alias("features"),
-            # the watermarked event-time column must stay in the plan for
-            # EventTimeTimeout; the stateful fn ignores it
-            F.col(ts_col).alias("_event_ts"),
-        )
+    prepared = points.withWatermark(ts_col, watermark_delay).select(
+        *point_columns(cfg, id_col, ts_col, features_col, shard_col),
+        # the watermarked event-time column must stay in the plan for
+        # EventTimeTimeout; the stateful fn ignores it
+        F.col(ts_col).alias("_event_ts"),
     )
     return prepared.groupBy("shard").applyInPandasWithState(
         _make_stateful_fn(cfg),

@@ -8,7 +8,10 @@ import pytest
 
 from kelos_on_kafka_spark import core
 from kelos_on_kafka_spark.config import KelosConfig
-from kelos_on_kafka_spark.operators.kelos_batch import detect_outliers
+from kelos_on_kafka_spark.operators.kelos_batch import (
+    detect_outliers,
+    detect_outliers_streamwise,
+)
 from kelos_on_kafka_spark.sources.points import gmm_points, to_spark_points
 
 CFG = KelosConfig(
@@ -34,8 +37,18 @@ def oracle_outliers(pdf, cfg):
     }
 
 
-@pytest.mark.parametrize("n_points,epw", [(600, 600), (1500, 600)])
-def test_batch_engine_matches_oracle(spark, n_points, epw):
+@pytest.mark.parametrize(
+    "n_points,epw,gap_panes",
+    [
+        pytest.param(600, 600, 0, id="600-600"),
+        pytest.param(1500, 600, 0, id="1500-600"),
+        # the second half of the points 20 panes later: the shard goes
+        # quiet in between, a stretch the walkers skip and the oracle
+        # closes pane by pane
+        pytest.param(1200, 600, 20, id="gap"),
+    ],
+)
+def test_batch_engine_matches_oracle(spark, n_points, epw, gap_panes):
     pdf = gmm_points(
         n=n_points,
         seed=42,
@@ -43,24 +56,22 @@ def test_batch_engine_matches_oracle(spark, n_points, epw):
         panes_per_window=CFG.panes_per_window,
         pane_seconds=CFG.pane_seconds,
     )
+    pdf.loc[n_points // 2:, "ts"] += gap_panes * CFG.pane_seconds
     expected = oracle_outliers(pdf, CFG)
+    expected_nonempty = {w: v for w, v in expected.items() if v}
 
     sdf = to_spark_points(spark, pdf)
-    got_rows = (
-        detect_outliers(sdf, CFG)
-        .orderBy("window_id", "rank")
-        .collect()
-    )
-    got = {}
-    for row in got_rows:
-        got.setdefault(row.window_id, []).append(
-            (row["rank"], row.point_id, row.klome, row.density)
-        )
+    for operator in (detect_outliers, detect_outliers_streamwise):
+        got_rows = operator(sdf, CFG).orderBy("window_id", "rank").collect()
+        got = {}
+        for row in got_rows:
+            got.setdefault(row.window_id, []).append(
+                (row["rank"], row.point_id, row.klome, row.density)
+            )
 
-    expected_nonempty = {w: v for w, v in expected.items() if v}
-    assert set(got) == set(expected_nonempty)
-    for w in expected_nonempty:
-        assert got[w] == expected_nonempty[w], f"window {w} mismatch"
+        assert set(got) == set(expected_nonempty), operator.__name__
+        for w in expected_nonempty:
+            assert got[w] == expected_nonempty[w], (operator.__name__, w)
 
 
 def test_streamwise_plan_matches_window_parallel_plan(spark):

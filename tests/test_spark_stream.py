@@ -174,6 +174,25 @@ def test_stream_resume_from_checkpoint_exactly_once(spark, tmp_path):
     assert got == expected
 
 
+def test_null_feature_list_fails_the_query(spark, tmp_path):
+    """The engine reads features like the batch walkers: a file with a
+    null feature list fails the query, naming the column, instead of
+    pairing points with another point's features."""
+    full, _ = _fixture(n=300)
+    full.at[150, "features"] = None
+    src = str(tmp_path / "src")
+    _write_point_files(spark, full, src, n_files=2)
+
+    q = write_outlier_stream(
+        kelos_stream(_read_stream(spark, src), CFG),
+        str(tmp_path / "sink"),
+        str(tmp_path / "ckpt"),
+        trigger={"availableNow": True},
+    )
+    with pytest.raises(Exception, match="ValueError: features column"):
+        q.awaitTermination(300)
+
+
 def test_sink_runs_each_micro_batch_once(spark, tmp_path):
     """The sink executes each micro-batch's plan once: a row count
     observed on the outlier stream equals the rows that batch wrote (an
