@@ -77,8 +77,8 @@ def run_once(
 
     timings = []
     for _ in range(repeats):
-        # clearCache defeats logical-plan cache reuse of the persisted
-        # stage-A across runs — every timed run is a full e2e execution.
+        # Neither plan caches a stage, so every timed run is a full e2e
+        # execution; clearCache drops anything a caller left cached.
         t0 = time.perf_counter()
         rows = pipeline().count()
         timings.append(time.perf_counter() - t0)

@@ -18,21 +18,23 @@ Physical plan, designed for the 100 TB target:
    single-partition for the same reason (InputProducer.java:67).
 
 2. **Stage B — per-window detection** (everything from
-   KNearestClusterProcessor to PointPruningProcessor).  Cluster aggregates
-   and (window-exploded) assignments are cogrouped by ``(shard,
-   window_id)`` and each window runs the vectorized KNN→KDE→KLOME→top-N
-   pipeline independently — **embarrassingly parallel across windows**,
-   which is where the compute lives (O(C²) KNN + KDE).  The ×panes
-   assignment duplication is the same cost Spark's own sliding
-   ``window()`` pays.
+   KNearestClusterProcessor to PointPruningProcessor).  Stage A's rows
+   are grouped by ``(shard, window_id)`` — a window cluster on the
+   window its pane closes, an assignment on each window that holds its
+   pane — and an ``applyInArrow`` function runs the vectorized
+   KNN→KDE→KLOME→top-N pipeline on each window independently —
+   **embarrassingly parallel across windows**, which is where the
+   compute lives (O(C²) KNN + KDE).  The ×panes assignment duplication
+   is the same cost Spark's own sliding ``window()`` pays.
 
 The shuffle between A and B is the deliberate repartition to window
 groups; everything upstream (feature extraction) is embarrassingly
 parallel and everything inside stages is Arrow-vectorized NumPy.
 
 ``detect_outliers_streamwise`` runs the whole dataflow in stage A's
-walker instead (one shuffle, no cogroup), also Arrow batch in, Arrow
-batch out.
+walker instead (one shuffle, no window groups), also Arrow batch in,
+Arrow batch out.  Which plan is faster depends on the points per window
+(ROADMAP direction G).
 """
 
 from __future__ import annotations
@@ -41,8 +43,8 @@ import functools
 from typing import Iterator, List, Optional, Tuple
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -61,31 +63,6 @@ from pyspark.storagelevel import StorageLevel
 
 from kelos_on_kafka_spark import core
 from kelos_on_kafka_spark.config import DEFAULT_CONFIG, KelosConfig
-
-# Stage-A caches created by detect_outliers / kelos_debug_tables.  The
-# returned DataFrames are lazy, so the operators cannot unpersist before
-# the caller's action runs — callers own the lifecycle: call
-# release_persisted() (or spark.catalog.clearCache()) once results are
-# materialized, or repeated invocations in a long-lived session
-# accumulate cached partitions until storage eviction kicks in.
-_PERSISTED: list = []
-
-
-def _persist_stage(df: DataFrame) -> DataFrame:
-    out = df.persist(StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED.append(out)
-    return out
-
-
-def release_persisted() -> int:
-    """Unpersist every stage cache this module created; returns how many
-    were released."""
-    n = len(_PERSISTED)
-    for df in _PERSISTED:
-        df.unpersist(False)
-    _PERSISTED.clear()
-    return n
-
 
 STAGE_A_SCHEMA = StructType(
     [
@@ -122,6 +99,8 @@ def _features(col: pa.ListArray) -> np.ndarray:
     the list's flat values and offsets.  A null or ragged list would
     shift every later point onto another point's features, so either
     one raises."""
+    if not len(col):
+        return np.empty((0, 0))
     offsets = col.offsets.to_numpy()
     lengths = np.diff(offsets)
     if col.null_count or (lengths != lengths[0]).any():
@@ -233,12 +212,20 @@ def _make_stage_a_fn(cfg: KelosConfig):
                 "pane_id": np.full(n, pane, dtype=np.int64),
             }
 
+        # Assignments carry empty, not null, aggregate lists: Arrow Java's
+        # ListVector refills a run of null lists on every size check, and
+        # the window stage's input writer checks its batch size per row,
+        # so null runs cost JVM time quadratic in a window's points.
+        no_list = np.empty((len(ids), 0))
         parts = [
             {
                 **keys("a", len(ids)),
                 "cluster_id": np.asarray(assignments, dtype=np.int64),
                 "point_id": ids,
                 "features": X,
+                "linear_sums": no_list,
+                "mins": no_list,
+                "maxs": no_list,
             }
         ]
         if window_clusters:
@@ -285,65 +272,52 @@ def outlier_columns(
     }
 
 
-def outliers_frame(
-    shard: int, window_id: int, outliers: List[core.Outlier], cfg: KelosConfig
-) -> pd.DataFrame:
-    """``OUTLIER_SCHEMA`` rows of one window's (non-empty) top-N outliers."""
-    cols = outlier_columns(shard, window_id, outliers, cfg)
-    for bound in ("window_start", "window_end"):
-        cols[bound] = pd.to_datetime(cols[bound], unit="us", utc=True)
-    cols["features"] = cols["features"].tolist()
-    return pd.DataFrame(cols)
+def _table(parts: List[dict], schema: pa.Schema) -> pa.Table:
+    """``_record_batch`` of the parts as a table; no parts, no rows."""
+    if not parts:
+        return schema.empty_table()
+    return pa.Table.from_batches([_record_batch(parts, schema)])
 
 
-def _window_clusters(
-    clusters_pdf: pd.DataFrame,
-) -> "core.OrderedMap[int, core.WindowCluster]":
-    """One window's stage-A cluster rows as ``WindowCluster``s in
-    ascending cluster-id order."""
-    wcs: "core.OrderedMap[int, core.WindowCluster]" = {}
-    for row in clusters_pdf.sort_values("cluster_id").itertuples(index=False):
-        cid = int(row.cluster_id)
-        wcs[cid] = core.WindowCluster(
-            cluster_id=cid,
-            size=int(row.size),
-            linear_sums=np.asarray(row.linear_sums, dtype=np.float64),
-            centroid=np.asarray(row.features, dtype=np.float64),
-            mins=np.asarray(row.mins, dtype=np.float64),
-            maxs=np.asarray(row.maxs, dtype=np.float64),
-        )
-    return wcs
-
-
-def _window_points(
-    assigns_pdf: pd.DataFrame,
-) -> Tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """One window's exploded assignment rows as (point ids, cluster ids,
+def _window_input(
+    table: pa.Table,
+) -> Tuple["core.OrderedMap[int, core.WindowCluster]", np.ndarray, np.ndarray, np.ndarray]:
+    """One window group's stage-A rows as its ``WindowCluster``s in
+    ascending cluster-id order, then its points' (ids, cluster ids,
     features)."""
-    if assigns_pdf.empty:
-        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64), np.empty((0, 0))
+    batch = table.combine_chunks().to_batches()[0]
+    is_w = pc.equal(batch.column("row_type"), "w")
+    clusters = batch.filter(is_w).sort_by("cluster_id")
+    points = batch.filter(pc.invert(is_w))
+    lin, cent, mins, maxs = (
+        _features(clusters.column(name))
+        for name in ("linear_sums", "features", "mins", "maxs")
+    )
+    sizes = clusters.column("size").to_pylist()
     return (
-        assigns_pdf["point_id"].to_numpy(dtype=np.int64),
-        assigns_pdf["p_cluster_id"].to_numpy(dtype=np.int64),
-        np.stack(
-            [np.asarray(f, dtype=np.float64) for f in assigns_pdf["p_features"]]
-        ),
+        {
+            cid: core.WindowCluster(cid, sizes[i], lin[i], cent[i], mins[i], maxs[i])
+            for i, cid in enumerate(clusters.column("cluster_id").to_pylist())
+        },
+        points.column("point_id").to_numpy(),
+        points.column("cluster_id").to_numpy(),
+        _features(points.column("features")),
     )
 
 
 def _make_window_fn(cfg: KelosConfig):
-    def window_fn(
-        key: tuple, clusters_pdf: pd.DataFrame, assigns_pdf: pd.DataFrame
-    ) -> pd.DataFrame:
-        if not clusters_pdf.empty:
-            outliers, _flags, _cands = core.window_pipeline(
-                _window_clusters(clusters_pdf),
-                *_window_points(assigns_pdf),
-                cfg.k, cfg.n, cfg.kernel,
-            )
-            if outliers:
-                return outliers_frame(int(key[0]), int(key[1]), outliers, cfg)
-        return pd.DataFrame(columns=OUTLIER_SCHEMA.fieldNames())
+    schema = to_arrow_schema(OUTLIER_SCHEMA)
+
+    def window_fn(key: tuple, table: pa.Table) -> pa.Table:
+        wcs, *points = _window_input(table)
+        if not wcs:
+            return schema.empty_table()
+        outliers, _flags, _cands = core.window_pipeline(
+            wcs, *points, cfg.k, cfg.n, cfg.kernel
+        )
+        shard, window_id = key[0].as_py(), key[1].as_py()
+        parts = [outlier_columns(shard, window_id, outliers, cfg)] if outliers else []
+        return _table(parts, schema)
 
     return window_fn
 
@@ -409,8 +383,7 @@ def _make_streamwise_fn(cfg: KelosConfig):
     """Whole KELOS dataflow per shard inside one sorted pass: pane close ->
     clustering -> window synthesis -> KNN/KDE/KLOME -> top-N, emitting
     outlier rows directly.  One shuffle total (the shard sort), no
-    assignment explode, no cogroup — the right physical plan when
-    #shards >= #cores."""
+    assignment explode, no window groups."""
 
     schema = to_arrow_schema(OUTLIER_SCHEMA)
 
@@ -438,9 +411,12 @@ def detect_outliers_streamwise(
     features_col: str = "features",
     shard_col: Optional[str] = None,
 ) -> DataFrame:
-    """Flagship query, shard-streamwise physical plan (one shuffle; use
-    when #shards >= #cores — see detect_outliers for the window-parallel
-    plan used when shards are few)."""
+    """Flagship query, shard-streamwise physical plan (one shuffle, one
+    task per shard).  Whether it beats the window-parallel
+    ``detect_outliers`` depends on the points per window, not on shards
+    against cores: on 4 cores it was slower at 3,000-point windows even
+    with 8 shards, and faster only at light windows on a small input
+    (ROADMAP direction G has the measurements)."""
     points = prepare_points(df, cfg, id_col, ts_col, features_col, shard_col)
     return _sorted_by_shard(points).mapInArrow(
         _make_streamwise_fn(cfg), OUTLIER_SCHEMA
@@ -485,66 +461,61 @@ def _make_debug_window_fn(cfg: KelosConfig):
     """Debug taps mirroring the reference's densities/candidates topics
     (ClusterConsumer.java reads `densities`; CandidatesConsumer filters
     flag=true — SURVEY.md §2.1 S4), both from one pass per window."""
+    schema = to_arrow_schema(DEBUG_SCHEMA)
 
-    def fn(key, clusters_pdf, assigns_pdf):
-        shard, window_id = int(key[0]), int(key[1])
-        if clusters_pdf.empty:
-            return pd.DataFrame(columns=DEBUG_SCHEMA.fieldNames())
-        survivors, flags = core.score_clusters(
-            _window_clusters(clusters_pdf), cfg.k, cfg.n, cfg.kernel
-        )
-        cand_pids, cand_X = core.flagged_candidates(
-            flags, *_window_points(assigns_pdf)
-        )
-        rows = [
-            ("c", shard, window_id, int(cid), int(wc.size),
-             [float(v) for v in wc.centroid], wc.density,
-             wc.min_density_bound, wc.max_density_bound, flags[cid],
-             None, None)
-            for cid, wc in survivors.items()
-        ]
-        rows.extend(
-            ("p", shard, window_id, None, None, None, None, None, None, None,
-             int(pid), [float(v) for v in x])
-            for pid, x in zip(cand_pids, cand_X)
-        )
-        return pd.DataFrame(rows, columns=DEBUG_SCHEMA.fieldNames())
+    def fn(key: tuple, table: pa.Table) -> pa.Table:
+        wcs, *points = _window_input(table)
+        if not wcs:
+            return schema.empty_table()
+        survivors, flags = core.score_clusters(wcs, cfg.k, cfg.n, cfg.kernel)
+        cand_pids, cand_X = core.flagged_candidates(flags, *points)
+
+        def keys(row_type: str, n: int) -> dict:
+            return {
+                "row_type": np.full(n, row_type),
+                "shard": np.full(n, key[0].as_py(), dtype=np.int64),
+                "window_id": np.full(n, key[1].as_py(), dtype=np.int64),
+            }
+
+        parts = []
+        if survivors:
+            kept = list(survivors.values())
+            n = len(kept)
+            parts.append({
+                **keys("c", n),
+                "cluster_id": np.fromiter(survivors, np.int64, n),
+                "size": np.fromiter((wc.size for wc in kept), np.int64, n),
+                "centroid": np.stack([wc.centroid for wc in kept]),
+                **{
+                    name: np.fromiter((getattr(wc, name) for wc in kept), np.float64, n)
+                    for name in ("density", "min_density_bound", "max_density_bound")
+                },
+                "might_contain_outliers": np.fromiter(
+                    (flags[cid] for cid in survivors), bool, n
+                ),
+            })
+        if len(cand_pids):
+            parts.append({
+                **keys("p", len(cand_pids)), "point_id": cand_pids, "features": cand_X,
+            })
+        return _table(parts, schema)
 
     return fn
 
 
 def _window_groups(stage_a: DataFrame, cfg: KelosConfig):
-    """Stage A's window clusters cogrouped with its assignments exploded
-    to every window their pane belongs to, keyed by (shard, window_id)."""
-    wdf = stage_a.filter(F.col("row_type") == "w").select(
-        "shard",
-        F.col("pane_id").alias("window_id"),
-        "cluster_id",
-        "features",
-        "size",
-        "linear_sums",
-        "mins",
-        "maxs",
-    )
-    offsets = F.array(*[F.lit(i) for i in range(cfg.panes_per_window)])
-    # Fresh aliases on the assignment side: both cogroup branches derive
-    # from the same stage-A plan, so same-named attributes share exprIds
-    # and Spark's cogroup dedup can prune them from one side under AQE.
-    adf = (
-        stage_a.filter(F.col("row_type") == "a")
-        .withColumn("off", F.explode(offsets))
-        .withColumn("window_id", F.col("pane_id") + F.col("off"))
-        .select(
-            "shard",
-            "window_id",
-            F.col("cluster_id").alias("p_cluster_id"),
-            "point_id",
-            F.col("features").alias("p_features"),
-        )
-    )
-    return wdf.groupBy("shard", "window_id").cogroup(
-        adf.groupBy("shard", "window_id")
-    )
+    """Stage A's rows grouped by (shard, window_id): a window cluster on
+    the window its pane closes, an assignment on each of the
+    ``panes_per_window`` windows that hold its pane."""
+    pane = F.col("pane_id")
+    window_ids = F.when(
+        F.col("row_type") == "a",
+        F.sequence(pane, pane + F.lit(cfg.panes_per_window - 1)),
+    ).otherwise(F.array(pane))
+    return stage_a.select(
+        *(c for c in STAGE_A_SCHEMA.fieldNames() if c != "pane_id"),
+        F.explode(window_ids).alias("window_id"),
+    ).groupBy("shard", "window_id")
 
 
 def kelos_debug_tables(
@@ -557,16 +528,19 @@ def kelos_debug_tables(
 ) -> dict:
     """The reference's debug topic surfaces as DataFrames
     (cluster-assignments / densities / candidates; SURVEY.md §2.1 S3-S4):
-    returns {'assignments': ..., 'clusters': ..., 'candidates': ...}."""
+    returns {'assignments': ..., 'clusters': ..., 'candidates': ...}.
+    Stage A and the window stage are cached so that reading all three
+    tables runs each once; the caller may ``unpersist`` them, or
+    ``spark.catalog.clearCache()``, when done."""
     points = prepare_points(df, cfg, id_col, ts_col, features_col, shard_col)
-    stage_a = _persist_stage(run_stage_a(points, cfg))
+    stage_a = run_stage_a(points, cfg).persist(StorageLevel.MEMORY_AND_DISK)
     assignments = stage_a.filter(F.col("row_type") == "a").select(
         "shard", "pane_id", "point_id", "cluster_id", "features"
     )
-    debug = _persist_stage(
-        _window_groups(stage_a, cfg).applyInPandas(
-            _make_debug_window_fn(cfg), DEBUG_SCHEMA
-        )
+    debug = (
+        _window_groups(stage_a, cfg)
+        .applyInArrow(_make_debug_window_fn(cfg), DEBUG_SCHEMA)
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     return {
         "assignments": assignments,
@@ -591,9 +565,9 @@ def detect_outliers(
 
     Returns a DataFrame with schema ``OUTLIER_SCHEMA`` ordered by
     (shard, window_id, rank) semantics (call ``orderBy`` for display).
+    Stage A feeds the window stage directly; nothing is cached.
     """
     points = prepare_points(df, cfg, id_col, ts_col, features_col, shard_col)
-    stage_a = _persist_stage(run_stage_a(points, cfg))
-    return _window_groups(stage_a, cfg).applyInPandas(
+    return _window_groups(run_stage_a(points, cfg), cfg).applyInArrow(
         _make_window_fn(cfg), OUTLIER_SCHEMA
     )

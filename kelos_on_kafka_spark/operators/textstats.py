@@ -561,17 +561,15 @@ def corpus_report(
     )
 
 
-def normalize_text(text_col: str = "text", strip_punct: bool = True) -> Column:
-    """Canonical text form for near-exact dedup: lower-case, optional
-    punctuation strip, whitespace collapsed to single spaces, trimmed.
+def normalize_text(text_col: str = "text") -> Column:
+    """Canonical text form for near-exact dedup: lower-case, punctuation
+    stripped, whitespace collapsed to single spaces, trimmed.
     Portable regex subset (identical semantics under Java regex and
     RE2/DuckDB), so the normalized form — and anything derived from it —
     is reproducible in an external SQL engine.  (Unicode NFC/NFKC
     folding needs ICU and is NOT applied; at deployment add it in front
     of this as a pre-pass if the corpus requires it.)"""
-    t = F.lower(F.col(text_col))
-    if strip_punct:
-        t = F.regexp_replace(t, r"[.,;:!?'\"()\[\]{}]", "")
+    t = F.regexp_replace(F.lower(F.col(text_col)), r"[.,;:!?'\"()\[\]{}]", "")
     return F.trim(F.regexp_replace(t, r"\s+", " "))
 
 
@@ -579,7 +577,6 @@ def normalized_dup_groups(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    strip_punct: bool = True,
 ) -> DataFrame:
     """Exact dedup MODULO normalization — catches the case/whitespace/
     punctuation variants byte-exact dedup misses, at exactly the same
@@ -590,7 +587,7 @@ def normalized_dup_groups(
 
     fp = df.select(
         F.col(id_col).alias("doc_id"),
-        F.md5(normalize_text(text_col, strip_punct)).alias("norm_fp"),
+        F.md5(normalize_text(text_col)).alias("norm_fp"),
     )
     w = Window.partitionBy("norm_fp")
     return fp.select(

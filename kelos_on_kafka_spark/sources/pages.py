@@ -85,13 +85,11 @@ def synth_pages(
     return pdf
 
 
-def to_spark_pages(spark, pdf: pd.DataFrame, with_kind: bool = False):
-    cols = "url string, warc_ts timestamp, html binary, text string, lang string"
-    take = ["url", "warc_ts", "html", "text", "lang"]
-    if with_kind:
-        cols += ", kind string"
-        take.append("kind")
-    return spark.createDataFrame(pdf[take], schema=cols)
+def to_spark_pages(spark, pdf: pd.DataFrame):
+    return spark.createDataFrame(
+        pdf[["url", "warc_ts", "html", "text", "lang"]],
+        schema="url string, warc_ts timestamp, html binary, text string, lang string",
+    )
 
 
 def write_pages_parquet(spark, pdf: pd.DataFrame, path: str, partitions: int = 8):

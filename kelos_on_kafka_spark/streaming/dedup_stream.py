@@ -47,6 +47,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from kelos_on_kafka_spark.operators.dedup import _hash64
+
 PAIR_SCHEMA = StructType(
     [
         StructField("band", IntegerType()),
@@ -56,14 +58,6 @@ PAIR_SCHEMA = StructType(
 )
 
 _STATE_SCHEMA = StructType([StructField("blob", BinaryType())])
-
-
-def _hash64_expr(col, seed: int):
-    """Same engine-portable 60-bit md5 hash as dedup._hash64, usable
-    inside a lambda (no DataFrame context)."""
-    return F.conv(
-        F.substring(F.md5(F.concat(F.lit(f"{seed}:"), col)), 1, 15), 16, 10
-    ).cast("long")
 
 
 def minhash_expr(
@@ -87,7 +81,7 @@ def minhash_expr(
     return F.array(
         *[
             F.array_min(
-                F.transform(shingles, lambda s: _hash64_expr(s, seed))
+                F.transform(shingles, lambda s: _hash64(s, seed))
             )
             for seed in range(n_hashes)
         ]

@@ -18,7 +18,7 @@ n_candidates) ride along with every outlier row.
 from __future__ import annotations
 
 import pickle
-from typing import Any, Iterator, Optional
+from typing import Any, Iterator, List, Optional
 
 import numpy as np
 import pandas as pd
@@ -40,7 +40,7 @@ from kelos_on_kafka_spark import core
 from kelos_on_kafka_spark.config import DEFAULT_CONFIG, KelosConfig
 from kelos_on_kafka_spark.operators.kelos_batch import (
     _features,
-    outliers_frame,
+    outlier_columns,
     point_columns,
 )
 
@@ -62,6 +62,17 @@ STREAM_OUTLIER_SCHEMA = StructType(
 )
 
 STATE_SCHEMA = StructType([StructField("blob", BinaryType())])
+
+
+def outliers_frame(
+    shard: int, window_id: int, outliers: List[core.Outlier], cfg: KelosConfig
+) -> pd.DataFrame:
+    """``OUTLIER_SCHEMA`` rows of one window's (non-empty) top-N outliers."""
+    cols = outlier_columns(shard, window_id, outliers, cfg)
+    for bound in ("window_start", "window_end"):
+        cols[bound] = pd.to_datetime(cols[bound], unit="us", utc=True)
+    cols["features"] = cols["features"].tolist()
+    return pd.DataFrame(cols)
 
 
 # Checkpoints written before the pane sequence moved to ``core`` pickle

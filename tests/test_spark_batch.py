@@ -1,7 +1,8 @@
 """Spark batch engine vs the pure-NumPy oracle: the engine must reproduce
 the oracle's windows, outlier ids, ranks and KLOME scores exactly (both
 paths call the same kernel; the assertion checks the Spark plumbing —
-pane grouping, window explode, cogroup, Arrow round-trips)."""
+pane grouping, window explode, the grouped window stage, Arrow
+round-trips)."""
 
 import numpy as np
 import pytest
@@ -38,17 +39,20 @@ def oracle_outliers(pdf, cfg):
 
 
 @pytest.mark.parametrize(
-    "n_points,epw,gap_panes",
+    "n_points,epw,gap_panes,arrow_batch",
     [
-        pytest.param(600, 600, 0, id="600-600"),
-        pytest.param(1500, 600, 0, id="1500-600"),
+        pytest.param(600, 600, 0, None, id="600-600"),
+        pytest.param(1500, 600, 0, None, id="1500-600"),
         # the second half of the points 20 panes later: the shard goes
         # quiet in between, a stretch the walkers skip and the oracle
         # closes pane by pane
-        pytest.param(1200, 600, 20, id="gap"),
+        pytest.param(1200, 600, 20, None, id="gap"),
+        # 37-row Arrow batches: panes split across walker input batches,
+        # and each window group arrives in several Arrow chunks
+        pytest.param(1500, 600, 0, 37, id="small-arrow-batches"),
     ],
 )
-def test_batch_engine_matches_oracle(spark, n_points, epw, gap_panes):
+def test_batch_engine_matches_oracle(spark, n_points, epw, gap_panes, arrow_batch):
     pdf = gmm_points(
         n=n_points,
         seed=42,
@@ -61,17 +65,35 @@ def test_batch_engine_matches_oracle(spark, n_points, epw, gap_panes):
     expected_nonempty = {w: v for w, v in expected.items() if v}
 
     sdf = to_spark_points(spark, pdf)
-    for operator in (detect_outliers, detect_outliers_streamwise):
-        got_rows = operator(sdf, CFG).orderBy("window_id", "rank").collect()
-        got = {}
-        for row in got_rows:
-            got.setdefault(row.window_id, []).append(
-                (row["rank"], row.point_id, row.klome, row.density)
-            )
+    batch_conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old_batch = spark.conf.get(batch_conf)
+    try:
+        if arrow_batch is not None:
+            spark.conf.set(batch_conf, str(arrow_batch))
+        for operator in (detect_outliers, detect_outliers_streamwise):
+            got_rows = operator(sdf, CFG).orderBy("window_id", "rank").collect()
+            got = {}
+            for row in got_rows:
+                got.setdefault(row.window_id, []).append(
+                    (row["rank"], row.point_id, row.klome, row.density)
+                )
 
-        assert set(got) == set(expected_nonempty), operator.__name__
-        for w in expected_nonempty:
-            assert got[w] == expected_nonempty[w], (operator.__name__, w)
+            assert set(got) == set(expected_nonempty), operator.__name__
+            for w in expected_nonempty:
+                assert got[w] == expected_nonempty[w], (operator.__name__, w)
+    finally:
+        spark.conf.set(batch_conf, old_batch)
+
+
+def test_window_parallel_plan_has_no_cogroup_or_cache(spark):
+    """``detect_outliers`` reads stage A's rows in one grouped Arrow
+    window stage: no cogroup of two stage-A branches, and no cached
+    stage A for that cogroup to read twice."""
+    sdf = to_spark_points(spark, gmm_points(n=300, seed=3, elements_per_window=300))
+    plan = detect_outliers(sdf, CFG)._jdf.queryExecution().executedPlan().toString()
+    assert "FlatMapCoGroupsInPandas" not in plan, plan
+    assert "InMemoryRelation" not in plan and "InMemoryTableScan" not in plan, plan
+    assert plan.count("FlatMapGroupsInArrow") == 1, plan
 
 
 def test_streamwise_plan_matches_window_parallel_plan(spark):
@@ -221,7 +243,7 @@ def test_malformed_feature_lists_raise(spark, operator, features):
         [(i, ts, f) for i, f in enumerate(features, start=1)],
         schema="id long, ts timestamp, features array<double>",
     )
-    # a worker error reaches the driver as a PythonException, or inside a
-    # Py4JJavaError when it fails a persisted stage
+    # a worker error reaches the driver as a PythonException, possibly
+    # wrapped in a Py4JJavaError
     with pytest.raises(Exception, match="ValueError: features column"):
         getattr(kelos_batch, operator)(sdf, CFG).collect()
