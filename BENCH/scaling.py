@@ -5,10 +5,10 @@ extraction -> KELOS pane clustering -> per-window KDE/KLOME top-N — at
 local[N] and local[4N] on the same input, reporting throughput at both
 plus scaling efficiency = (tput_4N / tput_N) / 4.
 
-The stream is sharded (32 independent logical sub-streams, the unit of
-sequential consistency) so both cluster sizes have full parallelism in
-the order-dependent clustering stage; the window stage parallelizes
-across (shard, window) groups regardless.
+The stream is sharded (256 independent logical sub-streams by default,
+the unit of sequential consistency) and runs the streamwise plan
+(``detect_outliers_streamwise``, one task per shard group), so both
+cluster sizes have full parallelism in the order-dependent walker.
 
 Usage:  python BENCH/scaling.py [--cpus 8 32] [--pages 240000]
 Writes one JSON line per cluster size + a summary; results are recorded
@@ -32,16 +32,12 @@ def run_once(
     n_shards: int,
     path: str,
     repeats: int = 3,
-    mode: str = "auto",
 ) -> dict:
     from pyspark.sql import functions as F
 
     from kelos_on_kafka_spark.config import KelosConfig
     from kelos_on_kafka_spark.functions.features import featurize_pages
-    from kelos_on_kafka_spark.operators.kelos_batch import (
-        detect_outliers,
-        detect_outliers_streamwise,
-    )
+    from kelos_on_kafka_spark.operators.kelos_batch import detect_outliers_streamwise
     from kelos_on_kafka_spark.plans.session import get_spark
 
     spark = get_spark(
@@ -53,14 +49,6 @@ def run_once(
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    # streamwise (one shuffle, shard-parallel) when shards cover the
-    # cores; window-parallel two-stage otherwise
-    if mode == "auto":
-        mode = "streamwise" if n_shards >= 2 * cpus else "two-stage"
-    detect = (
-        detect_outliers_streamwise if mode == "streamwise" else detect_outliers
-    )
-
     def pipeline():
         pages = spark.read.parquet(path)
         pts = featurize_pages(pages).select(
@@ -69,7 +57,7 @@ def run_once(
             "features",
             (F.abs(F.xxhash64("url")) % n_shards).alias("shard"),
         )
-        return detect(pts, KelosConfig(n=100), shard_col="shard")
+        return detect_outliers_streamwise(pts, KelosConfig(n=100), shard_col="shard")
 
     # Warm-up run: JVM JIT, Python workers, OS page cache for the input.
     rows = pipeline().count()
@@ -88,7 +76,7 @@ def run_once(
     med = timings[len(timings) // 2]
     return {
         "cpus": cpus,
-        "mode": mode,
+        "mode": "streamwise",
         "pages": n_pages,
         "shards": n_shards,
         "seconds_runs": [round(t, 3) for t in timings],

@@ -1,10 +1,11 @@
 """SparkSession construction with scale-appropriate defaults.
 
 Single place where the engine's physical-execution knobs live: AQE with
-skew-join handling, Arrow for all pandas-UDF exchange, shuffle
-partitions sized to core count.  On a real cluster the same builder is
-fed through ``spark-submit --py-files``; in this sandbox it runs
-``local[$SPARK_GRAFT_CPUS]``.
+skew-join handling, Arrow for all pandas-UDF exchange, one shuffle
+partition per core (no floor: each partition costs fixed CPU in every
+shuffling stage and stateful micro-batch, holding data or not).  On a
+real cluster the same builder is fed through ``spark-submit
+--py-files``; locally it runs ``local[$SPARK_GRAFT_CPUS]``.
 
 Two structured-streaming defaults cut the fixed cost of every
 checkpointed query:
@@ -62,10 +63,7 @@ def get_spark(
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
-        .config(
-            "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or max(cpus, 8)),
-        )
+        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         # Let Catalyst re-plan at runtime: partition coalescing, skew-join
         # splitting — the explicit skew story for the 100 TB target.
         .config("spark.sql.adaptive.enabled", "true")

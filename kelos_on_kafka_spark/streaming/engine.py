@@ -152,7 +152,9 @@ def kelos_stream(
 
     The shuffle to shard groups is the engine's one stateful exchange;
     everything upstream (source scan, feature extraction) is stateless
-    and fully parallel.
+    and fully parallel.  Its state partitions are the session's
+    ``spark.sql.shuffle.partitions`` at the query's first start, kept by
+    the checkpoint; each costs fixed CPU per micro-batch, shard or not.
     """
     prepared = points.withWatermark(ts_col, watermark_delay).select(
         *point_columns(cfg, id_col, ts_col, features_col, shard_col),

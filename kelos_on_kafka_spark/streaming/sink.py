@@ -145,7 +145,7 @@ def write_outlier_stream(
 ):
     """Start the exactly-once sink; returns the StreamingQuery.  Each
     micro-batch's plan runs once, in the write; an empty batch writes
-    nothing."""
+    nothing.  State partitions: see ``kelos_stream``."""
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         (

@@ -5,9 +5,17 @@ Cluster deployment (north_rule):
 
     zip -r kelos_on_kafka_spark.zip kelos_on_kafka_spark
     spark-submit --py-files kelos_on_kafka_spark.zip \
+        --conf spark.sql.shuffle.partitions=<executor cores> \
         scripts/run_job.py --mode stream \
         --input s3://bucket/pages --output s3://bucket/outliers \
         --checkpoint s3://bucket/ckpt --shards 4096
+
+A stream's state-partition count is the session's
+``spark.sql.shuffle.partitions`` when the query first starts, and its
+checkpoint keeps it for every restart.  Each state partition costs
+fixed CPU in every micro-batch, one that holds no shard too.  A plain
+spark-submit session defaults to 200, so set about one per executor
+core, as above, before a ``--mode stream`` query's first start.
 
 Modes:
   batch        — bounded replay over a page table, streamwise physical plan

@@ -5,7 +5,9 @@ Without Hadoop's native library, Spark's default FileContext-based
 checkpoint manager starts a ``readlink`` process for each path it
 renames; the session's FileSystem-based manager starts none
 (``plans/session.py``).  The stream runs in a subprocess with the
-logging wrappers of ``scripts/shellouts.py`` first on its ``PATH``."""
+logging wrappers of ``scripts/shellouts.py`` first on its ``PATH``, on
+``get_spark``'s defaults at two cores, so it also pins the session's
+one shuffle partition per core as the stream's state-partition count."""
 
 import importlib.util
 import os
@@ -22,7 +24,8 @@ _spec = importlib.util.spec_from_file_location(
 shellouts = importlib.util.module_from_spec(_spec)
 _spec.loader.exec_module(shellouts)
 
-# three one-pane parquet files through kelos_stream and the parquet sink
+# one-pane parquet files through kelos_stream and the parquet sink: three,
+# then a restart from the checkpoint for a fourth
 DRIVER = """
 import os, sys
 import numpy as np
@@ -34,29 +37,49 @@ from kelos_on_kafka_spark.streaming.engine import kelos_stream
 from kelos_on_kafka_spark.streaming.sink import write_outlier_stream
 
 base = sys.argv[1]
-spark = get_spark(master="local[2]", shuffle_partitions=2)
-pdf = gmm_points(n=300, seed=7, elements_per_window=300)
+spark = get_spark()  # SPARK_GRAFT_CPUS=2: local[2], one shuffle partition per core
+assert spark.sparkContext.master == "local[2]"
+pdf = gmm_points(n=400, seed=7, elements_per_window=300)
 pdf["ts"] += 1_000_000.0
-for i, idx in enumerate(np.array_split(np.arange(len(pdf)), 3)):
+panes = np.array_split(np.arange(len(pdf)), 4)
+
+
+def write_pane(i):
     spark.createDataFrame(
-        pdf.iloc[idx], schema="id long, ts double, features array<double>"
+        pdf.iloc[panes[i]], schema="id long, ts double, features array<double>"
     ).select("id", F.timestamp_seconds("ts").alias("ts"), "features").coalesce(
         1
     ).write.parquet(os.path.join(base, "src", f"pane-{i}.parquet"))
-stream = (
-    spark.readStream.schema("id long, ts timestamp, features array<double>")
-    .option("maxFilesPerTrigger", 1)
-    .parquet(os.path.join(base, "src", "*.parquet"))
-)
-q = write_outlier_stream(
-    kelos_stream(stream, KelosConfig(n=5)),
-    os.path.join(base, "sink"),
-    os.path.join(base, "ckpt"),
-    trigger={"availableNow": True},
-)
-q.awaitTermination(300)
-assert q.exception() is None, q.exception()
+
+
+def run():
+    stream = (
+        spark.readStream.schema("id long, ts timestamp, features array<double>")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(os.path.join(base, "src", "*.parquet"))
+    )
+    q = write_outlier_stream(
+        kelos_stream(stream, KelosConfig(n=5)),
+        os.path.join(base, "sink"),
+        os.path.join(base, "ckpt"),
+        trigger={"availableNow": True},
+    )
+    q.awaitTermination(300)
+    assert q.exception() is None, q.exception()
+    return q
+
+
+for i in range(3):
+    write_pane(i)
+q = run()
 assert len(q.recentProgress) >= 3, q.recentProgress
+# the session default is the stream's state-partition count ...
+assert q.lastProgress["stateOperators"][0]["numShufflePartitions"] == 2, q.lastProgress
+# ... and its checkpoint keeps that count on a restart
+spark.conf.set("spark.sql.shuffle.partitions", "3")
+write_pane(3)
+q = run()
+assert q.lastProgress["stateOperators"][0]["numShufflePartitions"] == 2, q.lastProgress
 spark.stop()
 """
 
@@ -85,6 +108,7 @@ def test_shellouts_counts_calls_by_command_and_area(tmp_path):
 def test_checkpointed_stream_starts_no_readlink(tmp_path):
     log = str(tmp_path / "calls.log")
     env = shellouts.install_wrappers(str(tmp_path / "bin"), log)
+    env["SPARK_GRAFT_CPUS"] = "2"
     out = subprocess.run(
         [sys.executable, "-c", DRIVER, str(tmp_path)],
         cwd=ROOT, env=env, capture_output=True, text=True, timeout=600,
