@@ -983,7 +983,12 @@ class PaneSequence:
         self.last_closed: Optional[int] = None
 
     def add(self, pane: int, ids: np.ndarray, X: np.ndarray) -> None:
-        """Buffer points of a pane that is not closed yet."""
+        """Buffer points of a pane that is not closed yet; a pane at or
+        below ``last_closed`` raises, as its points would never close."""
+        if self.last_closed is not None and pane <= self.last_closed:
+            raise ValueError(
+                f"pane {pane} is already closed (last closed: {self.last_closed})"
+            )
         ids_l, X_l = self.pending.setdefault(int(pane), ([], []))
         ids_l.append(ids)
         X_l.append(X)

@@ -1,15 +1,15 @@
-"""Exactly-once idempotent sink for the streaming outlier table.
+"""Exactly-once idempotent sinks for streaming tables.
 
-``foreachBatch`` + dynamic partition overwrite: in append-mode stateful
-streaming each window's rows are emitted exactly once (when the
-watermark closes it), so a whole window always lands inside one
-micro-batch.  Overwriting exactly the ``window_id`` partitions present
-in the batch makes replays after a failure idempotent — re-running a
-batch rewrites the same partitions with the same deterministic rows.
-Swap the parquet write for an Iceberg ``overwritePartitions`` /
-``MERGE`` in a cataloged deployment (config change, same semantics);
-at 10^12-doc scale the partition key becomes (window_end hour, shard
-range) to bound partition counts.
+The outlier sink writes one parquet file per (window, micro-batch):
+``window_id=<w>/part-<batch_id:020d>.parquet``.  Two shards can close
+the same window in different micro-batches, so a window's rows may span
+batches; each batch writes only its own files, and a batch replayed
+after a failure rewrites exactly those files with the same
+deterministic rows.  Never overwrite output keyed on the window alone:
+a later batch would delete the rows another shard wrote earlier.
+Swap the parquet files for an Iceberg append keyed on the batch id in a
+cataloged deployment (same semantics); at 10^12-doc scale the partition
+key becomes (window_end hour, shard range) to bound partition counts.
 
 Each ``foreachBatch`` callback runs the micro-batch's plan once.  A
 batch DataFrame is not cached, so every action on it re-runs the whole
@@ -17,15 +17,27 @@ upstream plan (for ``write_outlier_stream`` that is the stateful
 ``applyInPandasWithState`` operator).  An ``isEmpty()`` probe before
 the write is such an action, and its ``limit 1`` also leaves Python
 output unread, so Spark kills those workers and the next batch forks
-new ones.  The outlier sink therefore writes without a probe (an empty
-dynamic-overwrite write adds no data files and replaces no
-partitions); the sinks that act on the batch more than once persist
-it first.
+new ones.  The outlier sink therefore collects the batch once, as
+Arrow, and writes its files from the driver: no Spark write job, and an
+empty batch writes nothing.  The sinks that act on the batch more than
+once persist it first.
 """
 
 from __future__ import annotations
 
+import os
+import re
+
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.fs as pafs
+import pyarrow.parquet as pq
+
 from pyspark.sql import DataFrame, functions as F
+
+# the outlier sink's file name; any other parquet file in a window
+# partition was written by the Spark dynamic-overwrite sink it replaced
+_PART = re.compile(r"part-\d{20}\.parquet")
 
 
 def write_upsert_stream(
@@ -137,6 +149,55 @@ def write_cdc_table_stream(
     return writer.start()
 
 
+def write_outlier_batch(table: pa.Table, path: str, batch_id: int) -> None:
+    """Write one micro-batch's outlier rows under ``path``: per window,
+    one parquet file ``window_id=<w>/part-<batch_id:020d>.parquet``
+    holding the window's rows and an int32 ``batch_id`` column, written
+    under a hidden name and renamed into place.  Rewriting a batch
+    replaces its files; other batches' files are not touched, except
+    that a file of the old Spark writer holding this batch's rows is
+    deleted, so a batch replayed across the upgrade is not duplicated."""
+    if table.num_rows == 0:
+        return
+    try:
+        fs, root = pafs.FileSystem.from_uri(path)
+    except ValueError:  # a relative local path
+        fs, root = pafs.LocalFileSystem(), os.path.abspath(path)
+    table = table.append_column(
+        "batch_id", pa.repeat(pa.scalar(batch_id, pa.int32()), table.num_rows)
+    )
+    name = f"part-{batch_id:020d}.parquet"
+    for window in pc.unique(table["window_id"]).to_pylist():
+        part = f"{root}/window_id={window}"
+        rows = table.filter(pc.equal(table["window_id"], window))
+        fs.create_dir(part)
+        tmp = f"{part}/.{name}.tmp"
+        pq.write_table(rows.drop_columns("window_id"), tmp, filesystem=fs)
+        fs.move(tmp, f"{part}/{name}")
+        _drop_old_writer_files(fs, part, batch_id)
+
+
+def _drop_old_writer_files(fs, part: str, batch_id: int) -> None:
+    """Delete the parquet files of the Spark writer this sink replaced
+    (any name but ``part-<20 digits>.parquet``) whose rows carry
+    ``batch_id``, each with Hadoop's hidden checksum file."""
+    files = {
+        f.base_name: f.path for f in fs.get_file_info(pafs.FileSelector(part))
+    }
+    for name, file in files.items():
+        if (
+            not name.endswith(".parquet")
+            or name.startswith((".", "_"))
+            or _PART.fullmatch(name)
+        ):
+            continue
+        ids = pq.read_table(file, columns=["batch_id"], filesystem=fs)["batch_id"]
+        if pc.any(pc.equal(ids, batch_id)).as_py():
+            fs.delete_file(file)
+            if f".{name}.crc" in files:
+                fs.delete_file(files[f".{name}.crc"])
+
+
 def write_outlier_stream(
     outliers: DataFrame,
     path: str,
@@ -144,17 +205,12 @@ def write_outlier_stream(
     trigger: dict | None = None,
 ):
     """Start the exactly-once sink; returns the StreamingQuery.  Each
-    micro-batch's plan runs once, in the write; an empty batch writes
-    nothing.  State partitions: see ``kelos_stream``."""
+    micro-batch's plan runs once, as one Arrow collect, and its rows go
+    to ``write_outlier_batch``; an empty batch writes nothing.  State
+    partitions: see ``kelos_stream``."""
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("window_id")
-            .parquet(path)
-        )
+        write_outlier_batch(batch_df.toArrow(), path, batch_id)
 
     writer = (
         outliers.writeStream.foreachBatch(write_batch)

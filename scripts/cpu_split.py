@@ -15,7 +15,10 @@ prints the CPU seconds (user + system) of:
   ``readlink``/``chmod`` as processes when its native library is
   missing), with the number of distinct ones seen;
 - the Python worker processes below the JVMs (Spark's worker daemon and
-  the workers it forks).
+  the workers it forks);
+- the ``driver``: the command's own process, which for a PySpark
+  program is the Spark driver's Python.  Its CPU time is exact, read
+  once it has exited and before it is reaped.
 
 A thread or process is charged with its CPU time at the last sample it
 was seen in, so up to 0.2 s of a thread that exits is lost, and a child
@@ -73,6 +76,7 @@ class CpuSplit:
         self.last: dict = {}  # jvm -> (reaped counter, alive Python children)
         self.spawned: set = set()  # non-Python JVM children seen
         self.workers: dict = {}  # Python pid -> CPU s
+        self.driver = 0.0  # the command's own CPU s
 
     def sample(self) -> None:
         procs = {}
@@ -137,6 +141,9 @@ class CpuSplit:
             f"Python workers            {sum(self.workers.values()):10.2f} CPU-s"
             f"  ({len(self.workers)} processes)"
         )
+        lines.append(
+            f"driver                    {self.driver:10.2f} CPU-s  (the command)"
+        )
         return "\n".join(lines)
 
 
@@ -150,9 +157,12 @@ def main(argv=None) -> int:
     t0 = time.monotonic()
     proc = subprocess.Popen(command)
     split = CpuSplit(proc.pid)
-    while proc.poll() is None:
+    # wait without reaping: an exited, unreaped process keeps its CPU times
+    while not os.waitid(os.P_PID, proc.pid, os.WEXITED | os.WNOHANG | os.WNOWAIT):
         split.sample()
         time.sleep(INTERVAL_S)
+    split.driver = read_stat(f"/proc/{proc.pid}/stat")[2]
+    proc.wait()
     print(f"cpu_split: {time.monotonic() - t0:.1f} s wall, exit {proc.returncode}")
     print(split.report())
     return proc.returncode

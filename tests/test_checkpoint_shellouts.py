@@ -4,10 +4,12 @@ checkpoint file manager still refuses to overwrite a committed file.
 Without Hadoop's native library, Spark's default FileContext-based
 checkpoint manager starts a ``readlink`` process for each path it
 renames; the session's FileSystem-based manager starts none
-(``plans/session.py``).  The stream runs in a subprocess with the
-logging wrappers of ``scripts/shellouts.py`` first on its ``PATH``, on
-``get_spark``'s defaults at two cores, so it also pins the session's
-one shuffle partition per core as the stream's state-partition count."""
+(``plans/session.py``).  The outlier sink writes its files from the
+driver with pyarrow, so it starts no ``chmod`` either.  The stream runs
+in a subprocess with the logging wrappers of ``scripts/shellouts.py``
+first on its ``PATH``, on ``get_spark``'s defaults at two cores, so it
+also pins the session's one shuffle partition per core as the stream's
+state-partition count."""
 
 import importlib.util
 import os
@@ -115,19 +117,23 @@ def test_checkpointed_stream_starts_no_readlink(tmp_path):
     )
     assert out.returncode == 0, out.stderr[-4000:]
     ckpt = os.path.realpath(tmp_path / "ckpt")
+    sink = os.path.realpath(tmp_path / "sink")
 
-    def under_ckpt(args):  # Hadoop names a path as a file: URI or a plain path
+    def under(root, args):  # Hadoop names a path as a file: URI or a plain path
         return any(
-            os.path.realpath(a.removeprefix("file:")).startswith(ckpt + os.sep)
+            os.path.realpath(a.removeprefix("file:")).startswith(root + os.sep)
             for a in args
         )
 
     calls = shellouts.read_log(log)
     # the wrappers saw the JVM: every permissioned create under the
     # checkpoint still runs chmod
-    assert any(cmd == "chmod" and under_ckpt(args) for cmd, args in calls)
-    readlinks = [args for cmd, args in calls if cmd == "readlink" and under_ckpt(args)]
+    assert any(cmd == "chmod" and under(ckpt, args) for cmd, args in calls)
+    readlinks = [args for cmd, args in calls if cmd == "readlink" and under(ckpt, args)]
     assert readlinks == []
+    # the sink writes its files without a Hadoop write job: no chmod there
+    assert os.listdir(sink)
+    assert [args for cmd, args in calls if cmd == "chmod" and under(sink, args)] == []
 
 
 def test_checkpoint_manager_is_filesystem_based_and_refuses_overwrite(

@@ -4,7 +4,7 @@ outliers, streamed through three panes (SURVEY.md §5 'windowed top-N')."""
 import numpy as np
 import pytest
 
-from kelos_on_kafka_spark.core import run_stream
+from kelos_on_kafka_spark.core import PaneSequence, run_stream
 
 
 def micro_fixture():
@@ -95,3 +95,19 @@ def test_empty_panes_close_windows():
     assert 0 not in {
         cid for cid in results[4].window_clusters
     } and len(results[4].window_clusters) == 1
+
+
+def test_pane_sequence_refuses_a_closed_pane():
+    """Points added to a pane at or below ``last_closed`` would sit in
+    ``pending`` for ever: ``add`` raises instead, and buffers nothing."""
+    seq = PaneSequence()
+    X = np.array([[0.0, 0.0], [0.1, 0.0]])
+    seq.add(5, np.array([0, 1], dtype=np.int64), X)
+    closed = seq.close_before(7, lambda algo, ring, pane, ids, X: pane)
+    assert closed == [5] and seq.last_closed == 6  # empty pane 6 skipped: quiet
+    for pane in (6, 2):
+        with pytest.raises(ValueError, match=f"pane {pane} is already closed"):
+            seq.add(pane, np.array([2], dtype=np.int64), X[:1])
+    assert seq.pending == {}
+    seq.add(7, np.array([2], dtype=np.int64), X[:1])
+    assert list(seq.pending) == [7]

@@ -8,6 +8,8 @@ from collections import Counter
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
 from pyspark.sql import functions as F
@@ -16,7 +18,10 @@ from kelos_on_kafka_spark.config import KelosConfig
 from kelos_on_kafka_spark.operators.kelos_batch import detect_outliers
 from kelos_on_kafka_spark.sources.points import gmm_points
 from kelos_on_kafka_spark.streaming.engine import kelos_stream
-from kelos_on_kafka_spark.streaming.sink import write_outlier_stream
+from kelos_on_kafka_spark.streaming.sink import (
+    write_outlier_batch,
+    write_outlier_stream,
+)
 
 CFG = KelosConfig(n=15)
 CHECKPOINT_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
@@ -232,6 +237,128 @@ def test_sink_runs_each_micro_batch_once(spark, tmp_path):
     assert sum(written.values()) > 0
     batches = observed.keys() | written.keys()
     assert observed == {b: written[b] for b in batches}
+
+
+def test_sink_keeps_every_shards_rows_of_a_window(spark, tmp_path):
+    """Two shards close the same window in different micro-batches:
+    shard 1 has data only in the first two panes, so its windows close
+    by timeout a batch after shard 0's.  Every (shard, window) a batch
+    emitted is in the sink with the rows it emitted (a sink that
+    overwrites by window alone keeps only the later shard's rows)."""
+    pdf = gmm_points(n=600, seed=21, elements_per_window=300)
+    pdf["ts"] = pdf["ts"] + EPOCH
+    pane = (pdf["ts"] // CFG.pane_seconds).astype(np.int64)
+    first = int(pane.min())
+    keep = (pdf["id"] % 2 == 0) | (pane < first + 2)
+    pdf, pane = pdf[keep], pane[keep]
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    for p in sorted(pane.unique()):  # one file per pane
+        spark.createDataFrame(
+            pdf[pane == p],
+            schema="id long, ts double, features array<double>",
+        ).select(
+            "id", F.timestamp_seconds("ts").alias("ts"), "features"
+        ).coalesce(1).write.parquet(os.path.join(src, f"part-{p}.parquet"))
+
+    stream = _read_stream(spark, src)
+    out = kelos_stream(
+        stream.withColumn("shard", stream["id"] % 2), CFG, shard_col="shard"
+    ).observe(
+        "emitted",
+        F.collect_list(F.struct("shard", "window_id")).alias("rows"),
+    )
+    sink = str(tmp_path / "sink")
+    q = write_outlier_stream(
+        out, sink, str(tmp_path / "ckpt"), trigger={"availableNow": True}
+    )
+    q.awaitTermination(300)
+    assert q.exception() is None
+
+    emitted, batches = Counter(), {}
+    for p in q.recentProgress:
+        for r in p["observedMetrics"]["emitted"]["rows"]:
+            key = (r["shard"], r["window_id"])
+            emitted[key] += 1
+            batches.setdefault(key[1], set()).add((key[0], p["batchId"]))
+    # the case under test: a window that both shards emitted, in two batches
+    assert any(
+        len({s for s, _ in b}) == 2 and len({i for _, i in b}) == 2
+        for b in batches.values()
+    ), batches
+    written = Counter(
+        {
+            (r.shard, r.window_id): r["count"]
+            for r in spark.read.parquet(sink)
+            .groupBy("shard", "window_id")
+            .count()
+            .collect()
+        }
+    )
+    missing = sorted(set(emitted) - set(written))
+    assert written == emitted, f"(shard, window) missing from the sink: {missing}"
+
+
+def _outlier_table(window_ids, tag):
+    return pa.table(
+        {
+            "shard": pa.array([0] * len(window_ids), pa.int64()),
+            "window_id": pa.array(window_ids, pa.int64()),
+            "point_id": pa.array([tag * 100 + i for i in range(len(window_ids))]),
+        }
+    )
+
+
+def _sink_rows(sink):
+    """(window_id, point_id, batch_id) of every visible sink file."""
+    rows = []
+    for dirpath, _, names in os.walk(sink):
+        for name in names:
+            if name.endswith(".parquet") and not name.startswith((".", "_")):
+                t = pq.read_table(os.path.join(dirpath, name))
+                window = int(os.path.basename(dirpath).split("=")[1])
+                pids, batch_ids = t["point_id"].to_pylist(), t["batch_id"].to_pylist()
+                rows += [(window, pid, b) for pid, b in zip(pids, batch_ids)]
+    return sorted(rows)
+
+
+def test_outlier_batch_replay_rewrites_only_its_own_files(tmp_path):
+    """``write_outlier_batch`` writes one file per (window, batch): a
+    replayed batch replaces its files, a file of the old Spark writer
+    holding the replayed batch's rows is deleted, and one holding
+    another batch's rows stays."""
+    sink = str(tmp_path / "sink")
+    write_outlier_batch(_outlier_table([7, 7, 8], tag=1), sink, 3)
+    write_outlier_batch(_outlier_table([7, 7, 8], tag=1), sink, 3)
+    assert _sink_rows(sink) == [(7, 100, 3), (7, 101, 3), (8, 102, 3)]
+    assert sorted(os.listdir(os.path.join(sink, "window_id=7"))) == [
+        "part-00000000000000000003.parquet"
+    ]
+    assert pq.read_schema(
+        os.path.join(sink, "window_id=7", "part-00000000000000000003.parquet")
+    ).field("batch_id").type == pa.int32()
+
+    # old-writer files: batch 5 in window 9 (replayed below), batch 4 in
+    # window 10, each with Hadoop's checksum file beside it
+    for window, batch in ((9, 5), (10, 4)):
+        part = os.path.join(sink, f"window_id={window}")
+        os.makedirs(part)
+        name = "part-00000-0b1c.c000.snappy.parquet"
+        old = _outlier_table([window], tag=batch).drop_columns("window_id")
+        pq.write_table(
+            old.append_column("batch_id", pa.array([batch], pa.int32())),
+            os.path.join(part, name),
+        )
+        open(os.path.join(part, f".{name}.crc"), "wb").close()
+    write_outlier_batch(_outlier_table([9, 10], tag=5), sink, 5)
+    assert _sink_rows(sink) == [
+        (7, 100, 3), (7, 101, 3), (8, 102, 3),
+        (9, 500, 5), (10, 400, 4), (10, 501, 5),
+    ]
+    assert os.listdir(os.path.join(sink, "window_id=9")) == [
+        "part-00000000000000000005.parquet"
+    ]
+    assert len(os.listdir(os.path.join(sink, "window_id=10"))) == 3
 
 
 def test_late_rows_beyond_watermark_are_dropped(spark, tmp_path):
