@@ -147,6 +147,7 @@ def gaussian_kernel(x: np.ndarray, h: np.ndarray) -> np.ndarray:
 
     h == 0 yields NaN exactly like Java (0/0 after exp underflow or
     exp(NaN)); warnings are suppressed to mirror Java's silent IEEE754.
+    Kept for tests: the density oracle of tests/test_core_density.py.
     """
     x = np.asarray(x, dtype=np.float64)
     h = np.asarray(h, dtype=np.float64)

@@ -7,9 +7,9 @@ style pages ``(url, warc_ts, html, text, lang)`` to d=4 numeric vectors.
 d stays < 8 so NumPy's sequential summation keeps float-op order parity
 with the scalar kernel (see core.py module docstring).
 
-Determinism contract (north_star): extraction is a pure function of the
-page bytes — byte-identical extracted text per url across runs and
-parallelism levels, verified in tests/test_features.py.
+Determinism contract (north_star): a page's features are a pure function
+of its text and html — identical per url across runs and parallelism
+levels, verified in tests/test_features.py.
 """
 
 from __future__ import annotations
@@ -19,28 +19,6 @@ import pandas as pd
 
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType
-
-FEATURE_DIM = 4
-FEATURE_NAMES = [
-    "sqrt_text_len",  # sqrt(1+|text|) / 60
-    "link_density",  # anchors per KiB of text, capped
-    "digit_ratio",  # digit chars / text chars, x10
-    "mean_word_len",  # mean token length / 10, capped
-]
-
-_TAG_RE = r"<[^>]*>"
-
-
-def extract_text_pandas(html: pd.Series) -> pd.Series:
-    """Deterministic text extraction from raw HTML bytes: utf-8 decode
-    (replace errors), strip tags, collapse whitespace.  Pure function of
-    the bytes — the byte-identical-per-url invariant follows."""
-    s = html.apply(
-        lambda b: b.decode("utf-8", "replace") if isinstance(b, (bytes, bytearray)) else str(b)
-    )
-    s = s.str.replace(_TAG_RE, " ", regex=True)
-    s = s.str.replace(r"\s+", " ", regex=True).str.strip()
-    return s
 
 
 _WS_TABLE = np.zeros(256, dtype=bool)

@@ -295,7 +295,6 @@ def ngram_jaccard_pairs(
     shingle_words: int = 3,
     min_jaccard_pct: int = 10,
     max_doc_freq: int = 1000,
-    log_dropped: bool = False,
     hash_shingles: bool = False,
     pack_pairs: bool = True,
 ) -> DataFrame:
@@ -311,9 +310,7 @@ def ngram_jaccard_pairs(
     full sets, so for surviving pairs inter is a lower bound that is
     exact whenever no shared shingle exceeds the cap; pairs held
     together ONLY by super-frequent boilerplate are suppressed, which is
-    the intended dedup semantics.  Set ``log_dropped=True`` to eagerly
-    count and log the dropped shingles (one extra small aggregate job) —
-    no silent caps.
+    the intended dedup semantics.
 
     ``hash_shingles=True`` is the deployment fast path: shingle STRINGS
     are replaced by their JVM-native xxhash64 before the distinct and
@@ -361,18 +358,6 @@ def ngram_jaccard_pairs(
     capped = sh.withColumn(
         "df", F.count(F.lit(1)).over(Window.partitionBy("shingle"))
     ).where(F.col("df") <= max_doc_freq)
-    if log_dropped:
-        n_dropped = (
-            sh.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .where(F.col("df") > max_doc_freq)
-            .count()
-        )
-        logger.info(
-            "ngram_jaccard_pairs: dropped %d shingles with doc_freq > %d",
-            n_dropped,
-            max_doc_freq,
-        )
     a = capped.select(F.col("doc_id").alias("doc_a"), "shingle")
     b = capped.select(F.col("doc_id").alias("doc_b"), "shingle")
     inter = _pair_count(
@@ -1186,7 +1171,6 @@ def count_cosine_rescore(
     pairs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    materialize: bool = True,
 ) -> DataFrame:
     """Exact token-count COSINE rescoring of candidate pairs — the
     second half of the production candidates->rescore shape (LSH or
@@ -1212,19 +1196,17 @@ def count_cosine_rescore(
     keys, no hot single key; AQE splits any residual skew.  No
     Python anywhere: explode/groupBy/join/sum are all codegen'd.
 
-    ``materialize=True`` (default) localCheckpoints the two BOUNDED
-    intermediates that the rescore DAG reuses — ``pairs`` (referenced
-    4x: both legs of the doc-id union, the dot join, the final left
-    join) and the pair-filtered token table (referenced 3x: norms +
-    both dot sides).  Without it Catalyst re-derives the entire
-    upstream candidate pipeline per reference (plan audit read 86
-    exchanges for the LSH-pairs composition; 4 after) — the
-    same plan-reuse hazard CLAUDE.md pins for iterative self-joins.
+    It localCheckpoints the two BOUNDED intermediates that the rescore
+    DAG reuses — ``pairs`` (referenced 4x: both legs of the doc-id
+    union, the dot join, the final left join) and the pair-filtered
+    token table (referenced 3x: norms + both dot sides).  Without the
+    checkpoints Catalyst re-derives the entire upstream candidate
+    pipeline per reference (plan audit read 86 exchanges for the
+    LSH-pairs composition; 4 after) — the same plan-reuse hazard
+    CLAUDE.md pins for iterative self-joins.
     Both checkpoints hold candidate-scale data (pairs, and tokens of
-    docs in pairs), never the corpus; pass False to keep the operator
-    fully lazy when the caller manages its own persistence."""
-    if materialize:
-        pairs = pairs.localCheckpoint(eager=True)
+    docs in pairs), never the corpus."""
+    pairs = pairs.localCheckpoint(eager=True)
     toks = (
         fan_out(df)
         .select(
@@ -1243,8 +1225,7 @@ def count_cosine_rescore(
         .distinct()
     )
     toks = toks.join(in_pairs, "doc_id", "left_semi")
-    if materialize:
-        toks = toks.localCheckpoint(eager=True)
+    toks = toks.localCheckpoint(eager=True)
     norms = toks.groupBy("doc_id").agg(
         F.sum(F.col("cnt") * F.col("cnt")).alias("n2")
     )

@@ -7,11 +7,10 @@ unavailable under Spark Connect).
 (libhdfs), ``s3://`` and ``gcs://`` URIs; bare paths are treated as
 driver-local.  Paths must therefore be absolute URIs or driver-visible
 local paths — the same contract the parquet maintenance path already
-assumes (a cataloged Iceberg deployment replaces all of this with
-MERGE / expire-snapshots anyway, see ``maintenance.py``).
+assumes.
 
-Error semantics (load-bearing for ``upsert_partitioned``): a missing
-path is reported as ``False`` / an empty listing, while I/O and
+Error semantics (load-bearing for ``maintenance.merge_cdc_delta``): a
+missing path is reported as ``False`` / an empty listing, while I/O and
 permission errors RAISE — existence checks must never swallow a
 transient read failure into "table does not exist".
 """
@@ -23,8 +22,7 @@ from pyarrow import fs as pafs
 # Hadoop URI schemes -> the scheme pyarrow's FileSystem.from_uri
 # understands.  s3a/s3n are the Hadoop S3 connectors (same object
 # store); abfss is TLS abfs.  hdfs:// passes through (needs libhdfs in
-# the Python env — documented deployment dependency; a cataloged
-# Iceberg deployment replaces these directory ops entirely).
+# the Python env — documented deployment dependency).
 _SCHEME_ALIASES = {"s3a": "s3", "s3n": "s3", "abfss": "abfs"}
 
 
@@ -41,8 +39,7 @@ def resolve(path: str) -> tuple[pafs.FileSystem, str]:
             f"pyarrow cannot resolve filesystem for {path!r} "
             f"(scheme {scheme!r}): {e}.  Install the pyarrow filesystem "
             "dependency for this scheme (libhdfs for hdfs://, s3/azure "
-            "support is built in), or use the Iceberg catalog path where "
-            "these directory operations become MERGE/expire-snapshots."
+            "support is built in)."
         ) from e
 
 

@@ -107,86 +107,3 @@ def _estimated_scan_partitions(spark, files: list[str], target: int) -> int:
         return max(1, -(-total // max(1, max_split)))
     except Exception:  # noqa: BLE001 — estimation only, never fail the plan
         return len(files)
-
-
-def zorder_key(cols: list[str], bits: int = 16):
-    """Z-order (Morton) key: interleave the low ``bits`` bits of N
-    non-negative integer columns — rows close in the key are close in
-    EVERY dimension, so sorting by it keeps parquet row-group min/max
-    ranges tight on all N columns at once and multi-dimensional
-    predicates skip row groups (the data-skipping layout Delta's
-    OPTIMIZE ZORDER / Iceberg's sort orders apply; here as a pure
-    Catalyst expression).  Callers quantize non-integer columns first
-    (e.g. ``F.unix_micros(ts) / bucket``); ``bits * len(cols)`` must
-    stay <= 63.
-
-    PRECONDITION: every value must fit in ``bits`` bits (0 <= v <
-    2^bits) — higher bits are silently ignored by the interleave, which
-    would destroy the clustering without an error.  ``write_zordered``
-    validates this with one cheap max() pass before writing (it is a
-    once-per-snapshot OPTIMIZE-style op); quantize wide domains down
-    (``F.col(c) / bucket``) rather than raising ``bits``."""
-    if bits * len(cols) > 63:
-        raise ValueError(
-            f"bits*len(cols) = {bits * len(cols)} exceeds a long (63)"
-        )
-    from pyspark.sql import functions as F
-
-    key = F.lit(0).cast("long")
-    for b in range(bits):
-        for ci, c in enumerate(cols):
-            bit = (
-                F.shiftrightunsigned(F.col(c).cast("long"), b)
-                .bitwiseAND(F.lit(1))
-                .cast("long")
-            )
-            key = key + F.shiftleft(bit, b * len(cols) + ci)
-    return key
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    cols: list[str],
-    bits: int = 16,
-    n_files: int | None = None,
-    writer_options: dict | None = None,
-) -> None:
-    """Write ``df`` as parquet laid out in Z-order over ``cols``:
-    range-partition on the Morton key (one key range per file) and sort
-    within each partition, so every file's row groups carry tight
-    min/max stats on all ``cols`` — scans filtering on any of them
-    skip whole row groups/files.  One extra pass over the input (the
-    range partitioner samples the key), paid once per snapshot like any
-    OPTIMIZE/CLUSTER BY.  Validates the zorder_key domain precondition
-    (every value in [0, 2^bits)) with one max/min pass first — silent
-    bit truncation would keep the write 'successful' while destroying
-    the skipping property."""
-    from pyspark.sql import functions as F
-
-    bounds = df.agg(
-        *[F.min(c).alias(f"lo_{c}") for c in cols],
-        *[F.max(c).alias(f"hi_{c}") for c in cols],
-    ).first()
-    for c in cols:
-        lo, hi = bounds[f"lo_{c}"], bounds[f"hi_{c}"]
-        if lo is not None and (int(lo) < 0 or int(hi) >= (1 << bits)):
-            raise ValueError(
-                f"zorder column {c!r} spans [{lo}, {hi}] which does not "
-                f"fit in {bits} bits ([0, {1 << bits})): quantize it "
-                "down (e.g. value div bucket) before z-ordering"
-            )
-    spark = df.sparkSession
-    n = n_files or int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-    writer = (
-        df.withColumn("__zkey", zorder_key(cols, bits))
-        .repartitionByRange(n, F.col("__zkey"))
-        .sortWithinPartitions("__zkey")
-        .drop("__zkey")
-        .write.mode("overwrite")
-    )
-    for k, v in (writer_options or {}).items():
-        writer = writer.option(k, v)
-    writer.parquet(path)

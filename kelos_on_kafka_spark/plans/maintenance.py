@@ -1,73 +1,18 @@
-"""Table maintenance for the parquet fallback path: keyed upsert
-(MERGE-equivalent) and small-file compaction.
+"""Table maintenance and audit operators for parquet tables: the keyed
+CDC merge (``merge_cdc_delta``, MERGE-equivalent with deletes),
+changelog compaction, SCD2 versioning, snapshot diffs, drift histograms
+and cardinality stats.
 
-On Iceberg these are one-liners (MERGE INTO / rewrite_data_files); the
-parquet path needs them spelled out, and a 10^12-doc pipeline cannot
-live without either — backfills must overwrite exactly the affected
-rows idempotently, and a streaming sink that commits a file per
-micro-batch per partition accretes millions of tiny files that destroy
-scan planning.
-
-Both operators touch ONLY the partitions present in the incoming data /
-selected for rewrite (dynamic partition overwrite), so cost scales with
-the delta, not the table.
+The merge touches ONLY the hash buckets present in the incoming delta
+(dynamic partition overwrite), so its cost scales with the delta, not
+the table.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from kelos_on_kafka_spark.plans import fsutil
-
-
-def upsert_partitioned(
-    updates: DataFrame,
-    path: str,
-    key_cols: list[str],
-    partition_col: str,
-) -> None:
-    """MERGE-equivalent for a partitioned parquet table: rows in
-    ``updates`` replace existing rows with the same key; other rows in
-    the touched partitions survive; untouched partitions are not read
-    or written.  Idempotent: replaying the same updates rewrites the
-    same partitions with the same content.
-
-    Requires ``partition_col`` to be FUNCTIONALLY DETERMINED by the key
-    (an update may not move a row across partitions — same rule Hive/
-    Iceberg MERGE with partition pruning relies on)."""
-    spark = updates.sparkSession
-    # Existence is probed through Spark's own filesystem stack
-    # (fsutil.table_exists: PATH_NOT_FOUND -> False, empty dir -> True,
-    # any OTHER error RAISES) so it works on every scheme/credential
-    # setup the job can write to (s3a://, abfss://, hdfs://) — and a
-    # transient read failure (corrupt footer, permission) on an
-    # EXISTING table propagates, never falling through to the
-    # first-write full overwrite (that path would replace the table
-    # with just this updates batch).
-    if not fsutil.table_exists(spark, path):  # first write: no table yet
-        updates.write.mode("overwrite").partitionBy(partition_col).parquet(
-            path
-        )
-        return
-    existing = spark.read.parquet(path)
-    parts = [
-        r[partition_col]
-        for r in updates.select(partition_col).distinct().collect()
-    ]
-    survivors = existing.where(
-        F.col(partition_col).isin(parts)
-    ).join(
-        updates.select(*key_cols).distinct(),
-        key_cols,
-        "left_anti",
-    )
-    (
-        survivors.unionByName(updates.select(*existing.columns))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partition_col)
-        .parquet(path)
-    )
 
 
 def merge_cdc_delta(
@@ -87,14 +32,13 @@ def merge_cdc_delta(
     untouched buckets are not read or written.
 
     The bucket is ``pmod(xxhash64(key), n_buckets)`` — functionally
-    determined by the key (upsert_partitioned's partition rule), so a
-    key can never move buckets and dynamic partition overwrite touches
-    only the delta's buckets.  The bucket function affects FILE LAYOUT
-    only, never row values, so the materialized table is
-    oracle-comparable.  Idempotent: replaying the same delta reduces
-    to the same per-key winners and rewrites the same buckets with the
-    same content (a re-applied delete finds the key already absent) —
-    which is what makes the foreachBatch wrapper
+    determined by the key, so a key can never move buckets and dynamic
+    partition overwrite touches only the delta's buckets.  The bucket
+    function affects FILE LAYOUT only, never row values, so the
+    materialized table is oracle-comparable.  Idempotent: replaying the
+    same delta reduces to the same per-key winners and rewrites the same
+    buckets with the same content (a re-applied delete finds the key
+    already absent) — which is what makes the foreachBatch wrapper
     (``streaming.sink.write_cdc_table_stream``) exactly-once.
 
     At 10^12-doc scale ``n_buckets`` becomes the table's real
@@ -153,74 +97,6 @@ def merge_cdc_delta(
         for name, full in fsutil.list_subdirs(path):
             if name == f"__bucket={b}":
                 fsutil.delete_dir(full)
-
-
-def compact_partitions(
-    spark: SparkSession,
-    path: str,
-    partition_col: str,
-    partitions: list | None = None,
-    files_per_partition: int = 1,
-) -> None:
-    """Rewrite the given partitions (default: all) of a partitioned
-    parquet table into ``files_per_partition`` files each — the
-    small-file compaction a per-micro-batch streaming sink needs.
-    Row-preserving; only the selected partitions are rewritten."""
-    df = spark.read.parquet(path)
-    if partitions is not None:
-        df = df.where(F.col(partition_col).isin(list(partitions)))
-    n_parts = df.select(partition_col).distinct().count()
-    if files_per_partition == 1:
-        # each task holds whole partition values -> one file per value
-        out = df.repartition(max(n_parts, 1), F.col(partition_col))
-    else:
-        # sub-split by a row-hash salt: at most files_per_partition
-        # files per partition value
-        salt = F.pmod(
-            F.xxhash64(*[F.col(c) for c in df.columns]),
-            F.lit(files_per_partition),
-        )
-        out = df.repartition(
-            max(n_parts, 1) * files_per_partition,
-            F.col(partition_col),
-            salt,
-        )
-    (
-        out.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partition_col)
-        .parquet(path)
-    )
-
-
-def expire_partitions(
-    spark: SparkSession,
-    path: str,
-    partition_col: str,
-    keep_predicate,
-) -> list:
-    """Retention: DELETE every partition of a partitioned parquet table
-    whose value fails ``keep_predicate`` (a Python callable over the
-    partition value) — the time-based expiry an append/upsert table
-    needs so state does not grow forever (Iceberg's expire-snapshots /
-    `DELETE WHERE partition < X` analogue; swap in the catalog call in
-    a cataloged deployment).
-
-    Deletion is directory-level through the Hadoop FS — no row rewrite,
-    no read of surviving partitions.  Returns the list of dropped
-    partition values.  The predicate sees the STRING form Spark encodes
-    in the directory name (partition values are stored as strings in
-    hive-style layout); compare accordingly."""
-    dropped = []
-    prefix = f"{partition_col}="
-    for name, full_path in fsutil.list_subdirs(path):
-        if not name.startswith(prefix):
-            continue
-        value = name[len(prefix):]
-        if not keep_predicate(value):
-            fsutil.delete_dir(full_path)
-            dropped.append(value)
-    return dropped
 
 
 def snapshot_diff(

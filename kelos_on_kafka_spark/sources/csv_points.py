@@ -39,6 +39,7 @@ def read_reference_csv(
     tiny (30 k rows); at scale an ordered id would come from the data
     itself, not file position.  ``numeric_cols`` limits the vector
     width (e.g. 2 for the labeled GMM file to skip the label column).
+    Kept for tests: reads the reference's data in test_reference_data.
     """
     per_pane = max(1, elements_per_window // cfg.panes_per_window)
 

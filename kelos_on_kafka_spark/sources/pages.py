@@ -93,8 +93,9 @@ def to_spark_pages(spark, pdf: pd.DataFrame):
 
 
 def write_pages_parquet(spark, pdf: pd.DataFrame, path: str, partitions: int = 8):
-    """Materialize a page table as parquet (the sandbox stand-in for the
-    Iceberg table; at scale: partitioned by crawl date, sorted by url)."""
+    """Materialize a page table as parquet (at scale: partitioned by
+    crawl date, sorted by url).  Kept for tests: the fixture builder of
+    test_spark_submit."""
     to_spark_pages(spark, pdf).repartition(partitions).write.mode(
         "overwrite"
     ).parquet(path)

@@ -53,7 +53,8 @@ def gmm_points(
 
 def to_spark_points(spark, pdf: pd.DataFrame):
     """Convert a fixture frame to the engine's Spark input shape
-    ``(id:long, ts:timestamp, features:array<double>)``."""
+    ``(id:long, ts:timestamp, features:array<double>)``.  Kept for
+    tests: the fixture builder of test_spark_batch and test_epanechnikov."""
     from pyspark.sql import functions as F
 
     sdf = spark.createDataFrame(

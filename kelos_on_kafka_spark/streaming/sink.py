@@ -19,8 +19,8 @@ the write is such an action, and its ``limit 1`` also leaves Python
 output unread, so Spark kills those workers and the next batch forks
 new ones.  The outlier sink therefore collects the batch once, as
 Arrow, and writes its files from the driver: no Spark write job, and an
-empty batch writes nothing.  The sinks that act on the batch more than
-once persist it first.
+empty batch writes nothing.  The CDC table sink acts on its batch more
+than once, so it persists the batch first.
 """
 
 from __future__ import annotations
@@ -33,64 +33,11 @@ import pyarrow.compute as pc
 import pyarrow.fs as pafs
 import pyarrow.parquet as pq
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 # the outlier sink's file name; any other parquet file in a window
 # partition was written by the Spark dynamic-overwrite sink it replaced
 _PART = re.compile(r"part-\d{20}\.parquet")
-
-
-def write_upsert_stream(
-    updates: DataFrame,
-    path: str,
-    checkpoint: str,
-    key_cols: list[str],
-    partition_col: str,
-    order_col: str | None = None,
-    trigger: dict | None = None,
-):
-    """Streaming CDC sink: materialize a keyed table from a stream of
-    upserts (foreachBatch -> plans/maintenance.upsert_partitioned).
-    Within a micro-batch the winner per key is the max ``order_col``
-    (or arbitrary-but-deterministic max over all columns if None) —
-    across batches, later batches overwrite earlier ones, so the table
-    converges to last-write-wins.  Replayed batches rewrite the same
-    partitions with the same rows (idempotent), which is what makes
-    foreachBatch exactly-once here.  On Iceberg this whole function is
-    ``MERGE INTO`` (sources/iceberg.py)."""
-    from pyspark.sql.window import Window
-
-    from kelos_on_kafka_spark.plans.maintenance import upsert_partitioned
-
-    order = F.col(order_col) if order_col else F.struct(
-        *[F.col(c) for c in updates.columns]
-    )
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # the probe stays: a first write of an empty batch would leave a
-        # schema-less table directory that the next batch cannot read
-        batch_df.persist()
-        try:
-            if batch_df.isEmpty():
-                return
-            w = Window.partitionBy(*key_cols).orderBy(order.desc())
-            latest = (
-                batch_df.withColumn("__rn", F.row_number().over(w))
-                .where(F.col("__rn") == 1)
-                .drop("__rn")
-            )
-            upsert_partitioned(latest, path, key_cols, partition_col)
-        finally:
-            batch_df.unpersist()
-
-    writer = (
-        updates.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
 
 
 def write_cdc_table_stream(
@@ -214,66 +161,6 @@ def write_outlier_stream(
 
     writer = (
         outliers.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
-
-
-def write_routed_stream(
-    events: DataFrame,
-    route_col: str,
-    paths: dict,
-    checkpoint: str,
-    batch_col: str = "batch_id",
-    trigger: dict | None = None,
-):
-    """Quality-gate routing sink: one input stream fans out to one
-    parquet table per value of ``route_col`` (e.g. clean/flagged from a
-    quality predicate) inside a single foreachBatch — one stream, one
-    checkpoint, N destinations, still exactly-once.
-
-    Idempotence: each destination batch writes with dynamic partition
-    overwrite on ``batch_col`` (the micro-batch id), so a replayed
-    batch rewrites ITS OWN partition with the same rows instead of
-    appending duplicates — the same replay contract as
-    ``write_outlier_stream``.  Routes not present in ``paths`` raise,
-    so a typo'd predicate cannot silently drop data.
-
-    Scale: the batch is persisted once and filtered per route (N scans
-    of cached data, not N source reads); at very large N switch to a
-    single ``partitionBy(route_col)`` write — kept per-path here so
-    each route can go to a different table/bucket."""
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # no emptiness probe: an empty batch routes nowhere
-        batch_df.persist()
-        try:
-            routes = [
-                r[0]
-                for r in batch_df.select(route_col).distinct().collect()
-            ]
-            unknown = set(routes) - set(paths)
-            if unknown:
-                raise ValueError(
-                    f"unrouted {route_col} values: {sorted(unknown)}"
-                )
-            for route in routes:
-                (
-                    batch_df.where(F.col(route_col) == F.lit(route))
-                    .withColumn(batch_col, F.lit(batch_id))
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy(batch_col)
-                    .parquet(paths[route])
-                )
-        finally:
-            batch_df.unpersist()
-
-    writer = (
-        events.writeStream.foreachBatch(write_batch)
         .option("checkpointLocation", checkpoint)
         .outputMode("append")
     )

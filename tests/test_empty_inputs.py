@@ -105,16 +105,6 @@ def test_round4_ops_on_empty(spark, empty_docs, empty_events):
     assert snapshot_diff(empty_docs, empty_docs, ["doc_id"]).count() == 0
 
 
-def test_warc_on_empty_and_garbage(spark):
-    from kelos_on_kafka_spark.sources import warc
-
-    assert warc.parse_warc_bytes(b"") == ([], 0)
-    recs, bad = warc.parse_warc_bytes(b"complete nonsense, no records")
-    assert recs == [] and bad == 1
-    seg = spark.createDataFrame([], "path string, content binary")
-    assert warc.parse_warc_segments(seg).count() == 0
-
-
 def test_stream_ann_on_empty_corpus(spark, tmp_path):
     """A probe stream against an EMPTY corpus yields no rows (and no
     crash) — the cross join simply produces nothing to rank."""

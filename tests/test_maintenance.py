@@ -1,159 +1,34 @@
-"""Parquet-table maintenance (plans/maintenance.py): keyed upsert
-semantics, replay idempotence, partition isolation, compaction."""
+"""Parquet-table maintenance (plans/maintenance.py): the CDC merge's
+existence probe, and corpus-snapshot diffs."""
 
 import glob
-import os
 
 import pytest
-from pyspark.sql import functions as F
 
-from kelos_on_kafka_spark.plans import maintenance as M
-
-
-def _mk_table(spark, path):
-    spark.createDataFrame(
-        [(1, "d1", "a"), (2, "d1", "b"), (3, "d2", "c"), (4, "d3", "d")],
-        "id long, day string, v string",
-    ).write.mode("overwrite").partitionBy("day").parquet(path)
+from kelos_on_kafka_spark.plans import fsutil
+from kelos_on_kafka_spark.plans.maintenance import merge_cdc_delta
 
 
-def _read(spark, path):
-    return {
-        (r["id"], r["day"], r["v"])
-        for r in spark.read.parquet(path).collect()
-    }
-
-
-def test_upsert_updates_and_inserts(spark, tmp_path):
+def test_merge_cdc_delta_raises_on_unreadable_existing_table(spark, tmp_path):
+    """A read failure on an EXISTING table must propagate: the merge
+    never falls through to its first-write path, which would replace
+    the whole table with just this delta (``fsutil.table_exists``: a
+    missing path reads as absent, an I/O error raises)."""
     path = str(tmp_path / "t")
-    _mk_table(spark, path)
-    updates = spark.createDataFrame(
-        [(2, "d1", "B2"), (5, "d2", "e")], "id long, day string, v string"
+    assert not fsutil.table_exists(spark, path)
+    schema = "key long, id long, value double, is_del boolean"
+    base = spark.createDataFrame(
+        [(k, k, float(k), False) for k in range(4)], schema
     )
-    M.upsert_partitioned(updates, path, ["id"], "day")
-    assert _read(spark, path) == {
-        (1, "d1", "a"),
-        (2, "d1", "B2"),  # updated in place
-        (3, "d2", "c"),
-        (5, "d2", "e"),  # inserted
-        (4, "d3", "d"),  # untouched partition survives
-    }
-
-
-def test_upsert_replay_is_idempotent(spark, tmp_path):
-    path = str(tmp_path / "t")
-    _mk_table(spark, path)
-    updates = spark.createDataFrame(
-        [(2, "d1", "B2")], "id long, day string, v string"
-    )
-    M.upsert_partitioned(updates, path, ["id"], "day")
-    before = _read(spark, path)
-    M.upsert_partitioned(updates, path, ["id"], "day")  # replay
-    assert _read(spark, path) == before
-
-
-def test_upsert_creates_table_on_first_write(spark, tmp_path):
-    path = str(tmp_path / "fresh")
-    updates = spark.createDataFrame(
-        [(1, "d1", "a")], "id long, day string, v string"
-    )
-    M.upsert_partitioned(updates, path, ["id"], "day")
-    assert _read(spark, path) == {(1, "d1", "a")}
-
-
-def _n_files(path, day):
-    return len(
-        [
-            f
-            for f in glob.glob(os.path.join(path, f"day={day}", "*.parquet"))
-            if os.path.basename(f).startswith("part-")
-        ]
-    )
-
-
-def test_compaction_reduces_files_preserves_rows(spark, tmp_path):
-    path = str(tmp_path / "t")
-    # write each row separately -> many small files per partition
-    for i in range(6):
-        spark.createDataFrame(
-            [(10 + i, "d1", f"v{i}")], "id long, day string, v string"
-        ).write.mode("append").partitionBy("day").parquet(path)
-    assert _n_files(path, "d1") >= 6
-    before = _read(spark, path)
-    M.compact_partitions(spark, path, "day")
-    assert _n_files(path, "d1") == 1
-    assert _read(spark, path) == before
-
-
-def test_streaming_cdc_upsert_sink(spark, tmp_path):
-    """write_upsert_stream: a stream of keyed updates converges to
-    last-write-wins; within-batch ties resolve by order_col."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from kelos_on_kafka_spark.streaming.sink import write_upsert_stream
-
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    # file 1: initial rows; file 2: update id=1 (newer seq) + insert id=3
-    f1 = pd.DataFrame(
-        {"id": [1, 2], "day": ["d1", "d1"], "v": ["a", "b"], "seq": [1, 1]}
-    )
-    f2 = pd.DataFrame(
-        {
-            "id": [1, 1, 3],
-            "day": ["d1", "d1", "d2"],
-            "v": ["A_mid", "A_new", "c"],
-            "seq": [2, 3, 1],
-        }
-    )
-    for i, pdf in enumerate([f1, f2]):
-        spark.createDataFrame(
-            pdf, schema="id long, day string, v string, seq long"
-        ).coalesce(1).write.parquet(f"{src}/f{i}.parquet")
-
-    stream = (
-        spark.readStream.schema("id long, day string, v string, seq long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/*.parquet")
-    )
-    q = write_upsert_stream(
-        stream,
-        str(tmp_path / "table"),
-        str(tmp_path / "ckpt"),
-        key_cols=["id"],
-        partition_col="day",
-        order_col="seq",
-        trigger={"availableNow": True},
-    )
-    q.awaitTermination(180)
-
-    got = {
-        (r["id"], r["day"], r["v"])
-        for r in spark.read.parquet(str(tmp_path / "table")).select(
-            "id", "day", "v"
-        ).collect()
-    }
-    # id=1 -> seq 3 wins within the second batch; id=2 untouched; id=3 new
-    assert got == {(1, "d1", "A_new"), (2, "d1", "b"), (3, "d2", "c")}
-
-
-def test_upsert_raises_on_unreadable_existing_table(spark, tmp_path):
-    """ADVICE r02: a read failure on an EXISTING table must propagate —
-    never fall through to the first-write path, which would replace the
-    whole table with just the updates batch."""
-    path = str(tmp_path / "t")
-    _mk_table(spark, path)
+    merge_cdc_delta(base, path, "key", ["id"], n_buckets=2)
     data_files = glob.glob(f"{path}/*/*.parquet")
     assert data_files
     for f in data_files:  # corrupt every footer in place
         with open(f, "wb") as fh:
             fh.write(b"this is not a parquet footer")
-    updates = spark.createDataFrame(
-        [(1, "d1", "X")], "id long, day string, v string"
-    )
+    delta = spark.createDataFrame([(1, 10, 9.0, False)], schema)
     with pytest.raises(Exception):
-        M.upsert_partitioned(updates, path, ["id"], "day")
+        merge_cdc_delta(delta, path, "key", ["id"], n_buckets=2)
     # the corrupt originals are still there — no overwrite happened
     remaining = glob.glob(f"{path}/*/*.parquet")
     assert set(remaining) == set(data_files)
@@ -161,32 +36,8 @@ def test_upsert_raises_on_unreadable_existing_table(spark, tmp_path):
         assert fh.read().startswith(b"this is not")
 
 
-def test_expire_partitions_drops_only_expired(spark, tmp_path):
-    """Retention deletes failing partitions directory-level; survivors
-    are byte-untouched and still readable."""
-    path = str(tmp_path / "t")
-    _mk_table(spark, path)  # partitions d1, d2, d3
-    before = {f for f in glob.glob(f"{path}/day=d1/*.parquet")}
-    dropped = M.expire_partitions(
-        spark, path, "day", lambda v: v >= "d2"
-    )
-    assert dropped == ["d1"]
-    assert not os.path.exists(f"{path}/day=d1")
-    assert _read(spark, path) == {
-        (3, "d2", "c"), (4, "d3", "d"),
-    }
-    # idempotent on re-run
-    assert M.expire_partitions(spark, path, "day", lambda v: v >= "d2") == []
-    # missing table is a no-op
-    assert (
-        M.expire_partitions(spark, str(tmp_path / "nope"), "day", lambda v: True)
-        == []
-    )
-
-
 def test_snapshot_diff_statuses(spark):
     from kelos_on_kafka_spark.plans.maintenance import snapshot_diff
-    from pyspark.sql import functions as F
 
     old = spark.createDataFrame(
         [(1, "a"), (2, "b"), (3, "c")], "doc_id long, text string"

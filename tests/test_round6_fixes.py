@@ -108,25 +108,6 @@ def test_snapshot_diff_sentinel_collision_free(spark):
     assert got == {1: "changed", 2: "changed", 3: "changed"}
 
 
-def test_warc_segment_bad_records_named_for_grain(spark, tmp_path):
-    """ADVICE r5: the per-segment damage count is stamped on every row;
-    the segment_ prefix marks it sum-unsafe. Pin the rename and the
-    per-segment max() audit shape."""
-    from kelos_on_kafka_spark.sources.warc import (
-        WARC_SCHEMA,
-        parse_warc_bytes,
-    )
-
-    assert "segment_bad_records" in [f.name for f in WARC_SCHEMA.fields]
-    assert "bad_records" not in [f.name for f in WARC_SCHEMA.fields]
-    good = (
-        b"WARC/1.0\r\nWARC-Type: response\r\n"
-        b"WARC-Target-URI: http://x\r\nContent-Length: 2\r\n\r\nhi"
-    )
-    recs, bad = parse_warc_bytes(b"garbage" + good)
-    assert len(recs) == 1 and bad == 1
-
-
 def test_dedup_decisions_prefix_pair_source(spark):
     """VERDICT r5 #5: dedup_decisions can run its candidate stage on
     the lossless prefix-filtered exact-Jaccard join.  On a fixture

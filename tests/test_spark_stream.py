@@ -467,68 +467,3 @@ def test_engine_runs_on_rate_limited_source(spark, tmp_path):
         assert rows_seen >= 400
     finally:
         q.stop()
-
-
-def test_routed_stream_fans_out_exactly_once(spark, tmp_path):
-    """write_routed_stream: quality routing splits one stream into
-    clean/flagged tables; a replay of the same source into the same
-    checkpoint adds nothing (idempotent), and every row lands in
-    exactly one table."""
-    import uuid as _uuid
-
-    from kelos_on_kafka_spark.operators import textstats
-    from kelos_on_kafka_spark.streaming.sink import write_routed_stream
-
-    src = str(tmp_path / "src")
-    docs = spark.createDataFrame(
-        [
-            (1, "one two"),                                  # low quality
-            (2, "clean document with plenty of normal words here"),
-            (3, "12345 67890 123 456 789 000 111 222"),      # digit heavy
-            (4, "another perfectly ordinary document of words"),
-        ],
-        "doc_id long, text string",
-    )
-    docs.write.parquet(src)
-
-    def start():
-        stream = spark.readStream.schema("doc_id long, text string").parquet(
-            src
-        )
-        routed = textstats.quality_flags(stream).withColumn(
-            "route",
-            F.when(F.col("is_low_quality"), F.lit("flagged")).otherwise(
-                F.lit("clean")
-            ),
-        )
-        return write_routed_stream(
-            routed,
-            route_col="route",
-            paths={
-                "clean": str(tmp_path / "clean"),
-                "flagged": str(tmp_path / "flagged"),
-            },
-            checkpoint=str(tmp_path / "ckpt"),
-            trigger={"availableNow": True},
-        )
-
-    q = start()
-    q.awaitTermination(120)
-
-    def ids(name):
-        import glob as _glob
-
-        if not _glob.glob(str(tmp_path / name) + "/*"):
-            return set()
-        return {
-            r.doc_id
-            for r in spark.read.parquet(str(tmp_path / name)).collect()
-        }
-
-    assert ids("clean") == {2, 4}
-    assert ids("flagged") == {1, 3}
-
-    # replay with the same checkpoint: no new batches, nothing changes
-    q2 = start()
-    q2.awaitTermination(120)
-    assert ids("clean") == {2, 4} and ids("flagged") == {1, 3}
