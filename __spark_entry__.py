@@ -279,8 +279,7 @@ _PQ_BOOKS = similarity.md5_codebooks(seed=43, m=4, k_sub=8, subdim=16)
 def q_knn_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ANN (encode -> per-probe ADC table -> m
     lookups per pair): literal md5 codebooks reproduce codes AND
-    asymmetric distances bit-exactly in DuckDB; production swaps in
-    train_pq_codebooks (KMeans per subspace), same plan.  The driver
+    asymmetric distances bit-exactly in DuckDB.  The driver
     contract is the integer ranking (like every ANN query): the float
     distance stays internal — at sf0.1 the ADC add-chain differs from
     DuckDB by 1 ulp on one probe group (accumulated-sum rounding),
@@ -2447,7 +2446,7 @@ def q_stream_session_dynamic(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_stream_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic streaming downsampling (streaming/sample_stream.py):
+    """Deterministic streaming downsampling (streaming/topn_stream.py):
     at most 20 events per 12h pane by portable-hash priority, O(n)
     state per pane, emitted on watermark close.  Priorities stay LONG
     end-to-end (a double value column would round 60-bit hashes), so
@@ -2481,7 +2480,7 @@ def q_stream_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", F.timestamp_seconds("sec").alias("ts")
     ).coalesce(1).write.parquet(f"{src}/sentinel.parquet")
 
-    from kelos_on_kafka_spark.streaming.sample_stream import (
+    from kelos_on_kafka_spark.streaming.topn_stream import (
         stream_pane_sample,
     )
 

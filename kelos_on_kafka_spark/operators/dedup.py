@@ -25,14 +25,21 @@ from kelos_on_kafka_spark.plans.layout import fan_out
 logger = logging.getLogger(__name__)
 
 
-def _shingles(text_col: str, n_words: int):
-    """All n-word shingles of a whitespace-tokenized text, as an array
-    column (built-ins only: split + sequence + transform + array_join)."""
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
+def _shingles(text_col, n_words: int):
+    """All n-word shingles of a whitespace-tokenized text (a column name
+    or Column), as an array column (built-ins only: split + sequence +
+    transform + array_join).  A text shorter than ``n_words`` is one
+    shingle; a blank text is the empty shingle."""
+    toks = F.split(F.trim(text_col), r"\s+")
     idx = F.sequence(F.lit(0), F.greatest(F.size(toks) - n_words, F.lit(0)))
     return F.transform(
         idx, lambda i: F.array_join(F.slice(toks, i + 1, n_words), " ")
     )
+
+
+def _nonempty_shingles(text_col, n_words: int):
+    """``_shingles`` without the empty shingle of a blank text."""
+    return F.filter(_shingles(text_col, n_words), lambda s: s != "")
 
 
 def _doc_shingle_arrays(
@@ -53,9 +60,7 @@ def _doc_shingle_arrays(
     jaccard-prefix plan re-ran the scan+explode+distinct subtree 8x).
     Equivalent by construction to exploding then ``.distinct()`` /
     ``groupBy(doc_id).count()``."""
-    arr = F.array_distinct(
-        F.filter(_shingles(text_col, n_words), lambda s: s != "")
-    )
+    arr = F.array_distinct(_nonempty_shingles(text_col, n_words))
     if hash_shingles:
         # distinct again after hashing: matches the r06 hash-then-
         # distinct semantics exactly, collisions included

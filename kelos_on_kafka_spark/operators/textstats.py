@@ -8,6 +8,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from kelos_on_kafka_spark.operators.dedup import _hash64, _nonempty_shingles
+
 
 def n_tokens(text_col: str = "text") -> Column:
     """Whitespace token count (0 for empty/blank)."""
@@ -260,7 +262,7 @@ def _repetition_int_cols(text_col: str, ngram: int) -> dict[str, Column]:
     repetition_stats and the composed filter_verdicts — expression
     reuse composes for free; a join would cost a shuffle)."""
     toks = F.split(F.trim(F.col(text_col)), r"\s+")
-    grams = _shingles_arr(text_col, ngram)
+    grams = _nonempty_shingles(text_col, ngram)
     # mode count = longest equal-run in the sorted token array
     sorted_toks = F.array_sort(F.filter(toks, lambda t: t != ""))
     run = F.aggregate(
@@ -343,20 +345,6 @@ def filter_verdicts(
     )
 
 
-def _shingles_arr(text_col: str, n_words: int):
-    """Same shingle construction as dedup._shingles (kept in sync with
-    the generate_series-based oracle SQL): all n-word windows, short
-    texts produce their whole text as one shingle."""
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
-    idx = F.sequence(F.lit(0), F.greatest(F.size(toks) - n_words, F.lit(0)))
-    return F.filter(
-        F.transform(
-            idx, lambda i: F.array_join(F.slice(toks, i + 1, n_words), " ")
-        ),
-        lambda s: s != "",
-    )
-
-
 def contamination(
     docs: DataFrame,
     probes: DataFrame,
@@ -382,7 +370,6 @@ def contamination(
     8-byte keys ever shuffle, never shingle strings), per-doc distinct,
     broadcast left join to mark hits, one aggregation producing both
     counts."""
-    from kelos_on_kafka_spark.operators.dedup import _hash64
     from kelos_on_kafka_spark.plans.layout import fan_out
 
     # (r07 A/B, rejected: hashing only DISTINCT shingles and joining
@@ -396,7 +383,7 @@ def contamination(
             F.explode_outer(
                 F.array_distinct(
                     F.transform(
-                        _shingles_arr(text_col, ngram),
+                        _nonempty_shingles(text_col, ngram),
                         lambda s: _hash64(s, 0),
                     )
                 )
@@ -407,7 +394,7 @@ def contamination(
         probes.select(
             F.explode(
                 F.transform(
-                    _shingles_arr(probe_text_col, ngram),
+                    _nonempty_shingles(probe_text_col, ngram),
                     lambda s: _hash64(s, 0),
                 )
             ).alias("h")
@@ -719,14 +706,12 @@ def oov_stats(
     text_col: str = "text",
     id_col: str = "doc_id",
     min_count: int = 2,
-    vocab: DataFrame | None = None,
 ) -> DataFrame:
     """Per-document OUT-OF-VOCABULARY rate against the corpus vocab
-    (``build_vocab``, or a caller-supplied one — e.g. yesterday's
-    frozen vocab for drift monitoring): (id, n_tokens, n_oov,
-    oov_rate).  High OOV = gibberish/misencoded/foreign text the
-    tokenizer will shred into bytes — a standard pretraining quality
-    gate; docs with no tokens keep a row (n_tokens 0, rate NULL).
+    (``build_vocab``): (id, n_tokens, n_oov, oov_rate).  High OOV =
+    gibberish/misencoded/foreign text the tokenizer will shred into
+    bytes — a standard pretraining quality gate; docs with no tokens
+    keep a row (n_tokens 0, rate NULL).
 
     Scale shape: one token-keyed shuffle join of (doc_id, token)
     pairs against the vocab (broadcast when the vocab fits — AQE
@@ -736,8 +721,7 @@ def oov_stats(
     the skew side carries no per-row state."""
     from kelos_on_kafka_spark.plans.layout import fan_out
 
-    if vocab is None:
-        vocab = build_vocab(df, text_col=text_col, min_count=min_count)
+    vocab = build_vocab(df, text_col=text_col, min_count=min_count)
     toks = fan_out(df).select(
         F.col(id_col),
         F.explode(

@@ -264,8 +264,6 @@ def robust_scale(
     df: DataFrame,
     group_cols: list[str],
     value_col: str,
-    exact: bool = True,
-    accuracy: int = 10_000,
     out_col: str | None = None,
 ) -> DataFrame:
     """Per-group ROBUST SCALING: (value - median) / IQR — the
@@ -278,18 +276,15 @@ def robust_scale(
     blow-up.
 
     Same engine shape as ``winsorize``: one shuffle for the per-group
-    quantile agg (exact ``percentile`` = the oracle contract;
-    ``exact=False`` = approx_percentile sketch for unbounded groups),
-    then a broadcast-friendly join back and a codegen'd float chain —
+    quantile agg (exact ``percentile``, the oracle contract), then a
+    broadcast-friendly join back and a codegen'd float chain —
     subtract and divide are correctly rounded IEEE, so the result is
     engine-portable bit-for-bit given identical quantiles."""
-    fn = "percentile" if exact else "approx_percentile"
-    acc = "" if exact else f", {int(accuracy)}"
     stats = df.groupBy(*group_cols).agg(
-        F.expr(f"{fn}({value_col}, 0.5{acc})").alias("r_med"),
+        F.expr(f"percentile({value_col}, 0.5)").alias("r_med"),
         (
-            F.expr(f"{fn}({value_col}, 0.75{acc})")
-            - F.expr(f"{fn}({value_col}, 0.25{acc})")
+            F.expr(f"percentile({value_col}, 0.75)")
+            - F.expr(f"percentile({value_col}, 0.25)")
         ).alias("r_iqr"),
     )
     out = out_col or f"{value_col}_scaled"

@@ -90,7 +90,6 @@ def salted_join(
     n_salts: int = 16,
     salt_cols: list[str] | None = None,
     how: str = "inner",
-    strategy: str | None = "shuffle_hash",
 ) -> DataFrame:
     """Inner/left join of a skewed big side against a small side,
     spreading each hot key across ``n_salts`` reducers: the big side is
@@ -98,14 +97,13 @@ def salted_join(
     the join key becomes (key..., salt).  Result is exactly
     ``big.join(small, on, how)``.
 
-    ``strategy`` pins the physical join ('shuffle_hash' default): the
-    salt only helps on the SHUFFLE path — both sides exchange on
-    (key, salt), the hot key lands on n_salts reducers.  (If the small
-    side were broadcast-sized you would broadcast and skip salting
-    entirely; and a stats-less small side can otherwise bait Catalyst
-    into broadcasting the BIG side — observed with a createDataFrame
-    dim at bench scale.)  Pass ``strategy=None`` to let Catalyst/AQE
-    choose.
+    The physical join is pinned to shuffle hash: the salt only helps
+    on the SHUFFLE path — both sides exchange on (key, salt), the hot
+    key lands on n_salts reducers.  (If the small side were
+    broadcast-sized you would broadcast and skip salting entirely; and
+    a stats-less small side can otherwise bait Catalyst into
+    broadcasting the BIG side — observed with a createDataFrame dim at
+    bench scale.)
 
     ``salt_cols`` must vary WITHIN a hot key (a row id, a payload
     hash); a salt derived only from the join keys is constant per key,
@@ -131,9 +129,7 @@ def salted_join(
     # sequence(int, int) yields array<int>, matching with_salt's int cast
     replicated = small.withColumn(
         _SALT, F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
-    )
-    if strategy:
-        replicated = replicated.hint(strategy)
+    ).hint("shuffle_hash")
     return salted_big.join(replicated, [*on, _SALT], how).drop(_SALT)
 
 

@@ -25,7 +25,6 @@ def read_reference_csv(
     path: str,
     elements_per_window: int = 3000,
     cfg: KelosConfig = DEFAULT_CONFIG,
-    numeric_cols: int | None = None,
     start_epoch: int = 1_700_000_000,
 ) -> DataFrame:
     """CSV -> engine points ``(id, ts, features)``.
@@ -37,9 +36,8 @@ def read_reference_csv(
     ``row_number`` over it makes the ids contiguous.  The window is a
     single-partition sort, acceptable because reference fixtures are
     tiny (30 k rows); at scale an ordered id would come from the data
-    itself, not file position.  ``numeric_cols`` limits the vector
-    width (e.g. 2 for the labeled GMM file to skip the label column).
-    Kept for tests: reads the reference's data in test_reference_data.
+    itself, not file position.  Kept for tests: reads the reference's
+    data in test_reference_data.
     """
     per_pane = max(1, elements_per_window // cfg.panes_per_window)
 
@@ -57,8 +55,6 @@ def read_reference_csv(
     cols = F.split(F.col("line"), ",")
     feats = F.transform(cols, lambda c: c.cast("double"))
     feats = F.filter(feats, lambda v: v.isNotNull())
-    if numeric_cols is not None:
-        feats = F.slice(feats, 1, numeric_cols)
     return df.select(
         "id",
         F.timestamp_seconds(

@@ -47,7 +47,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from kelos_on_kafka_spark.operators.dedup import _hash64
+from kelos_on_kafka_spark.operators.dedup import _hash64, _nonempty_shingles
 
 PAIR_SCHEMA = StructType(
     [
@@ -67,17 +67,7 @@ def minhash_expr(
     min-over-shingles md5 hashes — the same values
     ``dedup.minhash_signatures`` computes by explode+groupBy, but
     stateless (null when the document has no non-empty shingles)."""
-    toks = F.split(F.trim(text_col), r"\s+")
-    idx = F.sequence(
-        F.lit(0), F.greatest(F.size(toks) - shingle_words, F.lit(0))
-    )
-    shingles = F.filter(
-        F.transform(
-            idx,
-            lambda i: F.array_join(F.slice(toks, i + 1, shingle_words), " "),
-        ),
-        lambda s: s != "",
-    )
+    shingles = _nonempty_shingles(text_col, shingle_words)
     return F.array(
         *[
             F.array_min(

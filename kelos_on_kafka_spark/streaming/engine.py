@@ -25,36 +25,20 @@ import pandas as pd
 import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    BinaryType,
-    DoubleType,
-    IntegerType,
-    LongType,
-    StructField,
-    StructType,
-    TimestampType,
-)
+from pyspark.sql.types import BinaryType, LongType, StructField, StructType
 
 from kelos_on_kafka_spark import core
 from kelos_on_kafka_spark.config import DEFAULT_CONFIG, KelosConfig
 from kelos_on_kafka_spark.operators.kelos_batch import (
+    OUTLIER_SCHEMA,
     _features,
     outlier_columns,
     point_columns,
 )
 
 STREAM_OUTLIER_SCHEMA = StructType(
-    [
-        StructField("shard", LongType()),
-        StructField("window_id", LongType()),
-        StructField("window_start", TimestampType()),
-        StructField("window_end", TimestampType()),
-        StructField("rank", IntegerType()),
-        StructField("point_id", LongType()),
-        StructField("klome", DoubleType()),
-        StructField("density", DoubleType()),
-        StructField("features", ArrayType(DoubleType())),
+    OUTLIER_SCHEMA.fields
+    + [
         StructField("n_window_points", LongType()),
         StructField("n_clusters", LongType()),
         StructField("n_candidates", LongType()),

@@ -103,21 +103,17 @@ def stream_incremental_dedup(
     id_col: str = "doc_id",
     ts_col: str = "ts",
     text_col: str = "text",
-    digest_col: str | None = None,
     horizon_us: int = 24 * 3600 * 1_000_000,
     watermark_delay: str = "0 seconds",
 ) -> DataFrame:
     """Classify a document stream as seen / keep / batch_dup against a
     static digest history plus a watermark-bounded hot window.
     ``history`` must have a ``digest`` column (md5 of text, the
-    portable convention); ``digest_col=None`` computes md5(text) on
-    the stream.  Returns (doc_id, digest, ts_us, status)."""
-    digest = (
-        F.col(digest_col) if digest_col else F.md5(F.col(text_col))
-    )
+    portable convention); the stream's digest is md5(text).  Returns
+    (doc_id, digest, ts_us, status)."""
     base = docs.withWatermark(ts_col, watermark_delay).select(
         F.col(id_col).cast("long").alias("doc_id"),
-        digest.alias("digest"),
+        F.md5(F.col(text_col)).alias("digest"),
         epoch_us(ts_col).alias("ts_us"),
         F.col(ts_col).alias("_event_ts"),
     )

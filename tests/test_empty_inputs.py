@@ -71,7 +71,6 @@ def test_pq_on_empty(spark):
     emb = spark.createDataFrame([], "vec_id long, embedding array<double>")
     books = md5_codebooks(seed=43, m=4, k_sub=8, subdim=16)
     assert pq_topk(emb, [0, 1], books, k=5).count() == 0
-    assert pq_topk(emb, [0, 1], books, k=5, rerank=10).count() == 0
 
 
 def test_round4_ops_on_empty(spark, empty_docs, empty_events):

@@ -1,4 +1,4 @@
-"""Deterministic streaming pane sampling (streaming/sample_stream.py):
+"""Deterministic streaming pane sampling (streaming/topn_stream.py):
 stream output equals the batch hash-order ranking; weighted-priority
 column path agrees with weighted_stratified_cap per pane."""
 
@@ -8,7 +8,7 @@ import uuid
 import pytest
 from pyspark.sql import functions as F
 
-from kelos_on_kafka_spark.streaming.sample_stream import stream_pane_sample
+from kelos_on_kafka_spark.streaming.topn_stream import stream_pane_sample
 
 BASE = 1_700_000_000
 

@@ -11,9 +11,19 @@ reports as unreached is unreached, unless something imports by a computed
 name (only ``perfbench/run.py`` does, and it loads perfbench modules).
 
 A definition that only tests use needs an entry in ``ALLOWED`` with the
-reason it stays."""
+reason it stays.
+
+The same holds for option forks.  A fork is an optional parameter of a
+package function whose name occurs in the test of an ``if`` statement or
+conditional expression in that function's body (nested functions
+included).  It is set when some call in a root or in the package passes
+it, by keyword or by position, to a function of that name (names, not
+bindings, again; a ``*args`` or ``**kwargs`` call counts as passing
+everything).  A fork that only tests set needs an entry in
+``ALLOWED_FORKS`` with the reason it stays."""
 
 import ast
+import functools
 import pathlib
 
 import kelos_on_kafka_spark
@@ -31,8 +41,17 @@ ALLOWED = {
     "to_spark_points": "fixture builder of test_spark_batch and test_epanechnikov",
     "write_pages_parquet": "fixture builder of test_spark_submit",
     "_StreamShard": "older stream checkpoints unpickle this name (test_stream_state_compat)",
-    "train_ivf_centroids": "only caller of ivf_topk(centroids=); an open ROADMAP item",
-    "train_pq_codebooks": "only caller of pq_topk(rerank=); an open ROADMAP item",
+}
+
+ALLOWED_FORKS = {
+    "salted_topn.descending": "ascending top-n (test_skew, test_skew_property)",
+    "salted_join.how": "the left join (test_skew, test_skew_property)",
+    "stream_pane_sample.priority_col": "weighted sampling by a caller's priority (test_sample_stream)",
+    "stream_funnel.max_age_us": "state eviction bound (test_funnel_stream)",
+    "stream_funnel.allow_unbounded_state": "opt-out of the state bound (test_funnel_stream)",
+    "dedup_decisions.groups": "reuses materialized near-dup groups (test_dedup_cc, test_round6_fixes)",
+    "asof_join.tolerance_us": "bounded as-of match (test_temporal)",
+    "featurize_pages.html_col": "pages without an HTML column (test_features)",
 }
 
 
@@ -61,6 +80,14 @@ def _names(tree) -> set[str]:
     return out
 
 
+def _root_files() -> list[pathlib.Path]:
+    out = []
+    for root in ROOTS:
+        p = REPO / root
+        out += sorted(p.rglob("*.py")) if p.is_dir() else [p]
+    return out
+
+
 def _def_names(node) -> list[str]:
     if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
         return [node.name]
@@ -68,6 +95,7 @@ def _def_names(node) -> list[str]:
     return [n.id for t in targets for n in ast.walk(t) if isinstance(n, ast.Name)]
 
 
+@functools.lru_cache(maxsize=None)
 def _parse(path: pathlib.Path) -> ast.Module:
     return ast.parse(path.read_text(), str(path))
 
@@ -84,10 +112,8 @@ def unreached() -> dict[str, int]:
                 defs += [(where, name, node) for name in _def_names(node)]
             elif not _is_docstring(node):
                 used |= _names(node)
-    for root in ROOTS:
-        p = REPO / root
-        for path in sorted(p.rglob("*.py")) if p.is_dir() else [p]:
-            used |= _names(_parse(path))
+    for path in _root_files():
+        used |= _names(_parse(path))
     reached = set()
     grew = True
     while grew:
@@ -118,3 +144,79 @@ def test_allowlist_names_only_definitions_that_exist():
         for name in _def_names(node)
     }
     assert set(ALLOWED) <= names
+
+
+def forks() -> dict[str, int | None]:
+    """``{"<function>.<parameter>": <positional index, or None if
+    keyword-only>}`` of every option fork in the package."""
+    out = {}
+    for path in sorted(PACKAGE.rglob("*.py")):
+        tree = _parse(path)
+        methods = {
+            id(f)
+            for c in ast.walk(tree)
+            if isinstance(c, ast.ClassDef)
+            for f in c.body
+        }
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            tested = {
+                n.id
+                for node in ast.walk(fn)
+                if isinstance(node, (ast.If, ast.IfExp))
+                for n in ast.walk(node.test)
+                if isinstance(n, ast.Name)
+            }
+            a = fn.args
+            pos = a.posonlyargs + a.args
+            shift = int(id(fn) in methods)  # self / cls is not passed
+            first = len(pos) - len(a.defaults)
+            for i, p in enumerate(pos[first:], first):
+                if p.arg in tested:
+                    out[f"{fn.name}.{p.arg}"] = i - shift
+            for p, d in zip(a.kwonlyargs, a.kw_defaults):
+                if d is not None and p.arg in tested:
+                    out[f"{fn.name}.{p.arg}"] = None
+    return out
+
+
+def _passed() -> set[str]:
+    """``"<callee>.<keyword>"`` and ``"<callee>.#<position>"`` of every
+    call in the package and the roots; ``*`` / ``**`` for unpacking."""
+    out = set()
+    for path in sorted(PACKAGE.rglob("*.py")) + _root_files():
+        for call in ast.walk(_parse(path)):
+            if not isinstance(call, ast.Call):
+                continue
+            f = call.func
+            name = getattr(f, "id", None) or getattr(f, "attr", None)
+            out |= {f"{name}.{k.arg or '**'}" for k in call.keywords}
+            out |= {f"{name}.#{i}" for i in range(len(call.args))}
+            if any(isinstance(a, ast.Starred) for a in call.args):
+                out.add(f"{name}.*")
+    return out
+
+
+def unset_forks() -> list[str]:
+    """Every fork no run path or package call sets and ``ALLOWED_FORKS``
+    does not name."""
+    got = _passed()
+    out = []
+    for fork, i in forks().items():
+        fn = fork.split(".")[0]
+        ways = {fork, f"{fn}.**"}
+        if i is not None:
+            ways |= {f"{fn}.#{i}", f"{fn}.*"}
+        if not ways & got and fork not in ALLOWED_FORKS:
+            out.append(fork)
+    return sorted(out)
+
+
+def test_every_option_fork_is_set_by_a_run_path():
+    unset = unset_forks()
+    assert not unset, f"option forks only tests set: {unset}"
+
+
+def test_fork_allowlist_names_only_forks_that_exist():
+    assert set(ALLOWED_FORKS) <= set(forks())
