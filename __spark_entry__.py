@@ -17,9 +17,13 @@ timestamps are emitted as integer epoch-microseconds).
 
 from __future__ import annotations
 
+import functools
+import tempfile
+import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 from kelos_on_kafka_spark.config import KelosConfig
 from kelos_on_kafka_spark.functions.features import doc_features
@@ -30,10 +34,67 @@ SF_DEFAULT = "/root/testdata/sf0.001"
 
 HOUR_US = 3_600_000_000
 DAY_US = 86_400_000_000
+STREAM_TIMEOUT_S = 300
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+
+@functools.cache
+def _scratch_root() -> tempfile.TemporaryDirectory:
+    """This process's staging root, removed at interpreter exit."""
+    return tempfile.TemporaryDirectory(prefix="spark_entry_")
+
+
+def _scratch() -> str:
+    """A fresh directory under ``_scratch_root``."""
+    return tempfile.mkdtemp(dir=_scratch_root().name)
+
+
+def _file_stream(
+    spark: SparkSession,
+    schema: str,
+    *parts: DataFrame,
+    files_per_trigger: int = 2,
+) -> DataFrame:
+    """Stage each part as parquet in its own subdirectory, one after the
+    other, and stream the files back.  A later part (a sentinel) gets
+    later file times, so it arrives after the earlier ones."""
+    src = _scratch()
+    for i, part in enumerate(parts):
+        part.write.parquet(f"{src}/{i:03d}")
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", files_per_trigger)
+        .parquet(f"{src}/*")
+    )
+
+
+def _await(q: StreamingQuery) -> None:
+    """Wait for an availableNow query to finish.  One that is still
+    running after ``STREAM_TIMEOUT_S`` is stopped and fails loudly
+    instead of returning a partial sink."""
+    if not q.awaitTermination(STREAM_TIMEOUT_S):
+        q.stop()
+        raise TimeoutError(
+            f"streaming query {q.name or q.id} still running after "
+            f"{STREAM_TIMEOUT_S} s"
+        )
+
+
+def _drain(out: DataFrame) -> DataFrame:
+    """Run a streaming frame availableNow into a memory table and return
+    the table."""
+    name = f"drain_{uuid.uuid4().hex[:12]}"
+    _await(
+        out.writeStream.format("memory")
+        .queryName(name)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    return out.sparkSession.table(name)
 
 
 # ---------------------------------------------------------------------------
@@ -413,24 +474,19 @@ def q_stream_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     table approaches the cap (max observed bucket ≪ 1000); at a scale
     where buckets saturate, stream output is a PREFIX of each bucket's
     batch pairs, not equal to it."""
-    import tempfile
-    import uuid
-
     from kelos_on_kafka_spark.streaming.dedup_stream import (
         stream_near_dup_pairs,
     )
 
-    src = tempfile.mkdtemp(prefix="sndp_src_")
     # constant event time: no row can be late, every pair is in-horizon
-    _t(spark, sf_dir, "documents").select(
-        "doc_id",
-        "text",
-        F.timestamp_seconds(F.lit(1_000_000)).alias("ts"),
-    ).repartition(4).write.mode("overwrite").parquet(src)
-    stream = (
-        spark.readStream.schema("doc_id long, text string, ts timestamp")
-        .option("maxFilesPerTrigger", 2)
-        .parquet(src)
+    stream = _file_stream(
+        spark,
+        "doc_id long, text string, ts timestamp",
+        _t(spark, sf_dir, "documents").select(
+            "doc_id",
+            "text",
+            F.timestamp_seconds(F.lit(1_000_000)).alias("ts"),
+        ).repartition(4),
     )
     pairs = stream_near_dup_pairs(
         stream,
@@ -441,16 +497,7 @@ def q_stream_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows_per_band=4,
         portable=True,
     )
-    name = f"sndp_{uuid.uuid4().hex[:12]}"
-    q = (
-        pairs.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name).select("doc_a", "doc_b").distinct()
+    return _drain(pairs).select("doc_a", "doc_b").distinct()
 
 
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -911,9 +958,6 @@ def q_stream_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     result independent of file arrival order (no row can ever be late);
     a sentinel written second (strictly later mod-time) advances the
     watermark past every real pane so all panes emit."""
-    import tempfile
-    import uuid
-
     pane_s = 43200
     ev = _t(spark, sf_dir, "events").select(
         "event_id",
@@ -926,45 +970,32 @@ def q_stream_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     span_s = int(row["hi"] - row["lo"]) + pane_s
     sentinel_pane = int(row["hi"] // pane_s + 2)
     sentinel_sec = sentinel_pane * pane_s + span_s
-    src = tempfile.mkdtemp(prefix="stopn_src_")
-    (
+    stream = _file_stream(
+        spark,
+        "event_id long, ts timestamp, value double",
         ev.repartitionByRange(4, "sec")
         .sortWithinPartitions("sec", "event_id")
-        .select("event_id", F.timestamp_seconds("sec").alias("ts"), "value")
-        .write.parquet(f"{src}/data.parquet")
+        .select("event_id", F.timestamp_seconds("sec").alias("ts"), "value"),
+        spark.createDataFrame(
+            [(999_999_999, sentinel_sec, 0.0)],
+            "event_id long, sec long, value double",
+        ).select(
+            "event_id", F.timestamp_seconds("sec").alias("ts"), "value"
+        ).coalesce(1),
     )
-    spark.createDataFrame(
-        [(999_999_999, sentinel_sec, 0.0)],
-        "event_id long, sec long, value double",
-    ).select(
-        "event_id", F.timestamp_seconds("sec").alias("ts"), "value"
-    ).coalesce(1).write.parquet(f"{src}/sentinel.parquet")
 
     from kelos_on_kafka_spark.streaming.topn_stream import (
         stream_topn_per_window,
     )
 
-    stream = (
-        spark.readStream.schema("event_id long, ts timestamp, value double")
-        .option("maxFilesPerTrigger", 2)
-        .parquet(f"{src}/*.parquet")
-    )
-    name = f"stopn_{uuid.uuid4().hex[:12]}"
-    q = (
+    return _drain(
         stream_topn_per_window(
             stream,
             n=5,
             pane_seconds=pane_s,
             watermark_delay=f"{span_s} seconds",
         )
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name).where(
+    ).where(
         F.col("pane_id") < F.lit(sentinel_pane)
     ).select("pane_id", "rank", "event_id", "value")
 
@@ -974,9 +1005,6 @@ def q_stream_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     stateful ops: dedup on (window, user) then windowed count — distinct
     aggs are illegal in streaming).  unix_micros output keeps the
     comparison session-timezone-free."""
-    import tempfile
-    import uuid
-
     pane_s = 21600
     ev = _t(spark, sf_dir, "events").select(
         (windowing.epoch_us("ts") / F.lit(1_000_000))
@@ -987,47 +1015,34 @@ def q_stream_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     row = ev.agg(F.min("sec").alias("lo"), F.max("sec").alias("hi")).first()
     span_s = int(row["hi"] - row["lo"]) + pane_s
     sentinel_sec = int(row["hi"] // pane_s + 2) * pane_s + span_s
-    src = tempfile.mkdtemp(prefix="sdist_src_")
     # distributed ordered staging; span watermark makes it order-proof
     # (see q_stream_topn)
-    (
+    stream = _file_stream(
+        spark,
+        "ts timestamp, user_id bigint",
         ev.repartitionByRange(4, "sec")
         .sortWithinPartitions("sec", "user_id")
-        .select(F.timestamp_seconds("sec").alias("ts"), "user_id")
-        .write.parquet(f"{src}/data.parquet")
+        .select(F.timestamp_seconds("sec").alias("ts"), "user_id"),
+        spark.createDataFrame(
+            [(sentinel_sec, 999_999)], "sec long, user_id bigint"
+        ).select(
+            F.timestamp_seconds("sec").alias("ts"), "user_id"
+        ).coalesce(1),
     )
-    spark.createDataFrame(
-        [(sentinel_sec, 999_999)], "sec long, user_id bigint"
-    ).select(
-        F.timestamp_seconds("sec").alias("ts"), "user_id"
-    ).coalesce(1).write.parquet(f"{src}/sentinel.parquet")
 
     from kelos_on_kafka_spark.streaming.relational import (
         stream_windowed_distinct,
     )
 
-    stream = (
-        spark.readStream.schema("ts timestamp, user_id bigint")
-        .option("maxFilesPerTrigger", 2)
-        .parquet(f"{src}/*.parquet")
-    )
-    name = f"sdist_{uuid.uuid4().hex[:12]}"
-    q = (
-        stream_windowed_distinct(
-            stream,
-            key_col="user_id",
-            pane=f"{pane_s} seconds",
-            watermark=f"{span_s} seconds",
-        )
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
     return (
-        spark.table(name)
+        _drain(
+            stream_windowed_distinct(
+                stream,
+                key_col="user_id",
+                pane=f"{pane_s} seconds",
+                watermark=f"{span_s} seconds",
+            )
+        )
         .select(
             F.unix_micros("window_start").alias("window_start_us"),
             "n_distinct",
@@ -1045,9 +1060,6 @@ def q_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioned files; a span watermark keeps every row admissible, and
     inner-join results are emitted as matches arrive, so no sentinel is
     needed.  Oracle: the batch interval_join SQL verbatim."""
-    import tempfile
-    import uuid
-
     # NTZ -> TIMESTAMP via the session-tz-independent epoch (CLAUDE.md:
     # unix_micros rejects TIMESTAMP_NTZ), microseconds preserved exactly
     ev = _t(spark, sf_dir, "events").select(
@@ -1061,41 +1073,26 @@ def q_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max(F.unix_micros("ts")).alias("hi"),
     ).first()
     span_s = int((row["hi"] - row["lo"]) // 1_000_000) + 3600
-    src = tempfile.mkdtemp(prefix="sij_src_")
-    for part, typ in (("clicks", "click"), ("purchases", "purchase")):
-        (
+
+    def side(typ: str, id_as: str, key_as: str, ts_as: str) -> DataFrame:
+        return _file_stream(
+            spark,
+            "event_id long, user_id bigint, ts timestamp",
             ev.where(F.col("event_type") == typ)
             .repartitionByRange(4, "ts")
             .sortWithinPartitions("ts", "event_id")
-            .select("event_id", "user_id", "ts")
-            .write.parquet(f"{src}/{part}")
+            .select("event_id", "user_id", "ts"),
+        ).select(
+            F.col("event_id").alias(id_as),
+            F.col("user_id").alias(key_as),
+            F.col("ts").alias(ts_as),
         )
-    schema = "event_id long, user_id bigint, ts timestamp"
-    clicks = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(f"{src}/clicks")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("cu"),
-            F.col("ts").alias("cts"),
-        )
-    )
-    purchases = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(f"{src}/purchases")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("pu"),
-            F.col("ts").alias("pts"),
-        )
-    )
+
     from kelos_on_kafka_spark.streaming.relational import stream_interval_join
 
     joined = stream_interval_join(
-        clicks,
-        purchases,
+        side("click", "click_id", "cu", "cts"),
+        side("purchase", "purchase_id", "pu", "pts"),
         left_key="cu",
         right_key="pu",
         left_ts="cts",
@@ -1104,17 +1101,7 @@ def q_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         watermark=f"{span_s} seconds",
         how="inner",
     )
-    name = f"sij_{uuid.uuid4().hex[:12]}"
-    q = (
-        joined.select("click_id", "purchase_id")
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name).select("click_id", "purchase_id")
+    return _drain(joined.select("click_id", "purchase_id"))
 
 
 def q_stream_interval_join_left(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1127,9 +1114,6 @@ def q_stream_interval_join_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     flushes; sentinels never join (impossible user ids) and never flush
     (the watermark stops short of their own bound).  Oracle: the plain
     LEFT JOIN interval SQL."""
-    import tempfile
-    import uuid
-
     ev = _t(spark, sf_dir, "events").select(
         "event_id",
         "user_id",
@@ -1142,50 +1126,34 @@ def q_stream_interval_join_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).first()
     span_s = int((row["hi"] - row["lo"]) // 1_000_000) + 3600
     sentinel_us = row["hi"] + (span_s + 7200) * 1_000_000
-    src = tempfile.mkdtemp(prefix="sijl_src_")
-    schema = "event_id long, user_id bigint, ts timestamp"
-    for part, typ, sent_uid in (
-        ("clicks", "click", -1),
-        ("purchases", "purchase", -2),
-    ):
-        (
+
+    def side(
+        typ: str, sent_uid: int, id_as: str, key_as: str, ts_as: str
+    ) -> DataFrame:
+        return _file_stream(
+            spark,
+            "event_id long, user_id bigint, ts timestamp",
             ev.where(F.col("event_type") == typ)
             .repartitionByRange(4, "ts")
             .sortWithinPartitions("ts", "event_id")
-            .select("event_id", "user_id", "ts")
-            .write.parquet(f"{src}/{part}/data")
-        )
-        spark.createDataFrame(
-            [(-abs(sent_uid), sent_uid, sentinel_us)],
-            "event_id long, user_id bigint, us long",
+            .select("event_id", "user_id", "ts"),
+            spark.createDataFrame(
+                [(-abs(sent_uid), sent_uid, sentinel_us)],
+                "event_id long, user_id bigint, us long",
+            ).select(
+                "event_id", "user_id", F.timestamp_micros("us").alias("ts")
+            ).coalesce(1),
         ).select(
-            "event_id", "user_id", F.timestamp_micros("us").alias("ts")
-        ).coalesce(1).write.parquet(f"{src}/{part}/sentinel")
-    clicks = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(f"{src}/clicks/*")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("cu"),
-            F.col("ts").alias("cts"),
+            F.col("event_id").alias(id_as),
+            F.col("user_id").alias(key_as),
+            F.col("ts").alias(ts_as),
         )
-    )
-    purchases = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(f"{src}/purchases/*")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("pu"),
-            F.col("ts").alias("pts"),
-        )
-    )
+
     from kelos_on_kafka_spark.streaming.relational import stream_interval_join
 
     joined = stream_interval_join(
-        clicks,
-        purchases,
+        side("click", -1, "click_id", "cu", "cts"),
+        side("purchase", -2, "purchase_id", "pu", "pts"),
         left_key="cu",
         right_key="pu",
         left_ts="cts",
@@ -1194,17 +1162,9 @@ def q_stream_interval_join_left(spark: SparkSession, sf_dir: str) -> DataFrame:
         watermark=f"{span_s} seconds",
         how="leftOuter",
     )
-    name = f"sijl_{uuid.uuid4().hex[:12]}"
-    q = (
-        joined.select("click_id", "purchase_id")
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name).where(F.col("click_id") >= 0).select(
+    return _drain(joined.select("click_id", "purchase_id")).where(
+        F.col("click_id") >= 0
+    ).select(
         "click_id", "purchase_id"
     )
 
@@ -1217,14 +1177,12 @@ def q_stream_bloom_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact first-occurrence oracle is stable, not probabilistic — FP
     behavior is a pure function of the data, pinned separately by
     tests/test_bloom_dedup.py with a deliberately tiny filter)."""
-    import tempfile
-    import uuid
-
     from kelos_on_kafka_spark.streaming.bloom_dedup import stream_bloom_dedup
 
     pane_s = 21600
-    src = tempfile.mkdtemp(prefix="bloomd_src_")
-    (
+    stream = _file_stream(
+        spark,
+        "event_id long, ts timestamp, user_id bigint",
         _t(spark, sf_dir, "events")
         .select(
             "event_id",
@@ -1232,14 +1190,10 @@ def q_stream_bloom_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "user_id",
         )
         .coalesce(1)
-        .sortWithinPartitions("ts", "event_id")
-        .write.parquet(f"{src}/data")
+        .sortWithinPartitions("ts", "event_id"),
+        files_per_trigger=1,
     )
-    stream = spark.readStream.schema(
-        "event_id long, ts timestamp, user_id bigint"
-    ).option("maxFilesPerTrigger", 1).parquet(f"{src}/data")
-    name = f"bloomd_{uuid.uuid4().hex[:12]}"
-    q = (
+    return _drain(
         stream_bloom_dedup(
             stream,
             key_col="user_id",
@@ -1249,14 +1203,7 @@ def q_stream_bloom_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             n_bits=1 << 20,
             k=4,
         )
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name).select("pane_id", "key_h1", "row_id", "ts_us")
+    ).select("pane_id", "key_h1", "row_id", "ts_us")
 
 
 def q_stream_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1267,9 +1214,6 @@ def q_stream_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     received' == min (ts, event_id) — the oracle's window pick.  (The
     single upstream partition preserves per-reducer arrival order
     through the key exchange.)"""
-    import tempfile
-    import uuid
-
     from kelos_on_kafka_spark.streaming.relational import stream_dedup_exact
 
     ev = _t(spark, sf_dir, "events").select(
@@ -1283,31 +1227,20 @@ def q_stream_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max(F.unix_micros("ts")).alias("hi"),
     ).first()
     span_s = int((row["hi"] - row["lo"]) // 1_000_000) + 3600
-    src = tempfile.mkdtemp(prefix="sdedup_src_")
-    (
-        ev.coalesce(1)
-        .sortWithinPartitions("ts", "event_id")
-        .write.parquet(f"{src}/data")
+    stream = _file_stream(
+        spark,
+        "event_id long, ts timestamp, user_id bigint, event_type string",
+        ev.coalesce(1).sortWithinPartitions("ts", "event_id"),
+        files_per_trigger=1,
     )
-    stream = spark.readStream.schema(
-        "event_id long, ts timestamp, user_id bigint, event_type string"
-    ).option("maxFilesPerTrigger", 1).parquet(f"{src}/data")
-    name = f"sdedup_{uuid.uuid4().hex[:12]}"
-    q = (
+    return _drain(
         stream_dedup_exact(
             stream,
             key_cols=["user_id", "event_type"],
             ts_col="ts",
             watermark=f"{span_s} seconds",
         )
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name).select(
+    ).select(
         "user_id",
         "event_type",
         "event_id",
@@ -2061,20 +1994,23 @@ def q_weighted_strat_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "lang", "priority", "sample_rank")
 
 
-def q_stream_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming ANN (streaming/ann_stream.py): a stream of 20 probe
-    vectors (event-time spread over 4 one-hour windows) against the
-    static embeddings corpus, exact windowed top-5 cosine per probe,
-    emitted on window close (append mode; sentinel advances the final
-    watermark).  Ranking contract identical to batch knn_cosine."""
-    import tempfile
-    import uuid
-
-    from kelos_on_kafka_spark.streaming.ann_stream import stream_cosine_topk
-
+def _stream_knn(
+    spark: SparkSession,
+    sf_dir: str,
+    topk: Callable[[DataFrame, DataFrame], DataFrame],
+) -> DataFrame:
+    """``topk(probes, corpus)`` on a stream of 20 probe vectors (event
+    time spread over 4 one-hour windows) against the static embeddings
+    corpus.  A zero-vector sentinel written after the probes advances
+    the final watermark.  It must reach the watermark operator
+    (filtering it out upstream would freeze the watermark and no window
+    would close); its far-future window never closes, so it never
+    reaches the sink."""
     emb = _t(spark, sf_dir, "embeddings")
     base_s = 1_700_000_000
-    probes_pdf = (
+    probes = _file_stream(
+        spark,
+        "probe_id long, ts timestamp, vec array<float>",
         emb.where(F.col("vec_id") < 20)
         .select(
             F.col("vec_id").alias("probe_id"),
@@ -2083,47 +2019,45 @@ def q_stream_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("ts"),
             F.col("embedding").alias("vec"),
         )
+        .coalesce(1)
+        .sortWithinPartitions("probe_id"),
+        spark.createDataFrame(
+            [(999_999, base_s + 10 * 3600)], "probe_id long, sec long"
+        ).select(
+            "probe_id",
+            F.timestamp_seconds("sec").alias("ts"),
+            F.array_repeat(F.lit(0.0), 64).cast("array<float>").alias("vec"),
+        ).coalesce(1),
+        files_per_trigger=1,
     )
-    src = tempfile.mkdtemp(prefix="sknn_src_")
-    probes_pdf.coalesce(1).sortWithinPartitions("probe_id").write.parquet(
-        f"{src}/data"
-    )
-    spark.createDataFrame(
-        [(999_999, base_s + 10 * 3600)], "probe_id long, sec long"
-    ).select(
-        "probe_id",
-        F.timestamp_seconds("sec").alias("ts"),
-        F.array_repeat(F.lit(0.0), 64).cast("array<float>").alias("vec"),
-    ).coalesce(1).write.parquet(f"{src}/sentinel")
-    stream = spark.readStream.schema(
-        "probe_id long, ts timestamp, vec array<float>"
-    ).option("maxFilesPerTrigger", 1).parquet(f"{src}/*")
-    # the sentinel must reach the watermark operator (filtering it out
-    # upstream would freeze the watermark and no window would close);
-    # its far-future window never closes, so it never reaches the sink
-    out = stream_cosine_topk(
-        stream,
-        emb,
-        k=5,
-        probe_id_col="probe_id",
-        probe_vec_col="vec",
-        ts_col="ts",
-        window="1 hour",
-    )
-    name = f"sknn_{uuid.uuid4().hex[:12]}"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name).where(F.col("probe_id") < 20).select(
+    return _drain(topk(probes, emb)).where(F.col("probe_id") < 20).select(
         F.unix_micros("window_start").alias("window_start_us"),
         "probe_id",
         "rank",
         "neighbor_id",
+    )
+
+
+def q_stream_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Streaming ANN (streaming/ann_stream.py): a stream of 20 probe
+    vectors (event-time spread over 4 one-hour windows) against the
+    static embeddings corpus, exact windowed top-5 cosine per probe,
+    emitted on window close (append mode; sentinel advances the final
+    watermark).  Ranking contract identical to batch knn_cosine."""
+    from kelos_on_kafka_spark.streaming.ann_stream import stream_cosine_topk
+
+    return _stream_knn(
+        spark,
+        sf_dir,
+        lambda probes, emb: stream_cosine_topk(
+            probes,
+            emb,
+            k=5,
+            probe_id_col="probe_id",
+            probe_vec_col="vec",
+            ts_col="ts",
+            window="1 hour",
+        ),
     )
 
 
@@ -2133,54 +2067,14 @@ def q_stream_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     nprobe=2 coarse cells of the pre-assigned corpus — the
     O(N·nprobe/n_cells) scale path, with the same deterministic cell
     quantizer as batch knn_ivf."""
-    import tempfile
-    import uuid
-
     from kelos_on_kafka_spark.streaming.ann_stream import stream_ivf_topk
 
-    emb = _t(spark, sf_dir, "embeddings")
-    base_s = 1_700_000_000
-    probes_pdf = (
-        emb.where(F.col("vec_id") < 20)
-        .select(
-            F.col("vec_id").alias("probe_id"),
-            F.timestamp_seconds(
-                F.lit(base_s) + (F.col("vec_id") % 4) * 3600
-            ).alias("ts"),
-            F.col("embedding").alias("vec"),
-        )
-    )
-    src = tempfile.mkdtemp(prefix="sknnivf_src_")
-    probes_pdf.coalesce(1).sortWithinPartitions("probe_id").write.parquet(
-        f"{src}/data"
-    )
-    spark.createDataFrame(
-        [(999_999, base_s + 10 * 3600)], "probe_id long, sec long"
-    ).select(
-        "probe_id",
-        F.timestamp_seconds("sec").alias("ts"),
-        F.array_repeat(F.lit(0.0), 64).cast("array<float>").alias("vec"),
-    ).coalesce(1).write.parquet(f"{src}/sentinel")
-    stream = spark.readStream.schema(
-        "probe_id long, ts timestamp, vec array<float>"
-    ).option("maxFilesPerTrigger", 1).parquet(f"{src}/*")
-    out = stream_ivf_topk(
-        stream, emb, k=5, n_cells=16, nprobe=2, window="1 hour"
-    )
-    name = f"sknnivf_{uuid.uuid4().hex[:12]}"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name).where(F.col("probe_id") < 20).select(
-        F.unix_micros("window_start").alias("window_start_us"),
-        "probe_id",
-        "rank",
-        "neighbor_id",
+    return _stream_knn(
+        spark,
+        sf_dir,
+        lambda probes, emb: stream_ivf_topk(
+            probes, emb, k=5, n_cells=16, nprobe=2, window="1 hour"
+        ),
     )
 
 
@@ -2193,14 +2087,12 @@ def q_stream_bloom_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
     2^18 bits, per-probe FP ~(4*27/2^18)^4 ~ 3e-14 (still ~3e-10 at 10x
     the keys); per-shard FP determinism under deliberate saturation is
     pinned by tests/test_bloom_dedup.py with a tiny filter."""
-    import tempfile
-    import uuid
-
     from kelos_on_kafka_spark.streaming.bloom_dedup import stream_bloom_dedup
 
     pane_s = 21600
-    src = tempfile.mkdtemp(prefix="bloomsh_src_")
-    (
+    stream = _file_stream(
+        spark,
+        "event_id long, ts timestamp, user_id bigint",
         _t(spark, sf_dir, "events")
         .select(
             "event_id",
@@ -2208,14 +2100,10 @@ def q_stream_bloom_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
             "user_id",
         )
         .coalesce(1)
-        .sortWithinPartitions("ts", "event_id")
-        .write.parquet(f"{src}/data")
+        .sortWithinPartitions("ts", "event_id"),
+        files_per_trigger=1,
     )
-    stream = spark.readStream.schema(
-        "event_id long, ts timestamp, user_id bigint"
-    ).option("maxFilesPerTrigger", 1).parquet(f"{src}/data")
-    name = f"bloomsh_{uuid.uuid4().hex[:12]}"
-    q = (
+    return _drain(
         stream_bloom_dedup(
             stream,
             key_col="user_id",
@@ -2226,14 +2114,7 @@ def q_stream_bloom_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
             k=4,
             n_state_shards=4,
         )
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name).select("pane_id", "key_h1", "row_id", "ts_us")
+    ).select("pane_id", "key_h1", "row_id", "ts_us")
 
 
 def q_norm_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2386,13 +2267,17 @@ def q_stream_session_dynamic(spark: SparkSession, sf_dir: str) -> DataFrame:
     with a Column gap under a watermark — sessions emit exactly once on
     close; the sentinel advances the final watermark past every real
     session.  Same oracle as the batch session_dynamic_gap."""
-    import tempfile
-    import uuid
-
     from kelos_on_kafka_spark.streaming import relational
 
-    src = tempfile.mkdtemp(prefix="sdyn_src_")
-    (
+    row = (
+        _t(spark, sf_dir, "events")
+        .agg(F.max(windowing.epoch_us("ts")).alias("hi"))
+        .first()
+    )
+    sentinel_us = int(row["hi"]) + 10 * 3600 * 1_000_000
+    stream = _file_stream(
+        spark,
+        "event_id long, user_id bigint, event_type string, ts timestamp",
         _t(spark, sf_dir, "events")
         .select(
             "event_id",
@@ -2401,43 +2286,25 @@ def q_stream_session_dynamic(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.timestamp_micros(windowing.epoch_us("ts")).alias("ts"),
         )
         .coalesce(1)
-        .sortWithinPartitions("ts", "event_id")
-        .write.parquet(f"{src}/data")
+        .sortWithinPartitions("ts", "event_id"),
+        spark.createDataFrame(
+            [(999_999_999, 999_999, "view", sentinel_us)],
+            "event_id long, user_id bigint, event_type string, us long",
+        ).select(
+            "event_id",
+            "user_id",
+            "event_type",
+            F.timestamp_micros("us").alias("ts"),
+        ).coalesce(1),
+        files_per_trigger=1,
     )
-    row = (
-        _t(spark, sf_dir, "events")
-        .agg(F.max(windowing.epoch_us("ts")).alias("hi"))
-        .first()
-    )
-    sentinel_us = int(row["hi"]) + 10 * 3600 * 1_000_000
-    spark.createDataFrame(
-        [(999_999_999, 999_999, "view", sentinel_us)],
-        "event_id long, user_id bigint, event_type string, us long",
-    ).select(
-        "event_id",
-        "user_id",
-        "event_type",
-        F.timestamp_micros("us").alias("ts"),
-    ).coalesce(1).write.parquet(f"{src}/sentinel")
-    stream = spark.readStream.schema(
-        "event_id long, user_id bigint, event_type string, ts timestamp"
-    ).option("maxFilesPerTrigger", 1).parquet(f"{src}/*")
     gap = F.when(
         F.col("event_type") == "purchase", F.lit("1 hour")
     ).otherwise(F.lit("30 minutes"))
     out = relational.stream_session_windows(
         stream, ts_col="ts", key_col="user_id", gap=gap
     )
-    name = f"sdyn_{uuid.uuid4().hex[:12]}"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name).where(F.col("user_id") != 999_999).select(
+    return _drain(out).where(F.col("user_id") != 999_999).select(
         "user_id",
         F.unix_micros("session_start").alias("session_start_us"),
         F.unix_micros("session_end").alias("session_end_us"),
@@ -2453,9 +2320,6 @@ def q_stream_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact per-pane hash-order oracle applies.  Staging pattern =
     q_stream_topn (range-partitioned sorted files + span watermark +
     sentinel)."""
-    import tempfile
-    import uuid
-
     pane_s = 43200
     ev = _t(spark, sf_dir, "events").select(
         "event_id",
@@ -2467,44 +2331,31 @@ def q_stream_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     span_s = int(row["hi"] - row["lo"]) + pane_s
     sentinel_pane = int(row["hi"] // pane_s + 2)
     sentinel_sec = sentinel_pane * pane_s + span_s
-    src = tempfile.mkdtemp(prefix="ssample_src_")
-    (
+    stream = _file_stream(
+        spark,
+        "event_id long, ts timestamp",
         ev.repartitionByRange(4, "sec")
         .sortWithinPartitions("sec", "event_id")
-        .select("event_id", F.timestamp_seconds("sec").alias("ts"))
-        .write.parquet(f"{src}/data.parquet")
+        .select("event_id", F.timestamp_seconds("sec").alias("ts")),
+        spark.createDataFrame(
+            [(999_999_999, sentinel_sec)], "event_id long, sec long"
+        ).select(
+            "event_id", F.timestamp_seconds("sec").alias("ts")
+        ).coalesce(1),
     )
-    spark.createDataFrame(
-        [(999_999_999, sentinel_sec)], "event_id long, sec long"
-    ).select(
-        "event_id", F.timestamp_seconds("sec").alias("ts")
-    ).coalesce(1).write.parquet(f"{src}/sentinel.parquet")
 
     from kelos_on_kafka_spark.streaming.topn_stream import (
         stream_pane_sample,
     )
 
-    stream = (
-        spark.readStream.schema("event_id long, ts timestamp")
-        .option("maxFilesPerTrigger", 2)
-        .parquet(f"{src}/*.parquet")
-    )
-    name = f"ssample_{uuid.uuid4().hex[:12]}"
-    q = (
+    return _drain(
         stream_pane_sample(
             stream,
             n=20,
             pane_seconds=pane_s,
             watermark_delay=f"{span_s} seconds",
         )
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name).where(
+    ).where(
         F.col("pane_id") < F.lit(sentinel_pane)
     ).select("pane_id", "sample_rank", "row_id", "priority")
 
@@ -2516,13 +2367,11 @@ def q_stream_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     deadline; deadline-passed state is watermark-evicted.  Oracle: the
     batch funnel's matched rows (single sorted staging file = in-order
     arrival, the contract the operator documents)."""
-    import tempfile
-    import uuid
-
     from kelos_on_kafka_spark.streaming.funnel_stream import stream_funnel
 
-    src = tempfile.mkdtemp(prefix="sfunnel_src_")
-    (
+    stream = _file_stream(
+        spark,
+        "event_id long, user_id bigint, ts timestamp, event_type string",
         _t(spark, sf_dir, "events")
         .select(
             "event_id",
@@ -2531,14 +2380,10 @@ def q_stream_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type",
         )
         .coalesce(1)
-        .sortWithinPartitions("ts", "event_id")
-        .write.parquet(f"{src}/data")
+        .sortWithinPartitions("ts", "event_id"),
+        files_per_trigger=1,
     )
-    stream = spark.readStream.schema(
-        "event_id long, user_id bigint, ts timestamp, event_type string"
-    ).option("maxFilesPerTrigger", 1).parquet(f"{src}/data")
-    name = f"sfunnel_{uuid.uuid4().hex[:12]}"
-    q = (
+    return _drain(
         stream_funnel(
             stream,
             key_col="user_id",
@@ -2547,14 +2392,7 @@ def q_stream_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
             steps=["click", "view", "purchase"],
             within_us=2 * DAY_US,
         )
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name).select(
+    ).select(
         "key", "s0_us", "s1_us", "s2_us", "matched", "duration_us"
     )
 
@@ -2739,9 +2577,6 @@ def q_stream_incr_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     files staged in event-time order so keeper = min doc_id (the
     stream_dedup_exact arrival contract); oracle = the batch ranking
     SQL."""
-    import tempfile
-    import uuid
-
     from kelos_on_kafka_spark.streaming.incr_dedup_stream import (
         stream_incremental_dedup,
     )
@@ -2759,36 +2594,29 @@ def q_stream_incr_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.md5("text").alias("digest")
     )
     n_docs = docs.agg(F.max("doc_id")).first()[0] + 1
-    src = tempfile.mkdtemp(prefix="sincr_src_")
-    n_files, step = 3, (n_docs + 2) // 3
-    for i in range(n_files):
-        part = new_batch.where(
-            (F.col("doc_id") >= i * step) & (F.col("doc_id") < (i + 1) * step)
+    step = (n_docs + 2) // 3
+    stream = _file_stream(
+        spark,
+        "doc_id long, ts timestamp, text string",
+        *(
+            new_batch.where(
+                (F.col("doc_id") >= i * step)
+                & (F.col("doc_id") < (i + 1) * step)
+            )
+            .coalesce(1)
+            .sortWithinPartitions("ts", "doc_id")
+            for i in range(3)
+        ),
+        files_per_trigger=1,
+    )
+    return _drain(
+        stream_incremental_dedup(
+            stream,
+            history,
+            horizon_us=10**15,
+            watermark_delay=f"{2 * n_docs} seconds",
         )
-        part.coalesce(1).sortWithinPartitions("ts", "doc_id").write.parquet(
-            f"{src}/f{i:03d}"
-        )
-    stream = (
-        spark.readStream.schema("doc_id long, ts timestamp, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/*")
     )
-    out = stream_incremental_dedup(
-        stream,
-        history,
-        horizon_us=10**15,
-        watermark_delay=f"{2 * n_docs} seconds",
-    )
-    name = f"sincr_{uuid.uuid4().hex[:12]}"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name)
 
 
 def q_event_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2938,9 +2766,6 @@ def q_stream_chained_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark >= 3.4 multi-stateful path).  Staging = q_stream_topn's
     distributed pattern (range-partitioned sorted files + span
     watermark + late sentinel)."""
-    import tempfile
-    import uuid
-
     from kelos_on_kafka_spark.streaming.relational import (
         stream_chained_window_agg,
     )
@@ -2956,24 +2781,16 @@ def q_stream_chained_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).first()
     span_s = int((row["hi"] - row["lo"]) // 1_000_000) + 3600
     sentinel_sec = int(row["hi"] // 1_000_000) + span_s + 4 * 3600
-    src = tempfile.mkdtemp(prefix="schain_src_")
-    (
-        ev.repartitionByRange(4, "ts")
-        .sortWithinPartitions("ts", "event_id")
-        .write.parquet(f"{src}/data.parquet")
-    )
-    spark.createDataFrame(
-        [(999_999_999, sentinel_sec, "click")],
-        "event_id long, sec long, event_type string",
-    ).select(
-        "event_id", F.timestamp_seconds("sec").alias("ts"), "event_type"
-    ).coalesce(1).write.parquet(f"{src}/sentinel.parquet")
-    stream = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, event_type string"
-        )
-        .option("maxFilesPerTrigger", 2)
-        .parquet(f"{src}/*.parquet")
+    stream = _file_stream(
+        spark,
+        "event_id long, ts timestamp, event_type string",
+        ev.repartitionByRange(4, "ts").sortWithinPartitions("ts", "event_id"),
+        spark.createDataFrame(
+            [(999_999_999, sentinel_sec, "click")],
+            "event_id long, sec long, event_type string",
+        ).select(
+            "event_id", F.timestamp_seconds("sec").alias("ts"), "event_type"
+        ).coalesce(1),
     )
     out = stream_chained_window_agg(
         stream,
@@ -2981,16 +2798,7 @@ def q_stream_chained_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         coarse="1 hour",
         watermark=f"{span_s} seconds",
     )
-    name = f"schain_{uuid.uuid4().hex[:12]}"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name).where(
+    return _drain(out).where(
         F.unix_micros("window_start")
         < F.lit((sentinel_sec - 3600) * 1_000_000)
     ).select(
@@ -3071,8 +2879,6 @@ def q_stream_cdc_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     that must equal the BATCH compaction of the full changelog — the
     oracle is exactly cdc_state's SQL.  Sentinel key -1 closes the
     panes and is filtered from the returned table."""
-    import tempfile
-
     from kelos_on_kafka_spark.streaming.relational import (
         stream_cdc_pane_state,
     )
@@ -3091,27 +2897,18 @@ def q_stream_cdc_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).first()
     span_s = int((row["hi"] - row["lo"]) // 1_000_000) + 43200
     sentinel_sec = int(row["hi"] // 1_000_000) + span_s + 4 * 43200
-    base = tempfile.mkdtemp(prefix="scdct_")
-    src, table, ckpt = f"{base}/src", f"{base}/table", f"{base}/ckpt"
-    (
-        ev.repartitionByRange(4, "ts")
-        .sortWithinPartitions("ts", "event_id")
-        .write.parquet(f"{src}/data.parquet")
-    )
-    spark.createDataFrame(
-        [(999_999_999, sentinel_sec, -1, False, 0.0)],
-        "event_id long, sec long, user_id long, is_del boolean, value double",
-    ).select(
-        "event_id", F.timestamp_seconds("sec").alias("ts"),
-        "user_id", "is_del", "value",
-    ).coalesce(1).write.parquet(f"{src}/sentinel.parquet")
-    stream = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, "
-            "is_del boolean, value double"
-        )
-        .option("maxFilesPerTrigger", 2)
-        .parquet(f"{src}/*.parquet")
+    stream = _file_stream(
+        spark,
+        "event_id long, ts timestamp, user_id long, "
+        "is_del boolean, value double",
+        ev.repartitionByRange(4, "ts").sortWithinPartitions("ts", "event_id"),
+        spark.createDataFrame(
+            [(999_999_999, sentinel_sec, -1, False, 0.0)],
+            "event_id long, sec long, user_id long, is_del boolean, value double",
+        ).select(
+            "event_id", F.timestamp_seconds("sec").alias("ts"),
+            "user_id", "is_del", "value",
+        ).coalesce(1),
     )
     delta = stream_cdc_pane_state(
         stream,
@@ -3124,16 +2921,21 @@ def q_stream_cdc_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         watermark=f"{span_s} seconds",
         emit_deletes=True,
     )
-    q = write_cdc_table_stream(
-        delta,
-        table,
-        ckpt,
-        key_col="user_id",
-        order_cols=["ts", "id"],
-        n_buckets=8,
-        trigger={"availableNow": True},
+    # the returned frame reads the table lazily, so it lives under the
+    # process's staging root
+    base = _scratch()
+    table = f"{base}/table"
+    _await(
+        write_cdc_table_stream(
+            delta,
+            table,
+            f"{base}/ckpt",
+            key_col="user_id",
+            order_cols=["ts", "id"],
+            n_buckets=8,
+            trigger={"availableNow": True},
+        )
     )
-    q.awaitTermination(300)
     return spark.read.parquet(table).where(F.col("user_id") >= 0).select(
         F.col("user_id").alias("key"),
         "id",
@@ -3148,9 +2950,6 @@ def q_stream_cdc_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     wins, 'error' tombstones emit nothing, pane delta emitted on
     watermark close — the upsert feed a downstream MERGE applies.
     Staging = the q_stream_topn distributed pattern."""
-    import tempfile
-    import uuid
-
     from kelos_on_kafka_spark.streaming.relational import (
         stream_cdc_pane_state,
     )
@@ -3168,26 +2967,18 @@ def q_stream_cdc_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).first()
     span_s = int((row["hi"] - row["lo"]) // 1_000_000) + 43200
     sentinel_sec = int(row["hi"] // 1_000_000) + span_s + 4 * 43200
-    src = tempfile.mkdtemp(prefix="scdc_src_")
-    (
-        ev.repartitionByRange(4, "ts")
-        .sortWithinPartitions("ts", "event_id")
-        .write.parquet(f"{src}/data.parquet")
-    )
-    spark.createDataFrame(
-        [(999_999_999, sentinel_sec, 0, False, 0.0)],
-        "event_id long, sec long, user_id long, is_del boolean, value double",
-    ).select(
-        "event_id", F.timestamp_seconds("sec").alias("ts"),
-        "user_id", "is_del", "value",
-    ).coalesce(1).write.parquet(f"{src}/sentinel.parquet")
-    stream = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, "
-            "is_del boolean, value double"
-        )
-        .option("maxFilesPerTrigger", 2)
-        .parquet(f"{src}/*.parquet")
+    stream = _file_stream(
+        spark,
+        "event_id long, ts timestamp, user_id long, "
+        "is_del boolean, value double",
+        ev.repartitionByRange(4, "ts").sortWithinPartitions("ts", "event_id"),
+        spark.createDataFrame(
+            [(999_999_999, sentinel_sec, 0, False, 0.0)],
+            "event_id long, sec long, user_id long, is_del boolean, value double",
+        ).select(
+            "event_id", F.timestamp_seconds("sec").alias("ts"),
+            "user_id", "is_del", "value",
+        ).coalesce(1),
     )
     out = stream_cdc_pane_state(
         stream,
@@ -3199,16 +2990,7 @@ def q_stream_cdc_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         pane="12 hours",
         watermark=f"{span_s} seconds",
     )
-    name = f"scdc_{uuid.uuid4().hex[:12]}"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name).where(
+    return _drain(out).where(
         F.unix_micros("window_start")
         < F.lit((sentinel_sec - 43200) * 1_000_000)
     ).select(
@@ -3366,9 +3148,6 @@ def q_stream_gap_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeps sequential event-time files only for determinism of the
     micro-batch COUNT, plus TWO sentinels (timeouts fire one batch
     after the watermark that arms them)."""
-    import tempfile
-    import uuid
-
     from kelos_on_kafka_spark.streaming.gap_stream import (
         stream_gap_monitor,
     )
@@ -3386,30 +3165,29 @@ def q_stream_gap_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     span_s = int((hi_us - lo_us) // 1_000_000) + 3600
     s1 = int(hi_us // 1_000_000) + span_s + 8 * 3600
     s2 = s1 + span_s + 8 * 3600
-    src = tempfile.mkdtemp(prefix="sgap_src_")
-    n_files = 3
-    span_us = (hi_us - lo_us) // n_files + 1
-    for i in range(n_files):
-        part = ev.where(
-            (F.unix_micros("ts") >= lo_us + i * span_us)
-            & (F.unix_micros("ts") < lo_us + (i + 1) * span_us)
-        )
-        part.coalesce(1).sortWithinPartitions(
-            "ts", "event_id"
-        ).write.parquet(f"{src}/f{i:03d}")
-    for i, sec in enumerate([s1, s2]):
-        spark.createDataFrame(
-            [(999_999_990 + i, sec, -1)],
-            "event_id long, sec long, user_id long",
-        ).select(
-            "event_id", F.timestamp_seconds("sec").alias("ts"), "user_id"
-        ).coalesce(1).write.parquet(f"{src}/z{i}")
-    stream = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/*")
+    span_us = (hi_us - lo_us) // 3 + 1
+    stream = _file_stream(
+        spark,
+        "event_id long, ts timestamp, user_id long",
+        *(
+            ev.where(
+                (F.unix_micros("ts") >= lo_us + i * span_us)
+                & (F.unix_micros("ts") < lo_us + (i + 1) * span_us)
+            )
+            .coalesce(1)
+            .sortWithinPartitions("ts", "event_id")
+            for i in range(3)
+        ),
+        *(
+            spark.createDataFrame(
+                [(999_999_990 + i, sec, -1)],
+                "event_id long, sec long, user_id long",
+            ).select(
+                "event_id", F.timestamp_seconds("sec").alias("ts"), "user_id"
+            ).coalesce(1)
+            for i, sec in enumerate([s1, s2])
+        ),
+        files_per_trigger=1,
     )
     out = stream_gap_monitor(
         stream,
@@ -3419,16 +3197,7 @@ def q_stream_gap_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         max_silence_us=4 * HOUR_US,
         watermark_delay=f"{span_s} seconds",
     )
-    name = f"sgap_{uuid.uuid4().hex[:12]}"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name).where(F.col("key") >= 0)
+    return _drain(out).where(F.col("key") >= 0)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

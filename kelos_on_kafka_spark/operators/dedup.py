@@ -601,57 +601,37 @@ def near_dup_groups(
     n_bands: int = 4,
     rows_per_band: int = 4,
     portable: bool = False,
-    pair_source: str = "lsh",
-    jaccard_num: int = 3,
-    jaccard_den: int = 10,
 ) -> DataFrame:
-    """End-to-end near-dup GROUP resolution: candidate pairs ->
-    connected components.  Returns (doc_id, group_id) for every
-    document that appears in at least one candidate pair; group_id =
-    min doc_id of the transitive group (the keeper).  This is the
-    operator a real dedup pipeline ships — pairs alone don't
+    """End-to-end near-dup GROUP resolution: MinHash + banded LSH
+    candidate pairs -> connected components.  Returns (doc_id, group_id)
+    for every document that appears in at least one candidate pair;
+    group_id = min doc_id of the transitive group (the keeper).  This is
+    the operator a real dedup pipeline ships — pairs alone don't
     deduplicate transitively.
 
-    ``pair_source`` picks the candidate stage (VERDICT r5 #5):
-
-    * ``'lsh'`` (default, the driver-green contract): MinHash + banded
-      LSH — probabilistic recall, cheapest at low thresholds; bucket
-      cap bounds skew.
-    * ``'jaccard_prefix'``: the LOSSLESS prefix-filtered exact-Jaccard
-      join (``ngram_jaccard_prefix_pairs``) at threshold
-      ``jaccard_num/jaccard_den`` — exact pair semantics for
-      semantics-critical runs.  Crossover rule (measured, sf0.1 +
-      planted-boilerplate tests): prefer it when the threshold is high
-      (t >= ~0.5, small prefixes) or when shingle doc-frequency is
-      skewed (boilerplate) — the cases where LSH needs the
-      semantics-changing df/bucket caps; prefer LSH when shingle df ~ 1
-      (near-unique text), where prefix indexing pays ~the full index
-      cost for no pruning (measured ~2x slower there)."""
-    if pair_source == "lsh":
-        sigs = minhash_signatures(
-            df,
-            id_col,
-            text_col,
-            n_hashes=n_hashes,
-            shingle_words=shingle_words,
-        )
-        pairs = lsh_candidate_pairs(
-            sigs,
-            n_bands=n_bands,
-            rows_per_band=rows_per_band,
-            portable=portable,
-        )
-    elif pair_source == "jaccard_prefix":
-        pairs = ngram_jaccard_prefix_pairs(
-            df,
-            id_col=id_col,
-            text_col=text_col,
-            shingle_words=shingle_words,
-            jaccard_num=jaccard_num,
-            jaccard_den=jaccard_den,
-        ).select("doc_a", "doc_b")
-    else:
-        raise ValueError(f"unknown pair_source: {pair_source!r}")
+    LSH recall is probabilistic and cheapest at low thresholds.  For
+    exact pair semantics, run ``connected_components`` over the
+    LOSSLESS prefix-filtered exact-Jaccard join
+    (``ngram_jaccard_prefix_pairs``) instead.  Crossover rule (measured,
+    sf0.1 + planted-boilerplate tests): prefer the prefix join when the
+    threshold is high (t >= ~0.5, small prefixes) or when shingle
+    doc-frequency is skewed (boilerplate) — the cases where LSH needs
+    the semantics-changing df/bucket caps; prefer LSH when shingle
+    df ~ 1 (near-unique text), where prefix indexing pays ~the full
+    index cost for no pruning (measured ~2x slower there)."""
+    sigs = minhash_signatures(
+        df,
+        id_col,
+        text_col,
+        n_hashes=n_hashes,
+        shingle_words=shingle_words,
+    )
+    pairs = lsh_candidate_pairs(
+        sigs,
+        n_bands=n_bands,
+        rows_per_band=rows_per_band,
+        portable=portable,
+    )
     cc = connected_components(pairs)
     return cc.select(F.col("node_id").alias("doc_id"), "group_id")
 
@@ -666,9 +646,6 @@ def dedup_decisions(
     rows_per_band: int = 4,
     portable: bool = False,
     groups: DataFrame | None = None,
-    pair_source: str = "lsh",
-    jaccard_num: int = 3,
-    jaccard_den: int = 10,
 ) -> DataFrame:
     """The composed dedup VERDICT table — one row per document:
     (doc_id, keeper_id, reason) with reason in ('keep', 'exact',
@@ -681,12 +658,9 @@ def dedup_decisions(
     LSH + connected-components pipeline — the production shape, where
     groups are materialized once per corpus snapshot and every
     downstream verdict reads the table.  Same output either way (a
-    test pins the two paths equal).
-
-    ``pair_source``: the candidate stage for the near path —
-    ``'lsh'`` (default, driver contract) or ``'jaccard_prefix'`` (the
-    lossless exact-Jaccard option at ``jaccard_num/jaccard_den``); see
-    ``near_dup_groups`` for the measured crossover rule.
+    test pins the two paths equal).  Groups built on other candidate
+    pairs (the lossless exact-Jaccard join; see ``near_dup_groups`` for
+    the crossover rule) enter the same way.
 
     Precedence is deterministic and repartition-stable: an exact
     duplicate (identical text, keeper = min doc_id of the fingerprint
@@ -717,9 +691,6 @@ def dedup_decisions(
             n_bands=n_bands,
             rows_per_band=rows_per_band,
             portable=portable,
-            pair_source=pair_source,
-            jaccard_num=jaccard_num,
-            jaccard_den=jaccard_den,
         )
     # near_dup_groups contract: columns (doc_id, group_id)
     near = groups.select("doc_id", F.col("group_id").alias("near_keeper"))

@@ -54,6 +54,29 @@ def _norm(a):
     )
 
 
+def _cosine(a, na, b, nb):
+    """Cosine of vectors ``a`` and ``b`` with norms ``na`` and ``nb``.
+    A zero-norm vector gives NULL (``try_divide``), not an ANSI
+    DIVIDE_BY_ZERO that would fail the whole query."""
+    return F.try_divide(_dot(a, b), na * nb)
+
+
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """Each probe's ``k`` best (probe_id, rank, neighbor_id) of a scored
+    candidate frame, by (cosine desc, neighbor_id asc).  A NULL cosine
+    ranks last and is dropped, as the streaming top-k drops it; the
+    filter sits after the window so Catalyst cannot push it below the
+    projection and score every pair twice."""
+    w = Window.partitionBy("probe_id").orderBy(
+        F.col("cosine").desc(), F.col("neighbor_id").asc()
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where((F.col("rank") <= k) & F.col("cosine").isNotNull())
+        .select("probe_id", "rank", "neighbor_id")
+    )
+
+
 def cosine_topk(
     embeddings: DataFrame,
     probe_ids: list[int],
@@ -89,19 +112,11 @@ def cosine_topk(
     scored = joined.select(
         "probe_id",
         "neighbor_id",
-        (
-            _dot(F.col("pvec"), F.col("vec"))
-            / (F.col("pnrm") * F.col("nrm"))
+        _cosine(
+            F.col("pvec"), F.col("pnrm"), F.col("vec"), F.col("nrm")
         ).alias("cosine"),
     )
-    w = Window.partitionBy("probe_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("probe_id", "rank", "neighbor_id")
-    )
+    return _top_k(scored, k)
 
 
 def _cells_arr(corpus: DataFrame, n_cells: int) -> DataFrame:
@@ -131,7 +146,7 @@ def _nearest_cells(vec, nrm, n: int):
             F.col("cells_arr"),
             lambda cell: F.struct(
                 F.coalesce(
-                    -F.try_divide(_dot(vec, cell["cvec"]), nrm * cell["cnrm"]),
+                    -_cosine(vec, nrm, cell["cvec"], cell["cnrm"]),
                     F.lit(float("inf")),
                 ).alias("negs"),
                 cell["cell_id"].alias("cell_id"),
@@ -199,19 +214,11 @@ def ivf_topk(
     scored = joined.select(
         "probe_id",
         "neighbor_id",
-        (
-            _dot(F.col("pvec"), F.col("vec"))
-            / (F.col("pnrm") * F.col("nrm"))
+        _cosine(
+            F.col("pvec"), F.col("pnrm"), F.col("vec"), F.col("nrm")
         ).alias("cosine"),
     )
-    w = Window.partitionBy("probe_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("probe_id", "rank", "neighbor_id")
-    )
+    return _top_k(scored, k)
 
 
 def embedding_near_dup_pairs(
@@ -294,7 +301,7 @@ def embedding_near_dup_pairs(
         left.join(right, "bucket")
         .where(F.col("vec_a") < F.col("vec_b"))
         .where(
-            _dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
+            _cosine(F.col("va"), F.col("na"), F.col("vb"), F.col("nb"))
             >= F.lit(float(threshold))
         )
         .select("vec_a", "vec_b")
@@ -377,19 +384,11 @@ def lsh_bucketed_topk(
     scored = joined.select(
         "probe_id",
         "neighbor_id",
-        (
-            _dot(F.col("pvec"), F.col("vec"))
-            / (F.col("pnrm") * F.col("nrm"))
+        _cosine(
+            F.col("pvec"), F.col("pnrm"), F.col("vec"), F.col("nrm")
         ).alias("cosine"),
     )
-    w = Window.partitionBy("probe_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("probe_id", "rank", "neighbor_id")
-    )
+    return _top_k(scored, k)
 
 
 def md5_codebooks(

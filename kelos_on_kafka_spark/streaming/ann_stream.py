@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from kelos_on_kafka_spark.operators.similarity import (
     _cells_arr,
-    _dot,
+    _cosine,
     _nearest_cells,
     _norm,
     _own_cell,
@@ -69,13 +69,11 @@ def stream_cosine_topk(
             "_ts",
             "probe_id",
             "neighbor_id",
-            # try_divide: a zero-norm vector (degenerate probe/corpus
-            # row, or the harness watermark sentinel) yields NULL
-            # cosine — sorts after every real score — instead of an
-            # ANSI DIVIDE_BY_ZERO that would kill the whole stream
-            F.try_divide(
-                _dot(F.col("pvec"), F.col("cvec")),
-                F.col("pnrm") * F.col("cnrm"),
+            # a zero-norm vector (degenerate probe/corpus row, or the
+            # harness watermark sentinel) scores NULL, dropped before
+            # the ranking
+            _cosine(
+                F.col("pvec"), F.col("pnrm"), F.col("cvec"), F.col("cnrm")
             ).alias("cosine"),
         )
     )
@@ -177,9 +175,8 @@ def stream_ivf_topk(
         "_ts",
         "probe_id",
         "neighbor_id",
-        F.try_divide(
-            _dot(F.col("pvec"), F.col("cvec")),
-            F.col("pnrm") * F.col("cnrm"),
+        _cosine(
+            F.col("pvec"), F.col("pnrm"), F.col("cvec"), F.col("cnrm")
         ).alias("cosine"),
     )
     return _windowed_topk(scored, window, k)

@@ -206,3 +206,32 @@ def test_stream_ivf_routes_via_broadcast_data_at_many_cells(spark, tmp_path):
     assert got == want
     assert len(got) > 0
     corpus.unpersist()
+
+
+def test_zero_norm_vector_is_dropped_not_divided_by(spark, tmp_path):
+    """A zero-norm vector has no cosine: the batch operators score it
+    NULL and drop it instead of raising DIVIDE_BY_ZERO under ANSI, so
+    batch cosine_topk equals the stream, which drops it too."""
+    from kelos_on_kafka_spark.operators import similarity
+
+    corpus = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0]), (2, [0.0, 0.0]), (3, [1.0, 1.0])],
+        "vec_id long, embedding array<float>",
+    )
+    ids = [0, 1, 2, 3]
+    batch = sorted(
+        map(tuple, similarity.cosine_topk(corpus, ids, k=4).collect())
+    )
+    assert batch == [
+        (0, 1, 3), (0, 2, 1), (1, 1, 3), (1, 2, 0), (3, 1, 0), (3, 2, 1)
+    ]
+    # two cells, both probed: the IVF scan covers the whole corpus
+    ivf = similarity.ivf_topk(corpus, ids, k=4, n_cells=2, nprobe=2)
+    assert sorted(map(tuple, ivf.collect())) == batch
+    similarity.lsh_bucketed_topk(corpus, ids, k=4, n_planes=1).collect()
+    pairs = similarity.embedding_near_dup_pairs(
+        corpus, threshold=0.5, n_planes=1
+    ).collect()
+    assert all(2 not in (r.vec_a, r.vec_b) for r in pairs)
+    rows = _run_stream(spark, tmp_path, corpus, ids)
+    assert sorted((r.probe_id, r.rank, r.neighbor_id) for r in rows) == batch

@@ -109,16 +109,16 @@ def test_snapshot_diff_sentinel_collision_free(spark):
 
 
 def test_dedup_decisions_prefix_pair_source(spark):
-    """VERDICT r5 #5: dedup_decisions can run its candidate stage on
-    the lossless prefix-filtered exact-Jaccard join.  On a fixture
-    where LSH's df-cap would matter (shared boilerplate), the
-    prefix-path decisions equal decisions computed from groups built
-    on the PLAIN uncapped exact-Jaccard pairs — lossless by
-    construction."""
+    """VERDICT r5 #5: dedup_decisions can take groups built on the
+    lossless prefix-filtered exact-Jaccard join.  On a fixture where
+    LSH's df-cap would matter (shared boilerplate), the prefix-path
+    decisions equal decisions computed from groups built on the PLAIN
+    uncapped exact-Jaccard pairs — lossless by construction."""
     from kelos_on_kafka_spark.operators.dedup import (
         connected_components,
         dedup_decisions,
         ngram_jaccard_pairs,
+        ngram_jaccard_prefix_pairs,
     )
 
     boiler = "all rights reserved subscribe to our newsletter today"
@@ -130,28 +130,24 @@ def test_dedup_decisions_prefix_pair_source(spark):
         (5, "an unrelated singleton document with its own words"),
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    want_groups = connected_components(
-        ngram_jaccard_pairs(
-            docs, min_jaccard_pct=30, max_doc_freq=10**9
-        ).select("doc_a", "doc_b")
-    ).select(
-        (F.col("node_id")).alias("doc_id"), "group_id"
+
+    def decisions(pairs):
+        groups = connected_components(pairs.select("doc_a", "doc_b"))
+        return sorted(
+            (r.doc_id, r.keeper_id, r.reason)
+            for r in dedup_decisions(
+                docs,
+                groups=groups.select(
+                    F.col("node_id").alias("doc_id"), "group_id"
+                ),
+            ).collect()
+        )
+
+    want = decisions(
+        ngram_jaccard_pairs(docs, min_jaccard_pct=30, max_doc_freq=10**9)
     )
-    want = sorted(
-        (r.doc_id, r.keeper_id, r.reason)
-        for r in dedup_decisions(docs, groups=want_groups).collect()
-    )
-    got = sorted(
-        (r.doc_id, r.keeper_id, r.reason)
-        for r in dedup_decisions(
-            docs, pair_source="jaccard_prefix", jaccard_num=3,
-            jaccard_den=10,
-        ).collect()
+    got = decisions(
+        ngram_jaccard_prefix_pairs(docs, jaccard_num=3, jaccard_den=10)
     )
     assert got == want
     assert any(reason != "keep" for _, _, reason in got)
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="pair_source"):
-        dedup_decisions(docs, pair_source="bogus")

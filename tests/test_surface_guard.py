@@ -13,14 +13,17 @@ name (only ``perfbench/run.py`` does, and it loads perfbench modules).
 A definition that only tests use needs an entry in ``ALLOWED`` with the
 reason it stays.
 
-The same holds for option forks.  A fork is an optional parameter of a
-package function whose name occurs in the test of an ``if`` statement or
+The same holds for option forks.  A parameter of a package function is
+tested when its name occurs in the test of an ``if`` statement or
 conditional expression in that function's body (nested functions
-included).  It is set when some call in a root or in the package passes
-it, by keyword or by position, to a function of that name (names, not
-bindings, again; a ``*args`` or ``**kwargs`` call counts as passing
-everything).  A fork that only tests set needs an entry in
-``ALLOWED_FORKS`` with the reason it stays."""
+included), or when the body passes it on, by keyword or by position, to
+a tested parameter of a function of the callee's name (followed
+transitively).  A fork is a tested optional parameter.  It is set when
+some call in a root or in the package passes it, by keyword or by
+position, to a function of that name (names, not bindings, again; a
+``*args`` or ``**kwargs`` call counts as passing everything).  A fork
+that only tests set needs an entry in ``ALLOWED_FORKS`` with the reason
+it stays."""
 
 import ast
 import functools
@@ -52,6 +55,11 @@ ALLOWED_FORKS = {
     "dedup_decisions.groups": "reuses materialized near-dup groups (test_dedup_cc, test_round6_fixes)",
     "asof_join.tolerance_us": "bounded as-of match (test_temporal)",
     "featurize_pages.html_col": "pages without an HTML column (test_features)",
+    "detect_outliers.shard_col": "multi-shard window-parallel plan (test_spark_batch)",
+    "stream_near_dup_pairs.max_bucket": "bucket size bound (test_stream_dedup)",
+    "containment_pairs.id_col": "column name; _pair_ids_packable tests its type",
+    "ngram_jaccard_pairs.id_col": "column name; _pair_ids_packable tests its type",
+    "ngram_jaccard_prefix_pairs.id_col": "column name; _pair_ids_packable tests its type",
 }
 
 
@@ -146,12 +154,18 @@ def test_allowlist_names_only_definitions_that_exist():
     assert set(ALLOWED) <= names
 
 
-def forks() -> dict[str, int | None]:
+@functools.lru_cache(maxsize=None)
+def forks(trees: tuple | None = None) -> dict[str, int | None]:
     """``{"<function>.<parameter>": <positional index, or None if
-    keyword-only>}`` of every option fork in the package."""
-    out = {}
-    for path in sorted(PACKAGE.rglob("*.py")):
-        tree = _parse(path)
+    keyword-only>}`` of every option fork in ``trees`` (default: the
+    package's modules)."""
+    if trees is None:
+        trees = [_parse(path) for path in sorted(PACKAGE.rglob("*.py"))]
+    options = {}  # "<fn>.<param>" -> positional index or None
+    slots = {}  # "<fn>.<keyword>" / "<fn>.#<position>" -> "<fn>.<param>"s
+    tested = set()
+    forwards = set()  # ("<fn>.<param>", callee slot)
+    for tree in trees:
         methods = {
             id(f)
             for c in ast.walk(tree)
@@ -161,24 +175,47 @@ def forks() -> dict[str, int | None]:
         for fn in ast.walk(tree):
             if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 continue
-            tested = {
-                n.id
-                for node in ast.walk(fn)
-                if isinstance(node, (ast.If, ast.IfExp))
-                for n in ast.walk(node.test)
-                if isinstance(n, ast.Name)
-            }
             a = fn.args
             pos = a.posonlyargs + a.args
             shift = int(id(fn) in methods)  # self / cls is not passed
             first = len(pos) - len(a.defaults)
-            for i, p in enumerate(pos[first:], first):
-                if p.arg in tested:
-                    out[f"{fn.name}.{p.arg}"] = i - shift
+            params = {p.arg for p in pos + a.kwonlyargs}
+            for i, p in enumerate(pos):
+                key = f"{fn.name}.{p.arg}"
+                slots.setdefault(key, set()).add(key)
+                slots.setdefault(f"{fn.name}.#{i - shift}", set()).add(key)
+                if i >= first:
+                    options[key] = i - shift
             for p, d in zip(a.kwonlyargs, a.kw_defaults):
-                if d is not None and p.arg in tested:
-                    out[f"{fn.name}.{p.arg}"] = None
-    return out
+                key = f"{fn.name}.{p.arg}"
+                slots.setdefault(key, set()).add(key)
+                if d is not None:
+                    options[key] = None
+            for node in ast.walk(fn):
+                if isinstance(node, (ast.If, ast.IfExp)):
+                    tested |= {
+                        f"{fn.name}.{n.id}"
+                        for n in ast.walk(node.test)
+                        if isinstance(n, ast.Name) and n.id in params
+                    }
+                elif isinstance(node, ast.Call):
+                    f = node.func
+                    callee = getattr(f, "id", None) or getattr(f, "attr", None)
+                    passed = [(f"#{i}", v) for i, v in enumerate(node.args)]
+                    passed += [(k.arg, k.value) for k in node.keywords]
+                    forwards |= {
+                        (f"{fn.name}.{v.id}", f"{callee}.{slot}")
+                        for slot, v in passed
+                        if isinstance(v, ast.Name) and v.id in params
+                    }
+    grew = True
+    while grew:
+        grew = False
+        for key, slot in forwards:
+            if key not in tested and slots.get(slot, set()) & tested:
+                tested.add(key)
+                grew = True
+    return {key: i for key, i in options.items() if key in tested}
 
 
 def _passed() -> set[str]:
@@ -220,3 +257,68 @@ def test_every_option_fork_is_set_by_a_run_path():
 
 def test_fork_allowlist_names_only_forks_that_exist():
     assert set(ALLOWED_FORKS) <= set(forks())
+
+
+def test_fork_scan_follows_forwarded_options():
+    """An option only passed on, by position or keyword and through any
+    number of calls, to a parameter that a callee tests is a fork."""
+    tree = ast.parse(
+        "def outer(n, descending=False, *, key=None):\n"
+        "    return middle(n, desc=descending, k=key)\n"
+        "def middle(n, desc, k):\n"
+        "    return inner(n, desc)\n"
+        "def inner(n, desc):\n"
+        "    return -n if desc else n\n"
+        "def plain(n, label='x'):\n"
+        "    return inner(label, False)\n"
+    )
+    assert forks((tree,)) == {"outer.descending": 1}
+
+
+HARNESS = ("_file_stream", "_await", "_drain")
+
+
+def stream_harness_uses(tree: ast.Module) -> list[str]:
+    """``"<line>: <use>"`` of every ``readStream``, ``awaitTermination``
+    and ``format("memory")`` outside the driver's streaming helpers."""
+    inside = {
+        id(n)
+        for fn in tree.body
+        if isinstance(fn, ast.FunctionDef) and fn.name in HARNESS
+        for n in ast.walk(fn)
+    }
+    out = []
+    for node in ast.walk(tree):
+        if id(node) in inside:
+            continue
+        if isinstance(node, ast.Attribute) and node.attr in (
+            "readStream",
+            "awaitTermination",
+        ):
+            out.append((node.lineno, node.attr))
+        elif (
+            isinstance(node, ast.Call)
+            and getattr(node.func, "attr", None) == "format"
+            and node.args
+            and getattr(node.args[0], "value", None) == "memory"
+        ):
+            out.append((node.lineno, 'format("memory")'))
+    return [f"{line}: {use}" for line, use in sorted(out)]
+
+
+def test_driver_streams_only_through_its_harness():
+    """Every driver streaming query stages with ``_file_stream`` and
+    runs through ``_drain`` / ``_await``, so none can return a partial
+    sink after a timeout."""
+    assert stream_harness_uses(_parse(REPO / "__spark_entry__.py")) == []
+    copied = ast.parse(
+        "def q(spark, out):\n"
+        "    q = out.writeStream.format('memory').start()\n"
+        "    q.awaitTermination(300)\n"
+        "    return spark.readStream.parquet('x')\n"
+    )
+    assert stream_harness_uses(copied) == [
+        "2: format(\"memory\")",
+        "3: awaitTermination",
+        "4: readStream",
+    ]
