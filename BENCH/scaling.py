@@ -6,9 +6,9 @@ local[N] and local[4N] on the same input, reporting throughput at both
 plus scaling efficiency = (tput_4N / tput_N) / 4.
 
 The stream is sharded (256 independent logical sub-streams by default,
-the unit of sequential consistency) and runs the streamwise plan
-(``detect_outliers_streamwise``, one task per shard group), so both
-cluster sizes have full parallelism in the order-dependent walker.
+the unit of sequential consistency) through ``detect_outliers``, one
+pane walk per shard, so both cluster sizes have full parallelism in the
+order-dependent walker.
 
 Usage:  python BENCH/scaling.py [--cpus 8 32] [--pages 240000]
 Writes one JSON line per cluster size + a summary; results are recorded
@@ -37,7 +37,7 @@ def run_once(
 
     from kelos_on_kafka_spark.config import KelosConfig
     from kelos_on_kafka_spark.functions.features import featurize_pages
-    from kelos_on_kafka_spark.operators.kelos_batch import detect_outliers_streamwise
+    from kelos_on_kafka_spark.operators.kelos_batch import detect_outliers
     from kelos_on_kafka_spark.plans.session import get_spark
 
     spark = get_spark(
@@ -57,7 +57,7 @@ def run_once(
             "features",
             (F.abs(F.xxhash64("url")) % n_shards).alias("shard"),
         )
-        return detect_outliers_streamwise(pts, KelosConfig(n=100), shard_col="shard")
+        return detect_outliers(pts, KelosConfig(n=100), shard_col="shard")
 
     # Warm-up run: JVM JIT, Python workers, OS page cache for the input.
     rows = pipeline().count()
@@ -65,7 +65,7 @@ def run_once(
 
     timings = []
     for _ in range(repeats):
-        # Neither plan caches a stage, so every timed run is a full e2e
+        # The plan caches nothing, so every timed run is a full e2e
         # execution; clearCache drops anything a caller left cached.
         t0 = time.perf_counter()
         rows = pipeline().count()

@@ -54,9 +54,7 @@ def main() -> None:
 
     from kelos_on_kafka_spark.config import KelosConfig
     from kelos_on_kafka_spark.functions.features import featurize_pages
-    from kelos_on_kafka_spark.operators.kelos_batch import (
-        detect_outliers_streamwise,
-    )
+    from kelos_on_kafka_spark.operators.kelos_batch import detect_outliers
     from kelos_on_kafka_spark.plans.session import get_spark
 
     spark = get_spark(
@@ -77,9 +75,7 @@ def main() -> None:
             "features",
             (F.abs(F.xxhash64("url")) % args.shards).alias("shard"),
         )
-        return detect_outliers_streamwise(
-            pts, KelosConfig(n=100), shard_col="shard"
-        )
+        return detect_outliers(pts, KelosConfig(n=100), shard_col="shard")
 
     pipeline().count()
     spark.catalog.clearCache()

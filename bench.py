@@ -116,10 +116,8 @@ def main() -> None:
 
     # --- flagship: end-to-end pages pipeline (throughput metric) --------
     # parquet-backed input (Iceberg scan stand-in), generated once and
-    # cached under /tmp; streamwise plan over N_SHARDS logical streams.
-    from kelos_on_kafka_spark.operators.kelos_batch import (
-        detect_outliers_streamwise,
-    )
+    # cached under /tmp; one pane walk per shard over N_SHARDS logical
+    # streams.
     from kelos_on_kafka_spark.sources.pages import ensure_pages_parquet
 
     pages_path = ensure_pages_parquet(
@@ -137,9 +135,7 @@ def main() -> None:
             "features",
             (F.abs(F.xxhash64("url")) % N_SHARDS).alias("shard"),
         )
-        return detect_outliers_streamwise(
-            pts, KelosConfig(n=100), shard_col="shard"
-        ).count()
+        return detect_outliers(pts, KelosConfig(n=100), shard_col="shard").count()
 
     kelos_run()  # warm-up: JVM JIT, Python workers, OS page cache
     t0 = time.perf_counter()

@@ -1,9 +1,9 @@
 """kelos_on_kafka_spark — a PySpark-native streaming engine with the
 query/data-processing capabilities of emanuel-metzenthin/KELOS-on-Kafka
 (KDE-based local outlier detection over sliding stream windows), built
-Spark-first: DataFrame/SQL plans, ``mapInArrow`` pane walkers and
-grouped pandas window stages around the NumPy kernel, Structured
-Streaming with watermarks and an exactly-once idempotent sink.
+Spark-first: DataFrame/SQL plans and a ``mapInArrow`` pane walker per
+shard around the NumPy kernel, Structured Streaming with watermarks and
+an exactly-once idempotent sink.
 
 Import operators from their submodules, e.g.
 ``kelos_on_kafka_spark.operators.kelos_batch.detect_outliers``.

@@ -845,19 +845,6 @@ def _point_stage(
 # ---------------------------------------------------------------------------
 
 
-def score_clusters(
-    window_clusters: "OrderedMap[int, WindowCluster]",
-    k: int,
-    n: int,
-    kernel: str = "gaussian",
-) -> Tuple["OrderedMap[int, WindowCluster]", "OrderedMap[int, bool]"]:
-    """P3..P5 for one closed window: cluster KNN -> cluster KDE -> KLOME
-    pruning.  Returns (surviving clusters, might_contain_outliers flags)."""
-    knn_clusters(window_clusters, k)
-    survivors = estimate_cluster_densities(window_clusters, KERNELS[kernel])
-    return survivors, prune_clusters(survivors, n)
-
-
 def window_pipeline(
     window_clusters: "OrderedMap[int, WindowCluster]",
     point_ids: np.ndarray,
@@ -874,7 +861,9 @@ def window_pipeline(
     reference-parity default; 'epanechnikov' is the compact-support
     extension (same bound construction, see ``_epanechnikov_raw``).
     """
-    survivors, flags = score_clusters(window_clusters, k, n, kernel)
+    knn_clusters(window_clusters, k)
+    survivors = estimate_cluster_densities(window_clusters, KERNELS[kernel])
+    flags = prune_clusters(survivors, n)
     cand_pids, cand_X = flagged_candidates(
         flags, point_ids, point_cluster_ids, point_features
     )
@@ -900,26 +889,17 @@ def window_pipeline(
 # ---------------------------------------------------------------------------
 
 
-def advance_pane(
-    state: ShardState,
-    ids: np.ndarray,
-    X: np.ndarray,
-    threshold: float,
-    k: int,
-    panes_per_window: int,
-) -> Tuple[np.ndarray, np.ndarray, np.ndarray, "OrderedMap[int, WindowCluster]"]:
-    """Close one pane of a shard: greedy clustering against the carried
-    clusters, sliding-window synthesis, carry-over update (mutates
-    ``state``).  Returns ``(ids, X, assignments, window_clusters)`` with
-    ``ids``/``X`` sorted by point id, the order ``assignments`` follows."""
-    order = np.argsort(ids, kind="stable")
-    ids, X = ids[order], X[order]
-    assignments, pane_clusters = cluster_pane(
-        ids, X, state.carry, threshold, k
-    )
-    window_clusters = aggregate_window(state, pane_clusters, panes_per_window)
-    state.carry = carry_from_window(window_clusters)
-    return ids, X, assignments, window_clusters
+def window_points(
+    ring: List[Tuple[np.ndarray, np.ndarray, np.ndarray]],
+) -> Tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """A window's points as ``(ids, cluster ids, features)``: the
+    ``(ids, assignments, X)`` of the ring's panes, oldest first."""
+    w_ids = np.concatenate([r[0] for r in ring])
+    w_cids = np.concatenate([r[1] for r in ring])
+    # an empty pane's features may be (0, 0)-shaped: leave them out
+    populated = [r[2] for r in ring if len(r[0])]
+    w_X = np.concatenate(populated) if populated else np.empty((0, 0))
+    return w_ids, w_cids, w_X
 
 
 def close_pane(
@@ -934,22 +914,25 @@ def close_pane(
     panes_per_window: int,
     kernel: str = "gaussian",
 ) -> Tuple[WindowResult, int]:
-    """``advance_pane``, then the window pipeline over the ring of the
-    last ``panes_per_window`` panes' ``(ids, assignments, X)`` — the
-    Filter stage's window store (retention = panes_per_window panes,
-    Main.java:142-148).  Mutates ``state`` and ``ring``; returns the
+    """Close one pane of a shard: greedy clustering against the carried
+    clusters, sliding-window synthesis and carry-over update, then the
+    window pipeline over the ring of the last ``panes_per_window``
+    panes' ``(ids, assignments, X)`` — the Filter stage's window store
+    (retention = panes_per_window panes, Main.java:142-148).  The pane's
+    entry, last in the ring, has its points sorted by id, the order of
+    its assignments.  Mutates ``state`` and ``ring``; returns the
     window's result and its point count."""
-    ids, X, assignments, window_clusters = advance_pane(
-        state, ids, X, threshold, k, panes_per_window
+    order = np.argsort(ids, kind="stable")
+    ids, X = ids[order], X[order]
+    assignments, pane_clusters = cluster_pane(
+        ids, X, state.carry, threshold, k
     )
+    window_clusters = aggregate_window(state, pane_clusters, panes_per_window)
+    state.carry = carry_from_window(window_clusters)
     ring.append((ids, assignments, X))
     if len(ring) > panes_per_window:
         ring.pop(0)
-    w_ids = np.concatenate([r[0] for r in ring])
-    w_cids = np.concatenate([r[1] for r in ring])
-    # an empty pane's features may be (0, 0)-shaped: leave them out
-    populated = [r[2] for r in ring if len(r[0])]
-    w_X = np.concatenate(populated) if populated else np.empty((0, 0))
+    w_ids, w_cids, w_X = window_points(ring)
     outliers, flags, cand_ids = window_pipeline(
         window_clusters, w_ids, w_cids, w_X, k, n, kernel
     )
@@ -1002,7 +985,7 @@ class PaneSequence:
     def close_before(self, bound: int, close: Callable[..., Any]) -> list:
         """Close every pane below ``bound`` that is not closed yet, in
         order, through ``close(algo, ring, pane, ids, X)``, which calls
-        ``close_pane`` or ``advance_pane``; returns its results."""
+        ``close_pane``; returns its results."""
         if self.last_closed is None:
             self.last_closed = min(self.pending, default=bound) - 1
         out = []

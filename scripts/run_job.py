@@ -18,7 +18,7 @@ spark-submit session defaults to 200, so set about one per executor
 core, as above, before a ``--mode stream`` query's first start.
 
 Modes:
-  batch        — bounded replay over a page table, streamwise physical plan
+  batch        — bounded replay over a page table, one pane walk per shard
   stream       — Structured Streaming with watermarks + exactly-once sink
   debug        — also write assignments/clusters/candidates debug tables
   dedup-stream — stateful LSH near-dup pairs over a document stream
@@ -103,7 +103,7 @@ def main() -> None:
     from kelos_on_kafka_spark.config import KelosConfig
     from kelos_on_kafka_spark.functions.features import featurize_pages
     from kelos_on_kafka_spark.operators.kelos_batch import (
-        detect_outliers_streamwise,
+        detect_outliers,
         kelos_debug_tables,
     )
     from kelos_on_kafka_spark.streaming.engine import kelos_stream
@@ -298,9 +298,7 @@ def main() -> None:
 
         def job():
             pages = spark.read.parquet(args.input)
-            return detect_outliers_streamwise(
-                to_points(pages), cfg, shard_col="shard"
-            )
+            return detect_outliers(to_points(pages), cfg, shard_col="shard")
 
         if args.bench:
             # warm-up inside the process (JVM JIT + Python workers —

@@ -13,3 +13,15 @@ def spark():
     )
     yield s
     s.stop()
+
+
+def await_stream(q, timeout: float) -> None:
+    """Wait up to ``timeout`` seconds for a streaming query to finish.
+    One still running then is stopped and fails the test, naming the
+    query, instead of leaving a partial sink to assert on and running
+    on into the next test."""
+    if not q.awaitTermination(timeout):
+        q.stop()
+        raise TimeoutError(
+            f"streaming query {q.name or q.id} still running after {timeout} s"
+        )

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from kelos_on_kafka_spark.operators.similarity import cosine_topk
 from kelos_on_kafka_spark.streaming.ann_stream import stream_cosine_topk
+from tests.conftest import await_stream
 
 BASE_S = 1_700_000_000
 DIM = 8
@@ -64,7 +65,7 @@ def _run_stream(spark, tmp_path, corpus, probe_ids, window="1 hour"):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_stream(q, 120)
     return spark.table(name).collect()
 
 
@@ -132,7 +133,7 @@ def test_stream_ivf_matches_batch_ivf(spark, tmp_path, corpus):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_stream(q, 120)
     rows = spark.table(name).where(F.col("probe_id") < 999_999).collect()
     got = sorted((r.probe_id, r.rank, r.neighbor_id) for r in rows)
     want = sorted(
@@ -194,7 +195,7 @@ def test_stream_ivf_routes_via_broadcast_data_at_many_cells(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_stream(q, 120)
     rows = spark.table(name).where(F.col("probe_id") < 999_999).collect()
     got = sorted((r.probe_id, r.rank, r.neighbor_id) for r in rows)
     want = sorted(

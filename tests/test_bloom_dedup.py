@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from kelos_on_kafka_spark.streaming import bloom_dedup
+from tests.conftest import await_stream
 
 
 def _rows():
@@ -62,7 +63,7 @@ def _run_stream(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_stream(q, 120)
     return spark.table(name).collect()
 
 
@@ -159,7 +160,7 @@ def test_bloom_dedup_multi_chunk_batches_keep_global_order(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        await_stream(q, 120)
         got = sorted(
             (r.pane_id, r.key_h1, r.row_id, r.ts_us)
             for r in spark.table(name).collect()
@@ -267,8 +268,7 @@ def test_bloom_dedup_resumes_from_checkpoint(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
-
+        await_stream(q, 120)
     _write(rows[:split], "f0")
     _run()
     phase1 = sorted(

@@ -4,6 +4,7 @@ streaming query, and the materialized parquet table equals
 ``cdc_compact`` of the full changelog, across a kill/resume."""
 
 from pyspark.sql import functions as F
+from tests.conftest import await_stream
 
 BASE = 1_700_006_400  # pane-aligned
 
@@ -71,8 +72,7 @@ def test_stream_cdc_table_kill_resume_equals_batch_compact(
             n_buckets=4,
             trigger={"availableNow": True},
         )
-        q.awaitTermination(180)
-
+        await_stream(q, 180)
     run_phase()  # phase 1: first half, then the query stops (kill)
     ev.where(F.unix_micros("ts") >= mid * 1_000_000).coalesce(
         1

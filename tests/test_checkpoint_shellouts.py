@@ -37,6 +37,7 @@ from kelos_on_kafka_spark.plans.session import get_spark
 from kelos_on_kafka_spark.sources.points import gmm_points
 from kelos_on_kafka_spark.streaming.engine import kelos_stream
 from kelos_on_kafka_spark.streaming.sink import write_outlier_stream
+from tests.conftest import await_stream
 
 base = sys.argv[1]
 spark = get_spark()  # SPARK_GRAFT_CPUS=2: local[2], one shuffle partition per core
@@ -66,7 +67,7 @@ def run():
         os.path.join(base, "ckpt"),
         trigger={"availableNow": True},
     )
-    q.awaitTermination(300)
+    await_stream(q, 300)
     assert q.exception() is None, q.exception()
     return q
 

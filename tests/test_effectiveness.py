@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from kelos_on_kafka_spark.config import KelosConfig
-from kelos_on_kafka_spark.operators.kelos_batch import detect_outliers_streamwise
+from kelos_on_kafka_spark.operators.kelos_batch import detect_outliers
 
 # The reference's KDD-HTTP configuration (README.md:182): threshold
 # 0.095, window 6000 / slide 2000.  k=100 — the README's own
@@ -61,7 +61,7 @@ def test_precision_at_o_on_http_like_data(spark):
     sdf = spark.createDataFrame(
         pdf, schema="id long, ts double, features array<double>"
     ).select("id", F.timestamp_seconds("ts").alias("ts"), "features")
-    rows = detect_outliers_streamwise(sdf, CFG).collect()
+    rows = detect_outliers(sdf, CFG).collect()
 
     truth = dict(zip(ids.tolist(), labels.tolist()))
     pane_of = dict(zip(ids.tolist(), (ids // 2000).tolist()))
@@ -109,7 +109,7 @@ def test_precision_holds_under_epanechnikov_kernel(spark):
         n=100,
         kernel="epanechnikov",
     )
-    rows = detect_outliers_streamwise(sdf, cfg).collect()
+    rows = detect_outliers(sdf, cfg).collect()
     truth = dict(zip(ids.tolist(), labels.tolist()))
     pane_of = dict(zip(ids.tolist(), (ids // 2000).tolist()))
     by_window = {}

@@ -10,6 +10,7 @@ from kelos_on_kafka_spark.operators.temporal import (
     absence_matches,
     gap_tolerant_matches,
 )
+from tests.conftest import await_stream
 
 
 @pytest.fixture()
@@ -132,5 +133,5 @@ def test_stream_ann_on_empty_corpus(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(60)
+    await_stream(q, 60)
     assert spark.table(name).count() == 0

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from kelos_on_kafka_spark.operators.temporal import funnel_steps
 from kelos_on_kafka_spark.streaming.funnel_stream import stream_funnel
+from tests.conftest import await_stream
 
 BASE = 1_700_000_000
 
@@ -63,7 +64,7 @@ def _run_stream(spark, tmp_path, ev, steps, within_us, n_files=3):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_stream(q, 120)
     return spark.table(name).collect()
 
 
@@ -196,7 +197,7 @@ def test_stream_funnel_evicts_never_completing_chain_state(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_stream(q, 120)
     assert spark.table(name).count() == 0  # chain never completed
     state_rows = q.lastProgress["stateOperators"][0]["numRowsTotal"]
     # key 1's partial-chain state must be gone; at most the final

@@ -10,6 +10,7 @@ import random
 import uuid
 
 from pyspark.sql import functions as F
+from tests.conftest import await_stream
 
 BASE = 1_700_000_000  # epoch seconds
 
@@ -52,7 +53,7 @@ def _run(spark, src, min_gap_s, silence_s, delay_s):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_stream(q, 120)
     return sorted(
         (
             r.key,

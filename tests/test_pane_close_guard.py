@@ -1,7 +1,7 @@
 """The pane-close state machine (greedy clustering -> window synthesis ->
-carry-over) has one implementation: ``core.advance_pane``, which
-``core.close_pane`` wraps.  Every engine closes panes through them, so
-no module outside ``core.py`` calls the three steps itself.  Panes are
+carry-over -> window pipeline) has one implementation:
+``core.close_pane``.  Every engine closes panes through it, so no module
+outside ``core.py`` calls the three pane steps itself.  Panes are
 buffered and sequenced only by ``core.PaneSequence``, so no module
 outside ``core.py`` builds a ``core.ShardState`` of its own."""
 

@@ -11,9 +11,7 @@ import pytest
 
 from kelos_on_kafka_spark import core
 from kelos_on_kafka_spark.config import KelosConfig
-from kelos_on_kafka_spark.operators.kelos_batch import (
-    detect_outliers_streamwise,
-)
+from kelos_on_kafka_spark.operators.kelos_batch import detect_outliers
 from kelos_on_kafka_spark.sources.csv_points import read_reference_csv
 
 REF_CSV = "/root/reference/gmm_test_data_unlabeled.csv"
@@ -52,7 +50,7 @@ def test_engine_on_reference_gmm_matches_oracle(spark, ref_points):
     df = read_reference_csv(spark, REF_CSV, elements_per_window=3000).where(
         f"id < {N_ROWS}"
     )
-    got_rows = detect_outliers_streamwise(df, CFG).collect()
+    got_rows = detect_outliers(df, CFG).collect()
     got = {}
     for r in got_rows:
         got.setdefault(r.window_id - 170_000_000, []).append(
@@ -83,7 +81,7 @@ def test_detected_outliers_overlap_lof_labels(spark):
     df = read_reference_csv(
         spark, REF_CSV, elements_per_window=3000, cfg=KelosConfig(k=100)
     ).where(f"id < {N_ROWS}")
-    rows = detect_outliers_streamwise(df, KelosConfig(k=100)).collect()
+    rows = detect_outliers(df, KelosConfig(k=100)).collect()
     full = [r for r in rows if (r.window_id - 170_000_000) >= 2]
     assert full
     hits = sum(1 for r in full if r.point_id in lof_out)

@@ -5,6 +5,7 @@ parity is covered separately by tests/test_entry_oracle.py)."""
 
 import pytest
 from pyspark.sql import functions as F
+from tests.conftest import await_stream
 
 
 def test_bigram_rarity_hand_computed(spark):
@@ -410,7 +411,7 @@ def test_stream_gap_monitor_closed_and_censored(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_stream(q, 120)
     got = sorted(
         (r.key, r.gap_start_us - BASE * 1_000_000 if r.gap_us > 0
          else r.gap_start_us - BASE * 1_000_000, r.gap_end_us
@@ -484,7 +485,7 @@ def test_stream_cdc_pane_state_semantics(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_stream(q, 120)
     got = sorted(
         (int(r.window_start.timestamp()) - BASE, r.key, r.id, r.value)
         for r in spark.table(name).collect()
@@ -545,8 +546,7 @@ def test_stream_cdc_resume_from_checkpoint_exactly_once(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(180)
-
+        await_stream(q, 180)
     run_phase()
     # phase 2: rest of the data + a far-future sentinel to close panes
     ev.where(F.unix_micros("ts") >= mid * 1_000_000).coalesce(1).write.parquet(
@@ -630,7 +630,7 @@ def test_stream_chained_agg_matches_batch_double_grouping(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    await_stream(q, 180)
     res = spark.table(name).where(
         F.unix_micros("window_start")
         < (BASE + 30 * 3600) * 1_000_000

@@ -6,6 +6,7 @@ import uuid
 import pytest
 
 from pyspark.sql import functions as F
+from tests.conftest import await_stream
 
 
 def test_canonical_url_rules(spark):
@@ -124,7 +125,7 @@ def _run_incr_stream(spark, tmp_path, files, history, **kw):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_stream(q, 120)
     return {r.doc_id: r.status for r in spark.table(name).collect()}
 
 

@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from kelos_on_kafka_spark.streaming.topn_stream import stream_pane_sample
+from tests.conftest import await_stream
 
 BASE = 1_700_000_000
 
@@ -52,7 +53,7 @@ def test_stream_sample_matches_hash_order(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_stream(q, 120)
     got = sorted(
         (r.pane_id, r.sample_rank, r.row_id, r.priority)
         for r in spark.table(name).collect()
@@ -121,7 +122,7 @@ def test_stream_sample_priority_column_weighted(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_stream(q, 120)
     got = sorted(
         (r.row_id, r.priority)
         for r in spark.table(name).collect()

@@ -1,8 +1,9 @@
 """Spark batch engine vs the pure-NumPy oracle: the engine must reproduce
 the oracle's windows, outlier ids, ranks and KLOME scores exactly (both
 paths call the same kernel; the assertion checks the Spark plumbing —
-pane grouping, window explode, the grouped window stage, Arrow
-round-trips)."""
+shard sort, the pane walk across Arrow batches, Arrow round-trips)."""
+
+import contextlib
 
 import numpy as np
 import pytest
@@ -11,7 +12,7 @@ from kelos_on_kafka_spark import core
 from kelos_on_kafka_spark.config import KelosConfig
 from kelos_on_kafka_spark.operators.kelos_batch import (
     detect_outliers,
-    detect_outliers_streamwise,
+    kelos_debug_tables,
 )
 from kelos_on_kafka_spark.sources.points import gmm_points, to_spark_points
 
@@ -20,9 +21,9 @@ CFG = KelosConfig(
 )
 
 
-def oracle_outliers(pdf, cfg):
+def oracle_results(pdf, cfg):
     feats = np.stack([np.asarray(f) for f in pdf["features"]])
-    results = core.run_stream(
+    return core.run_stream(
         pdf["id"].to_numpy(),
         pdf["ts"].to_numpy(),
         feats,
@@ -32,27 +33,28 @@ def oracle_outliers(pdf, cfg):
         k=cfg.k,
         n=cfg.n,
     )
+
+
+def oracle_outliers(pdf, cfg):
     return {
         r.pane_id: [(o.rank, o.point_id, o.klome, o.density) for o in r.outliers]
-        for r in results
+        for r in oracle_results(pdf, cfg)
     }
 
 
-@pytest.mark.parametrize(
-    "n_points,epw,gap_panes,arrow_batch",
-    [
-        pytest.param(600, 600, 0, None, id="600-600"),
-        pytest.param(1500, 600, 0, None, id="1500-600"),
-        # the second half of the points 20 panes later: the shard goes
-        # quiet in between, a stretch the walkers skip and the oracle
-        # closes pane by pane
-        pytest.param(1200, 600, 20, None, id="gap"),
-        # 37-row Arrow batches: panes split across walker input batches,
-        # and each window group arrives in several Arrow chunks
-        pytest.param(1500, 600, 0, 37, id="small-arrow-batches"),
-    ],
-)
-def test_batch_engine_matches_oracle(spark, n_points, epw, gap_panes, arrow_batch):
+CASES = {
+    "600-600": (600, 600, 0, None),
+    "1500-600": (1500, 600, 0, None),
+    # the second half of the points 20 panes later: the shard goes
+    # quiet in between, a stretch the walker skips and the oracle
+    # closes pane by pane
+    "gap": (1200, 600, 20, None),
+    # 37-row Arrow batches: panes split across walker input batches
+    "small-arrow-batches": (1500, 600, 0, 37),
+}
+
+
+def case_points(n_points, epw, gap_panes):
     pdf = gmm_points(
         n=n_points,
         seed=42,
@@ -61,78 +63,113 @@ def test_batch_engine_matches_oracle(spark, n_points, epw, gap_panes, arrow_batc
         pane_seconds=CFG.pane_seconds,
     )
     pdf.loc[n_points // 2:, "ts"] += gap_panes * CFG.pane_seconds
-    expected = oracle_outliers(pdf, CFG)
-    expected_nonempty = {w: v for w, v in expected.items() if v}
+    return pdf
 
-    sdf = to_spark_points(spark, pdf)
+
+@contextlib.contextmanager
+def arrow_batch_rows(spark, arrow_batch):
+    """Arrow batches of ``arrow_batch`` rows (None: the session's) for
+    the block."""
     batch_conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
     old_batch = spark.conf.get(batch_conf)
     try:
         if arrow_batch is not None:
             spark.conf.set(batch_conf, str(arrow_batch))
-        for operator in (detect_outliers, detect_outliers_streamwise):
-            got_rows = operator(sdf, CFG).orderBy("window_id", "rank").collect()
-            got = {}
-            for row in got_rows:
-                got.setdefault(row.window_id, []).append(
-                    (row["rank"], row.point_id, row.klome, row.density)
-                )
-
-            assert set(got) == set(expected_nonempty), operator.__name__
-            for w in expected_nonempty:
-                assert got[w] == expected_nonempty[w], (operator.__name__, w)
+        yield
     finally:
         spark.conf.set(batch_conf, old_batch)
 
 
-def test_window_parallel_plan_has_no_cogroup_or_cache(spark):
-    """``detect_outliers`` reads stage A's rows in one grouped Arrow
-    window stage: no cogroup of two stage-A branches, and no cached
-    stage A for that cogroup to read twice."""
+@pytest.mark.parametrize(
+    "n_points,epw,gap_panes,arrow_batch",
+    [pytest.param(*args, id=case) for case, args in CASES.items()],
+)
+def test_batch_engine_matches_oracle(spark, n_points, epw, gap_panes, arrow_batch):
+    pdf = case_points(n_points, epw, gap_panes)
+    expected = oracle_outliers(pdf, CFG)
+    expected_nonempty = {w: v for w, v in expected.items() if v}
+
+    sdf = to_spark_points(spark, pdf)
+    with arrow_batch_rows(spark, arrow_batch):
+        got_rows = detect_outliers(sdf, CFG).orderBy("window_id", "rank").collect()
+    got = {}
+    for row in got_rows:
+        got.setdefault(row.window_id, []).append(
+            (row["rank"], row.point_id, row.klome, row.density)
+        )
+
+    assert set(got) == set(expected_nonempty)
+    for w in expected_nonempty:
+        assert got[w] == expected_nonempty[w], w
+
+
+def test_batch_plans_walk_each_shard_once(spark):
+    """``detect_outliers`` is one pane walk per shard: one ``MapInArrow``
+    after the shard sort, with no grouped window stage and no explode
+    of points onto windows.  ``kelos_debug_tables``' three tables read
+    one cached walk: reading all three persists one RDD."""
     sdf = to_spark_points(spark, gmm_points(n=300, seed=3, elements_per_window=300))
     plan = detect_outliers(sdf, CFG)._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapCoGroupsInPandas" not in plan, plan
-    assert "InMemoryRelation" not in plan and "InMemoryTableScan" not in plan, plan
-    assert plan.count("FlatMapGroupsInArrow") == 1, plan
+    assert plan.count("MapInArrow") == 1, plan
+    assert "FlatMapGroupsInArrow" not in plan and "Generate" not in plan, plan
+
+    spark.catalog.clearCache()
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs())
+    try:
+        for table in kelos_debug_tables(sdf, CFG).values():
+            table.collect()
+            plan = table._jdf.queryExecution().executedPlan().toString()
+            assert "InMemoryTableScan" in plan, plan
+        after = set(jsc.getPersistentRDDs())
+        assert len(after - before) == 1, after - before
+    finally:
+        spark.catalog.clearCache()
 
 
-def test_streamwise_plan_matches_window_parallel_plan(spark):
-    from kelos_on_kafka_spark.operators.kelos_batch import (
-        detect_outliers_streamwise,
-    )
-
-    pdf = gmm_points(n=900, seed=13, elements_per_window=600)
-    sdf = to_spark_points(spark, pdf)
-    a = detect_outliers(sdf, CFG).orderBy("window_id", "rank").collect()
-    b = (
-        detect_outliers_streamwise(sdf, CFG)
-        .orderBy("window_id", "rank")
-        .collect()
-    )
-    assert [(r.window_id, r["rank"], r.point_id, r.klome, r.density) for r in a] == [
-        (r.window_id, r["rank"], r.point_id, r.klome, r.density) for r in b
-    ]
-    assert len(a) > 0
-
-
-def test_debug_tables_match_oracle_intermediates(spark):
-    from kelos_on_kafka_spark.operators.kelos_batch import kelos_debug_tables
-
-    pdf = gmm_points(n=600, seed=42, elements_per_window=600)
+def replay_assignments(pdf, cfg):
+    """``(pane, point, cluster)`` of every point, from ``core.close_pane``
+    over every pane of ``pdf`` in order."""
+    pane_ids = np.floor(pdf["ts"].to_numpy() / cfg.pane_seconds).astype(np.int64)
+    ids = pdf["id"].to_numpy(dtype=np.int64)
     feats = np.stack([np.asarray(f) for f in pdf["features"]])
-    oracle = core.run_stream(
-        pdf["id"].to_numpy(), pdf["ts"].to_numpy(), feats,
-        pane_seconds=10, panes_per_window=3,
-        threshold=0.25, k=20, n=20,
-    )
-    tabs = kelos_debug_tables(to_spark_points(spark, pdf), CFG)
+    state, ring, out = core.ShardState(), [], []
+    for pane in range(pane_ids.min(), pane_ids.max() + 1):
+        sel = pane_ids == pane
+        core.close_pane(
+            state, ring, pane, ids[sel], feats[sel], cfg.distance_threshold,
+            cfg.k, cfg.n, cfg.panes_per_window, cfg.kernel,
+        )
+        out += [(pane, int(p), int(c)) for p, c in zip(ring[-1][0], ring[-1][1])]
+    return out
 
-    # assignments: every point assigned once per pane, cluster ids match
-    arows = tabs["assignments"].collect()
-    assert len(arows) == len(pdf)
+
+@pytest.mark.parametrize(
+    "n_points,epw,gap_panes,arrow_batch",
+    [
+        pytest.param(*CASES[case], id=case)
+        for case in ("600-600", "gap", "small-arrow-batches")
+    ],
+)
+def test_debug_tables_match_oracle_intermediates(
+    spark, n_points, epw, gap_panes, arrow_batch
+):
+    pdf = case_points(n_points, epw, gap_panes)
+    oracle = oracle_results(pdf, CFG)
+    with arrow_batch_rows(spark, arrow_batch):
+        tabs = kelos_debug_tables(to_spark_points(spark, pdf), CFG)
+        arows, crows, krows = (
+            tabs[name].collect() for name in ("assignments", "clusters", "candidates")
+        )
+    spark.catalog.clearCache()
+
+    # assignments: every point assigned once, in its pane, to the
+    # cluster the pane close gave it
+    got_a = [(r.pane_id, r.point_id, r.cluster_id) for r in arows]
+    assert len(got_a) == len(pdf)
+    assert sorted(got_a) == sorted(replay_assignments(pdf, CFG))
 
     # clusters: densities/bounds/flags per window match the oracle
-    crows = tabs["clusters"].collect()
     got = {
         (r.window_id, r.cluster_id): (
             r.size, r.density, r.min_density_bound,
@@ -140,6 +177,7 @@ def test_debug_tables_match_oracle_intermediates(spark):
         )
         for r in crows
     }
+    assert set(got) == {(res.pane_id, cid) for res in oracle for cid in res.flags}
     for res in oracle:
         survivors = {
             cid: wc
@@ -153,7 +191,6 @@ def test_debug_tables_match_oracle_intermediates(spark):
             ), (res.pane_id, cid)
 
     # candidates: the flagged-cluster semi-join matches
-    krows = tabs["candidates"].collect()
     got_c = {}
     for r in krows:
         got_c.setdefault(r.window_id, set()).add(r.point_id)
@@ -220,7 +257,6 @@ def test_window_bounds_session_timezone_independent(spark):
     assert utc == shifted and len(utc) > 0
 
 
-@pytest.mark.parametrize("operator", ["detect_outliers", "detect_outliers_streamwise"])
 @pytest.mark.parametrize(
     "features",
     [
@@ -230,13 +266,11 @@ def test_window_bounds_session_timezone_independent(spark):
     ],
     ids=["null", "ragged"],
 )
-def test_malformed_feature_lists_raise(spark, operator, features):
+def test_malformed_feature_lists_raise(spark, features):
     """The pane walker reads features from the Arrow list's flat values;
     a null or ragged list must fail loudly, naming the column, instead of
     pairing points with another point's features."""
     import datetime
-
-    from kelos_on_kafka_spark.operators import kelos_batch
 
     ts = datetime.datetime(2024, 1, 1, tzinfo=datetime.timezone.utc)
     sdf = spark.createDataFrame(
@@ -246,4 +280,4 @@ def test_malformed_feature_lists_raise(spark, operator, features):
     # a worker error reaches the driver as a PythonException, possibly
     # wrapped in a Py4JJavaError
     with pytest.raises(Exception, match="ValueError: features column"):
-        getattr(kelos_batch, operator)(sdf, CFG).collect()
+        detect_outliers(sdf, CFG).collect()

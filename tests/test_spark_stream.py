@@ -22,6 +22,7 @@ from kelos_on_kafka_spark.streaming.sink import (
     write_outlier_batch,
     write_outlier_stream,
 )
+from tests.conftest import await_stream
 
 CFG = KelosConfig(n=15)
 CHECKPOINT_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
@@ -104,8 +105,7 @@ def test_stream_matches_batch(spark, tmp_path):
     q = write_outlier_stream(
         out, sink, ckpt, trigger={"availableNow": True}
     )
-    q.awaitTermination(300)
-
+    await_stream(q, 300)
     got = sorted(
         (r.window_id, r["rank"], r.point_id, r.klome)
         for r in spark.read.parquet(sink).collect()
@@ -135,7 +135,7 @@ def test_stream_resume_from_checkpoint_exactly_once(spark, tmp_path):
         q = write_outlier_stream(
             out, sink, ckpt, trigger={"availableNow": True}
         )
-        q.awaitTermination(300)
+        await_stream(q, 300)
     finally:
         spark.conf.set(CHECKPOINT_MANAGER, session_manager)
     n_phase1 = (
@@ -164,8 +164,7 @@ def test_stream_resume_from_checkpoint_exactly_once(spark, tmp_path):
 
     out2 = kelos_stream(_read_stream(spark, src), CFG)
     q2 = write_outlier_stream(out2, sink, ckpt, trigger={"availableNow": True})
-    q2.awaitTermination(300)
-
+    await_stream(q2, 300)
     rows = spark.read.parquet(sink).collect()
     got = sorted(
         (r.window_id, r["rank"], r.point_id, r.klome)
@@ -195,9 +194,7 @@ def test_null_feature_list_fails_the_query(spark, tmp_path):
         trigger={"availableNow": True},
     )
     with pytest.raises(Exception, match="ValueError: features column"):
-        q.awaitTermination(300)
-
-
+        await_stream(q, 300)
 def test_sink_runs_each_micro_batch_once(spark, tmp_path):
     """The sink executes each micro-batch's plan once: a row count
     observed on the outlier stream equals the rows that batch wrote (an
@@ -216,7 +213,7 @@ def test_sink_runs_each_micro_batch_once(spark, tmp_path):
         q = write_outlier_stream(
             out, sink, ckpt, trigger={"availableNow": True}
         )
-        q.awaitTermination(300)
+        await_stream(q, 300)
         assert q.exception() is None
         return {
             p["batchId"]: p["observedMetrics"]["emitted"]["rows"]
@@ -272,7 +269,7 @@ def test_sink_keeps_every_shards_rows_of_a_window(spark, tmp_path):
     q = write_outlier_stream(
         out, sink, str(tmp_path / "ckpt"), trigger={"availableNow": True}
     )
-    q.awaitTermination(300)
+    await_stream(q, 300)
     assert q.exception() is None
 
     emitted, batches = Counter(), {}
@@ -376,8 +373,7 @@ def test_late_rows_beyond_watermark_are_dropped(spark, tmp_path):
     # run phase 1 so the watermark advances past pane 0
     out = kelos_stream(_read_stream(spark, src), CFG)
     q = write_outlier_stream(out, sink, ckpt, trigger={"availableNow": True})
-    q.awaitTermination(300)
-
+    await_stream(q, 300)
     # a late row for pane 0 arrives after everything closed
     late = pd.DataFrame(
         {"id": [9_999_999], "ts": [EPOCH + 1.0], "features": [[0.0, 0.0]]}
@@ -395,8 +391,7 @@ def test_late_rows_beyond_watermark_are_dropped(spark, tmp_path):
         ckpt,
         trigger={"availableNow": True},
     )
-    q2.awaitTermination(300)
-
+    await_stream(q2, 300)
     got = sorted(
         (r.window_id, r["rank"], r.point_id, r.klome)
         for r in spark.read.parquet(sink).collect()
@@ -416,7 +411,7 @@ def test_stream_lineage_columns(spark, tmp_path):
     _write_point_files(spark, full, src, n_files=2)
     out = kelos_stream(_read_stream(spark, src), CFG)
     q = write_outlier_stream(out, sink, ckpt, trigger={"availableNow": True})
-    q.awaitTermination(300)
+    await_stream(q, 300)
     df = spark.read.parquet(sink)
     assert {"n_window_points", "n_clusters", "n_candidates", "batch_id"} <= set(
         df.columns

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from kelos_on_kafka_spark.operators import dedup
 from kelos_on_kafka_spark.streaming import dedup_stream
+from tests.conftest import await_stream
 
 SF = "/root/testdata/sf0.001"
 EPOCH = 1_000_000
@@ -69,7 +70,7 @@ def _run_stream(spark, pdf, tmp_path, n_files=4, **kwargs):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    await_stream(q, 180)
     return spark.table(name)
 
 
@@ -152,8 +153,7 @@ def test_resume_from_checkpoint_exactly_once(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(180)
-
+        await_stream(q, 180)
     write_file(pdf.iloc[:2], "f00")
     run()  # phase 1: docs 1, 2 -> pair (1,2) per band
     write_file(pdf.iloc[2:], "f01")

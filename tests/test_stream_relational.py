@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from kelos_on_kafka_spark.streaming import relational as R
+from tests.conftest import await_stream
 
 EPOCH = 1_000_000
 
@@ -71,7 +72,7 @@ def _run(spark, df, sink, ckpt):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(240)
+    await_stream(q, 240)
     return spark.read.parquet(sink)
 
 

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from kelos_on_kafka_spark.streaming.topn_stream import stream_topn_per_window
+from tests.conftest import await_stream
 
 EPOCH = 1_000_000
 
@@ -52,7 +53,7 @@ def test_stream_topn_matches_batch_window(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    await_stream(q, 180)
     max_real_pane = int((EPOCH + 9_000) // 20)
     got = sorted(
         (r["pane_id"], r["rank"], r["event_id"], r["value"])

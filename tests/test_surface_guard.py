@@ -11,7 +11,7 @@ reports as unreached is unreached, unless something imports by a computed
 name (only ``perfbench/run.py`` does, and it loads perfbench modules).
 
 A definition that only tests use needs an entry in ``ALLOWED`` with the
-reason it stays.
+reason it stays; an entry whose definition a run path reaches is stale.
 
 The same holds for option forks.  A parameter of a package function is
 tested when its name occurs in the test of an ``if`` statement or
@@ -23,7 +23,7 @@ some call in a root or in the package passes it, by keyword or by
 position, to a function of that name (names, not bindings, again; a
 ``*args`` or ``**kwargs`` call counts as passing everything).  A fork
 that only tests set needs an entry in ``ALLOWED_FORKS`` with the reason
-it stays."""
+it stays; an entry for a fork that a run path sets is stale."""
 
 import ast
 import functools
@@ -55,7 +55,6 @@ ALLOWED_FORKS = {
     "dedup_decisions.groups": "reuses materialized near-dup groups (test_dedup_cc, test_round6_fixes)",
     "asof_join.tolerance_us": "bounded as-of match (test_temporal)",
     "featurize_pages.html_col": "pages without an HTML column (test_features)",
-    "detect_outliers.shard_col": "multi-shard window-parallel plan (test_spark_batch)",
     "stream_near_dup_pairs.max_bucket": "bucket size bound (test_stream_dedup)",
     "containment_pairs.id_col": "column name; _pair_ids_packable tests its type",
     "ngram_jaccard_pairs.id_col": "column name; _pair_ids_packable tests its type",
@@ -110,7 +109,7 @@ def _parse(path: pathlib.Path) -> ast.Module:
 
 def unreached() -> dict[str, int]:
     """``{"<module path>:<name>": <definition lines>}`` of every top-level
-    package definition no root reaches and ``ALLOWED`` does not name."""
+    package definition no root reaches."""
     defs = []  # (where, name, node)
     used = set()
     for path in sorted(PACKAGE.rglob("*.py")):
@@ -134,24 +133,22 @@ def unreached() -> dict[str, int]:
     return {
         f"{where}:{name}": node.end_lineno - node.lineno + 1
         for where, name, node in defs
-        if (where, name) not in reached and name not in ALLOWED
+        if (where, name) not in reached
     }
 
 
 def test_every_package_definition_is_reached_from_a_run_path():
-    dead = unreached()
+    dead = {k: v for k, v in unreached().items() if k.split(":")[1] not in ALLOWED}
     assert not dead, f"{sum(dead.values())} unreached lines: {sorted(dead)}"
 
 
 def test_allowlist_names_only_definitions_that_exist():
-    names = {
-        name
-        for path in PACKAGE.rglob("*.py")
-        for node in _parse(path).body
-        if isinstance(node, DEFS)
-        for name in _def_names(node)
-    }
-    assert set(ALLOWED) <= names
+    """Every ``ALLOWED`` entry names a definition that exists and that
+    no run path reaches; an entry for one that is gone or reached is
+    stale."""
+    unreached_names = {where.split(":")[1] for where in unreached()}
+    stale = sorted(set(ALLOWED) - unreached_names)
+    assert not stale, f"ALLOWED names no unreached definition: {stale}"
 
 
 @functools.lru_cache(maxsize=None)
@@ -236,8 +233,7 @@ def _passed() -> set[str]:
 
 
 def unset_forks() -> list[str]:
-    """Every fork no run path or package call sets and ``ALLOWED_FORKS``
-    does not name."""
+    """Every fork no run path or package call sets."""
     got = _passed()
     out = []
     for fork, i in forks().items():
@@ -245,18 +241,21 @@ def unset_forks() -> list[str]:
         ways = {fork, f"{fn}.**"}
         if i is not None:
             ways |= {f"{fn}.#{i}", f"{fn}.*"}
-        if not ways & got and fork not in ALLOWED_FORKS:
+        if not ways & got:
             out.append(fork)
     return sorted(out)
 
 
 def test_every_option_fork_is_set_by_a_run_path():
-    unset = unset_forks()
+    unset = [fork for fork in unset_forks() if fork not in ALLOWED_FORKS]
     assert not unset, f"option forks only tests set: {unset}"
 
 
 def test_fork_allowlist_names_only_forks_that_exist():
-    assert set(ALLOWED_FORKS) <= set(forks())
+    """Every ``ALLOWED_FORKS`` entry names a fork that exists and that no
+    run path sets; an entry for one that is gone or set is stale."""
+    stale = sorted(set(ALLOWED_FORKS) - set(unset_forks()))
+    assert not stale, f"ALLOWED_FORKS names no unset fork: {stale}"
 
 
 def test_fork_scan_follows_forwarded_options():

@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from kelos_on_kafka_spark.operators import textstats
+from tests.conftest import await_stream
 
 
 def test_repetition_stats_flags_planted_repeats(spark):
@@ -106,7 +107,7 @@ def test_text_ops_unify_batch_and_stream(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_stream(q, 120)
     got = sorted(map(tuple, spark.table(name).collect()))
     want = sorted(map(tuple, textstats.repetition_stats(docs).collect()))
     assert got == want
