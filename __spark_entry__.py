@@ -126,12 +126,31 @@ def q_kelos_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _kelos_debug(spark: SparkSession, sf_dir: str, which: str) -> DataFrame:
-    from kelos_on_kafka_spark.operators.kelos_batch import kelos_debug_tables
+# sf_dir -> the persisted debug walk the debug queries read; at most one.
+_DEBUG_WALK: dict = {}
 
-    cfg = KelosConfig(n=10)
-    pts = _kelos_points(spark, sf_dir, per_pane=100)
-    return kelos_debug_tables(pts, cfg)[which]
+
+def _kelos_debug(spark: SparkSession, sf_dir: str, which: str) -> DataFrame:
+    """One table of the debug walk of ``sf_dir``.  The three debug
+    queries of a scale factor share one persisted walk; the previous
+    scale factor's walk is unpersisted when a new one is built, so a
+    session holds at most one.  A walk that ``clearCache`` released is
+    built again."""
+    from kelos_on_kafka_spark.operators.kelos_batch import debug_tables, debug_walk
+
+    walk = _DEBUG_WALK.get(sf_dir)
+    if (
+        walk is None
+        or walk.sparkSession is not spark
+        or not walk.storageLevel.useDisk
+    ):
+        for old in _DEBUG_WALK.values():
+            if old.sparkSession is spark:
+                old.unpersist()
+        _DEBUG_WALK.clear()
+        pts = _kelos_points(spark, sf_dir, per_pane=100)
+        walk = _DEBUG_WALK[sf_dir] = debug_walk(pts, KelosConfig(n=10))
+    return debug_tables(walk)[which]
 
 
 def _per_dim(col: str, prefix: str) -> list:

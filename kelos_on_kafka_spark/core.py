@@ -4,7 +4,7 @@ Spark streaming engine.
 
 Every function replicates the reference Kafka Streams processors
 (emanuel-metzenthin/KELOS-on-Kafka) operation-for-operation, including the
-numerically load-bearing quirks catalogued in ``SURVEY.md §8`` (Q1-Q10).
+numerically load-bearing quirks catalogued in ``SURVEY.md §8`` (Q1-Q11).
 Citations below are ``file:line`` into ``/root/reference``.
 
 Float-op ordering: Java accumulates sums with a sequential left-to-right
@@ -226,83 +226,83 @@ def cluster_pane(
     order = np.argsort(point_ids, kind="stable")
     point_ids = point_ids[order]
     points = points[order]
-    n, d = points.shape if points.size else (0, 0)
+    n = len(points) if points.size else 0
+    carried = sorted(carry)
+    m = len(carried)
+    d = points.shape[1] if n else (len(carry[carried[0]].centroid) if m else 0)
 
-    # Seed from carry-over, ascending cluster id.  tempClusters iteration
-    # order stays ascending because every new id is max+1 (appended last).
-    cids: List[int] = []
-    centroids: List[np.ndarray] = []
-    sizes: List[int] = []
-    linear_sums: List[np.ndarray] = []
-    mins: List[np.ndarray] = []
-    maxs: List[np.ndarray] = []
-    old_sizes: List[int] = []
-    old_linear_sums: List[np.ndarray] = []
-
-    for cid in sorted(carry):
-        c = carry[cid]
-        dd = len(c.centroid)
-        cids.append(cid)
-        centroids.append(np.array(c.centroid, dtype=np.float64))
-        sizes.append(int(c.size))
-        linear_sums.append(np.array(c.linear_sums, dtype=np.float64))
-        mins.append(np.zeros(dd))  # Q8: zero-initialised (Cluster.java:44-45)
-        maxs.append(np.zeros(dd))
-        old_sizes.append(int(c.size))
-        old_linear_sums.append(np.array(c.linear_sums, dtype=np.float64))
-
-    cent_mat = (
-        np.array(centroids, dtype=np.float64) if cids else np.empty((0, d))
-    )
+    # One row per cluster, carried ones first in ascending id; a new
+    # cluster takes the next row.  tempClusters iteration order stays
+    # ascending because every new id is max+1 (appended last).
+    cids: List[int] = carried.copy()
+    sizes: List[int] = [int(carry[c].size) for c in carried]
+    cent = np.empty((m + n, d))
+    linear_sums = np.empty((m + n, d))
+    old_linear_sums = np.zeros((m + n, d))
+    if m:
+        cent[:m] = [carry[c].centroid for c in carried]
+        linear_sums[:m] = [carry[c].linear_sums for c in carried]
+        old_linear_sums[:m] = linear_sums[:m]
+    old_sizes = sizes + [0] * n
+    first = np.zeros(m + n, dtype=np.int64)  # a new cluster's first point
 
     assignments = np.empty(n, dtype=np.int64)
+    rows = np.empty(n, dtype=np.int64)
 
     for i in range(n):
         x = points[i]
-        if cent_mat.shape[0]:
-            diff = cent_mat - x
+        if m:
+            diff = cent[:m] - x
             # d < 8 => NumPy sums sequentially, matching Java's dim loop
             # (Cluster.java:86-95).
             dists = np.sqrt((diff * diff).sum(axis=1))
-            j = int(np.argmin(dists))  # first minimum == lowest cluster id
-            min_dist = float(dists[j])
+            j = int(dists.argmin())  # first minimum == lowest cluster id
+            join = dists[j] < threshold
         else:
-            min_dist = np.inf
-            j = -1
+            join = False
 
-        if min_dist < threshold:
-            # Cluster.addRecord (Cluster.java:112-121)
+        if join:
+            # Cluster.addRecord (Cluster.java:112-121); min/max below
             sizes[j] += 1
-            linear_sums[j] = linear_sums[j] + x
-            cent_mat[j] = linear_sums[j] / sizes[j]
-            mins[j] = np.minimum(mins[j], x)
-            maxs[j] = np.maximum(maxs[j], x)
-            assignments[i] = cids[j]
+            lsj = linear_sums[j]
+            np.add(lsj, x, out=lsj)
+            np.divide(lsj, sizes[j], out=cent[j])
         else:
-            new_id = (cids[-1] if cids else 0) + 1
-            cids.append(new_id)
+            j = m
+            cids.append((cids[-1] if cids else 0) + 1)
             sizes.append(1)
-            linear_sums.append(x.copy())
-            mins.append(x.copy())
-            maxs.append(x.copy())
-            old_sizes.append(0)
-            old_linear_sums.append(np.zeros(d))
-            cent_mat = np.vstack([cent_mat, x[None, :]]) if cent_mat.size else x[None, :].copy()
-            assignments[i] = new_id
+            linear_sums[j] = x
+            cent[j] = x
+            first[j] = i
+            m += 1
+        rows[i] = j
+        assignments[i] = cids[j]
+
+    # Per-cluster min/max: they never steer the assignment, so fold them
+    # after the loop, in point order.  Carried clusters start at 0 (Q8,
+    # Cluster.java:44-45), new ones at their first point.
+    mins = np.zeros((m, d))
+    maxs = np.zeros((m, d))
+    if n:
+        new = np.arange(len(carried), m)
+        mins[new] = maxs[new] = points[first[new]]
+        np.minimum.at(mins, rows, points)
+        np.maximum.at(maxs, rows, points)
 
     # updateMetrics: pane-delta size / linear sums; centroid untouched
     # (Cluster.java:146-152).  Emitted for EVERY temp cluster, including
     # carried ones that received no points this pane (size delta 0).
-    pane_clusters: OrderedMap[int, PaneStats] = {}
-    for idx, cid in enumerate(cids):
-        pane_clusters[cid] = PaneStats(
-            size=sizes[idx] - old_sizes[idx],
-            linear_sums=linear_sums[idx] - old_linear_sums[idx],
-            mins=mins[idx],
-            maxs=maxs[idx],
-            centroid=cent_mat[idx].copy(),
+    delta = linear_sums[:m] - old_linear_sums[:m]
+    return assignments, {
+        cid: PaneStats(
+            size=sizes[j] - old_sizes[j],
+            linear_sums=delta[j],
+            mins=mins[j],
+            maxs=maxs[j],
+            centroid=cent[j],
         )
-    return assignments, pane_clusters
+        for j, cid in enumerate(cids)
+    }
 
 
 # ---------------------------------------------------------------------------
@@ -313,15 +313,16 @@ def cluster_pane(
 def _merge(acc: Optional[WindowCluster], pane: PaneStats, cid: int) -> Optional[WindowCluster]:
     """Cluster.merge fold step (Cluster.java:123-144): size-0 accumulator
     copies the operand wholesale (even a size-0 operand); size-0 operands
-    are otherwise skipped."""
+    are otherwise skipped.  Arrays are shared, never written in place: a
+    merge binds new ones."""
     if acc is None or acc.size == 0:
         return WindowCluster(
             cluster_id=cid,
             size=pane.size,
-            linear_sums=pane.linear_sums.copy(),
-            centroid=pane.centroid.copy(),
-            mins=pane.mins.copy(),
-            maxs=pane.maxs.copy(),
+            linear_sums=pane.linear_sums,
+            centroid=pane.centroid,
+            mins=pane.mins,
+            maxs=pane.maxs,
         )
     if pane.size != 0:
         acc.size += pane.size
@@ -350,30 +351,24 @@ def aggregate_window(
     from state (exactly equivalent to the reference, see ShardState note).
     """
     emitted: OrderedMap[int, WindowCluster] = {}
+    pane_states = state.pane_states
     for cid, pane in pane_clusters.items():
-        prev = state.pane_states.get(cid)
+        prev = pane_states.get(cid)
         if not prev:
             if pane.size > 0:
-                state.pane_states[cid] = [pane]
-                emitted[cid] = WindowCluster(
-                    cluster_id=cid,
-                    size=pane.size,
-                    linear_sums=pane.linear_sums.copy(),
-                    centroid=pane.centroid.copy(),
-                    mins=pane.mins.copy(),
-                    maxs=pane.maxs.copy(),
-                )
+                pane_states[cid] = [pane]
+                emitted[cid] = _merge(None, pane, cid)
             # size==0 with no history: dropped entirely (:46 guard)
             continue
         if len(prev) >= max_panes:
-            prev.pop(0)  # evict oldest (:58-60)
-        acc: Optional[WindowCluster] = _merge(None, pane, cid)
+            del prev[0]  # evict oldest (:58-60)
+        acc = _merge(None, pane, cid)
         for old in prev:
             acc = _merge(acc, old, cid)
         prev.append(pane)
         if acc.size == 0:
             # tombstone: deletes from global store => drops out of carry
-            del state.pane_states[cid]
+            del pane_states[cid]
         else:
             emitted[cid] = acc
     return emitted
@@ -383,17 +378,15 @@ def carry_from_window(window_clusters: "OrderedMap[int, WindowCluster]") -> Dict
     """The global Clusters store after a pane == exactly the aggregates
     emitted for that pane (every store entry is re-seeded and re-emitted
     each pane; Main.java:53-64, ClusteringProcessorSupplier.java:111-117).
+    It shares the aggregates' arrays: ``cluster_pane`` copies what it
+    seeds from.
 
     Deviation Q7 (documented, deterministic-by-construction): the reference
     populates the global store asynchronously via the clusters topic; we
     define carry-over as the fully-caught-up store.
     """
     return {
-        cid: CarryCluster(
-            size=wc.size,
-            linear_sums=wc.linear_sums.copy(),
-            centroid=wc.centroid.copy(),
-        )
+        cid: CarryCluster(size=wc.size, linear_sums=wc.linear_sums, centroid=wc.centroid)
         for cid, wc in window_clusters.items()
     }
 
@@ -403,6 +396,80 @@ def carry_from_window(window_clusters: "OrderedMap[int, WindowCluster]") -> Dict
 #       Cluster.java:154-191)
 # ---------------------------------------------------------------------------
 
+# Rows of a distance matrix per chunk: a chunk holds at most this many
+# (row, column) cells.
+_CHUNK_CELLS = 4_000_000
+
+
+def _distances(A: np.ndarray, B: np.ndarray) -> np.ndarray:
+    """(len(A), len(B)) Euclidean distances from A's rows to B's rows:
+    ``np.sqrt(((B[None] - A[:, None]) ** 2).sum(axis=2))`` bit for bit,
+    one feature column at a time.  With d < 8 NumPy sums the feature
+    axis left to right, which is the order of this loop and of Java's
+    dim loop (Cluster.java:86-95)."""
+    acc = np.zeros((len(A), len(B)))
+    for j in range(A.shape[1]):
+        t = B[None, :, j] - A[:, None, j]
+        t *= t
+        acc = t if j == 0 else np.add(acc, t, out=acc)
+    return np.sqrt(acc, out=acc)
+
+
+def _topk_stable(dists: np.ndarray, k: int) -> np.ndarray:
+    """Column indices of each row's ``k`` smallest entries, ordered by
+    (value, column): ``np.argsort(dists, axis=1, kind="stable")[:, :k]``
+    without a stable sort of whole rows.  A row whose k-th and
+    (k+1)-th smallest values differ has exactly k entries at or below
+    its k-th value; they are ordered by a stable sort of their values,
+    taken in column order.  Any other row (a tie across the cut, a NaN
+    among its k+1 smallest) is sorted in full."""
+    rows, cols = dists.shape
+    if k >= cols:
+        return np.argsort(dists, axis=1, kind="stable")
+    if k <= 0:
+        return np.empty((rows, 0), dtype=np.intp)
+    srt = np.sort(dists, axis=1)
+    kth = srt[:, k - 1]
+    with np.errstate(invalid="ignore"):
+        exact = srt[:, k] > kth
+    if exact.all():
+        ok, sub = slice(None), dists
+    else:
+        ok = np.flatnonzero(exact)
+        sub = dists[ok]
+    out = np.empty((rows, k), dtype=np.intp)
+    sel = (np.flatnonzero(sub <= kth[ok, None]) % cols).reshape(-1, k)
+    vals = np.take_along_axis(sub, sel, axis=1)
+    out[ok] = np.take_along_axis(sel, np.argsort(vals, axis=1, kind="stable"), axis=1)
+    if not isinstance(ok, slice):
+        redo = ~exact
+        out[redo] = np.argsort(dists[redo], axis=1, kind="stable")[:, :k]
+    return out
+
+
+def _knn_cluster_matrix(cids: np.ndarray, cent: np.ndarray, k: int) -> np.ndarray:
+    """(C, k) ids of each cluster's k nearest other clusters by (distance,
+    position), 0-padded (Q5).  Positions are the ascending-id insertion
+    order, so ties go to the lower id, as Java's stable List.sort over
+    that order does.  A row's own column is cut out before the top-k, so
+    a +inf or NaN distance to another cluster sorts as it would among
+    the others alone."""
+    c = len(cids)
+    knn = np.zeros((c, k), dtype=np.int64)
+    k_eff = min(k, c - 1)
+    if k_eff <= 0:
+        return knn
+    chunk = max(1, _CHUNK_CELLS // c)
+    for s in range(0, c, chunk):
+        e = min(s + chunk, c)
+        dists = _distances(cent[s:e], cent)  # (B, C)
+        own = np.arange(s, e)
+        keep = np.ones(dists.shape, dtype=bool)
+        keep[own - s, own] = False
+        top = _topk_stable(dists[keep].reshape(e - s, c - 1), k_eff)
+        knn[s:e, :k_eff] = cids[top + (top >= own[:, None])]
+    return knn
+
 
 def knn_clusters(window_clusters: "OrderedMap[int, WindowCluster]", k: int) -> None:
     """All-pairs Euclidean KNN over cluster centroids; fills
@@ -410,23 +477,21 @@ def knn_clusters(window_clusters: "OrderedMap[int, WindowCluster]", k: int) -> N
     (distance, id) — Java's List.sort is stable over ascending-id
     insertion, pinning the tie order — zero-padded when fewer than K
     neighbors exist (Q5, Cluster.java:30)."""
-    cids = np.fromiter(window_clusters.keys(), dtype=np.int64)
-    c = len(cids)
-    if c == 0:
+    clusters = list(window_clusters.values())
+    if not clusters:
         return
-    cent = np.stack([window_clusters[int(i)].centroid for i in cids])
-    for idx, cid in enumerate(cids):
-        diff = cent - cent[idx]
-        dists = np.sqrt((diff * diff).sum(axis=1))
-        mask = np.ones(c, dtype=bool)
-        mask[idx] = False
-        other_ids = cids[mask]
-        other_d = dists[mask]
-        order = np.argsort(other_d, kind="stable")  # ties -> lower id first
-        sel = other_ids[order][:k]
-        knn = np.zeros(k, dtype=np.int64)
-        knn[: len(sel)] = sel
-        window_clusters[int(cid)].knn_ids = knn
+    cids = np.fromiter(window_clusters.keys(), dtype=np.int64, count=len(clusters))
+    cent = np.stack([wc.centroid for wc in clusters])
+    for wc, row in zip(clusters, _knn_cluster_matrix(cids, cent, k)):
+        wc.knn_ids = row
+
+
+def _resolve_ids(ids: np.ndarray, id_matrix: np.ndarray):
+    """``_resolve`` against keys in any order: (positions in ``ids``,
+    found mask)."""
+    sorter = np.argsort(ids, kind="stable")
+    posc, found = _resolve(ids[sorter], id_matrix)
+    return sorter[posc] if len(ids) else posc, found
 
 
 # ---------------------------------------------------------------------------
@@ -450,39 +515,30 @@ def estimate_cluster_densities(
     Returns the surviving clusters (same objects, densities filled) in
     iteration order.
     """
-    ids = list(window_clusters.keys())
-    if not ids:
+    clusters = list(window_clusters.values())
+    if not clusters:
         return {}
-    pos = {cid: i for i, cid in enumerate(ids)}
-    cent_all = np.stack([window_clusters[c].centroid for c in ids])
-    sizes_all = np.array([window_clusters[c].size for c in ids], dtype=np.int64)
-    mins_all = np.stack([window_clusters[c].mins for c in ids])
-    maxs_all = np.stack([window_clusters[c].maxs for c in ids])
+    ids = np.fromiter(window_clusters.keys(), dtype=np.int64, count=len(clusters))
+    cent_all = np.stack([wc.centroid for wc in clusters])
+    sizes_all = np.fromiter((wc.size for wc in clusters), np.int64, len(clusters))
+    mins_all = np.stack([wc.mins for wc in clusters])
+    maxs_all = np.stack([wc.maxs for wc in clusters])
 
-    # resolve neighbor positions (id 0 / dropped ids absent -> skipped)
-    buckets: Dict[int, List[Tuple[int, List[int]]]] = {}
-    for row, cid in enumerate(ids):
-        nbrs = [
-            pos[int(i)]
-            for i in window_clusters[cid].knn_ids
-            if int(i) in pos
-        ]
-        if len(nbrs) <= 1:
-            continue
-        buckets.setdefault(len(nbrs), []).append((row, nbrs))
+    # neighbor positions, knn order kept; id 0 / dropped ids are skipped
+    pos, found = _resolve_ids(ids, np.stack([wc.knn_ids for wc in clusters]))
+    counts = found.sum(axis=1)
 
     density = np.zeros(len(ids))
     min_bound = np.zeros(len(ids))
     max_bound = np.zeros(len(ids))
-    survivor_rows = np.zeros(len(ids), dtype=bool)
+    d = cent_all.shape[1]
 
     with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
-        for k, members in buckets.items():
-            rows = np.array([m[0] for m in members])
-            idxs = np.array([m[1] for m in members])  # (B, k)
+        for k in np.unique(counts[counts > 1]).tolist():
+            rows = np.flatnonzero(counts == k)
+            idxs = pos[rows][found[rows]].reshape(-1, k)  # (B, k)
             ncent = cent_all[idxs]  # (B, k, d)
             nsize = sizes_all[idxs]  # (B, k)
-            d = cent_all.shape[1]
 
             total = nsize.sum(axis=1)  # exact int
             weights = nsize.astype(np.float64) / total[:, None].astype(np.float64)
@@ -518,17 +574,18 @@ def estimate_cluster_densities(
             density[rows] = dens
             min_bound[rows] = minb
             max_bound[rows] = maxb
-            survivor_rows[rows] = True
 
     survivors: OrderedMap[int, WindowCluster] = {}
-    for row, cid in enumerate(ids):
-        if not survivor_rows[row]:
-            continue
-        cl = window_clusters[cid]
-        cl.density = float(density[row])
-        cl.min_density_bound = float(min_bound[row])
-        cl.max_density_bound = float(max_bound[row])
-        survivors[cid] = cl
+    rows = np.flatnonzero(counts > 1)
+    for row, dens, lo, hi in zip(
+        rows.tolist(), density[rows].tolist(), min_bound[rows].tolist(),
+        max_bound[rows].tolist(),
+    ):
+        cl = clusters[row]
+        cl.density = dens
+        cl.min_density_bound = lo
+        cl.max_density_bound = hi
+        survivors[int(ids[row])] = cl
     return survivors
 
 
@@ -551,6 +608,27 @@ def _product_cols(values: np.ndarray) -> np.ndarray:
 # ---------------------------------------------------------------------------
 
 
+def _knn_mean_std(values: np.ndarray, found: np.ndarray):
+    """Per row, the mean of the found neighbours' values and the KLOME
+    'stddev' ``sqrt(Σ(x - mean)²)`` with no /n (Q2): both sums run in
+    knn order, as the reference's loops do; 0/0 -> NaN mean for a row
+    with none found.  A missing neighbour adds 0.0 to both sums, which
+    is exact: a sum that starts at +0.0 is never -0.0.  The square is
+    ``x * x``, which is what Java's ``Math.pow(x, 2.0)`` gives, in both
+    pruning stages (SURVEY.md Q11)."""
+    vals = np.where(found, values, 0.0)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        mean = np.zeros(len(vals))
+        for m in range(vals.shape[1]):
+            mean = mean + vals[:, m]
+        mean = mean / found.sum(axis=1).astype(np.float64)
+        var = np.zeros(len(vals))
+        for m in range(vals.shape[1]):
+            dev = vals[:, m] - mean
+            var = var + np.where(found[:, m], dev * dev, 0.0)
+    return mean, np.sqrt(var)
+
+
 def prune_clusters(
     survivors: "OrderedMap[int, WindowCluster]", n: int
 ) -> "OrderedMap[int, bool]":
@@ -561,34 +639,29 @@ def prune_clusters(
     with high_i < low_j stays below N (:74-96; NaN comparisons are false,
     so NaN-klome clusters are always kept).
 
+    Vectorized across clusters (``_knn_mean_std``, shared with the point
+    stage's ``_klome_scores``).
+
     Returns {cluster_id: might_contain_outliers} in forward order.
     """
-    ids = list(survivors.keys())
-    lows: List[float] = []
-    highs: List[float] = []
+    clusters = list(survivors.values())
+    if not clusters:
+        return {}
+    c = len(clusters)
+    ids = np.fromiter(survivors.keys(), dtype=np.int64, count=c)
+    dens = np.fromiter((cl.density for cl in clusters), np.float64, c)
+    pos, found = _resolve_ids(ids, np.stack([cl.knn_ids for cl in clusters]))
+    mean, std = _knn_mean_std(dens[pos], found)
     with np.errstate(divide="ignore", invalid="ignore"):
-        for cid in ids:
-            cl = survivors[cid]
-            existing = [int(i) for i in cl.knn_ids if int(i) in survivors]
-            mean = np.float64(0.0)
-            for i in existing:
-                mean = mean + survivors[i].density
-            mean = mean / np.float64(len(existing))  # 0/0 -> NaN
-            var = np.float64(0.0)
-            for i in existing:
-                var = var + (np.float64(survivors[i].density) - mean) ** 2
-            std = np.sqrt(var)
-            lows.append(float((cl.min_density_bound - mean) / std))
-            highs.append(float((cl.max_density_bound - mean) / std))
+        low_a = (np.fromiter((cl.min_density_bound for cl in clusters), np.float64, c) - mean) / std
+        high_a = (np.fromiter((cl.max_density_bound for cl in clusters), np.float64, c) - mean) / std
 
-    sizes = np.array([survivors[cid].size for cid in ids], dtype=np.int64)
-    low_a = np.array(lows)
-    high_a = np.array(highs)
+    sizes = np.fromiter((cl.size for cl in clusters), np.int64, c)
     # counts[j] = Σ size_i over i with high_i < low_j  (exact int math)
     with np.errstate(invalid="ignore"):
         mask = high_a[:, None] < low_a[None, :]
     counts = (sizes[:, None] * mask).sum(axis=0)
-    return {cid: bool(counts[j] < n) for j, cid in enumerate(ids)}
+    return dict(zip(ids.tolist(), (counts < n).tolist()))
 
 
 # ---------------------------------------------------------------------------
@@ -645,14 +718,13 @@ def _knn_points_matrix(
     if n_cand == 0 or len(cids) == 0:
         return knn
     k_eff = min(k, len(cids))
-    chunk = max(1, 4_000_000 // max(len(cids), 1))
+    chunk = max(1, _CHUNK_CELLS // len(cids))
     for s in range(0, n_cand, chunk):
         e = min(s + chunk, n_cand)
-        diff = cent[None, :, :] - X[s:e, None, :]
-        dists = np.sqrt((diff * diff).sum(axis=2))  # (B, C)
+        dists = _distances(X[s:e], cent)  # (B, C)
         excl = cids[None, :] == pids[s:e, None]
         dists[excl] = np.inf
-        order = np.argsort(dists, axis=1, kind="stable")[:, :k_eff]
+        order = _topk_stable(dists, k_eff)
         top_d = np.take_along_axis(dists, order, axis=1)
         knn[s:e, :k_eff] = np.where(np.isfinite(top_d), cids[order], 0)
     return knn
@@ -729,27 +801,11 @@ def _klome_scores(
     """Stage-2 KLOME (P9): (density - mean(knn dens)) / sqrt(Σ(x-mean)²)
     with no /n (Q2); Double.MAX_VALUE when the 'stddev' is 0, including
     the empty-lookup case (mean 0/0 -> NaN but var loop never runs)."""
-    counts = found.sum(axis=1)
-    klome = np.empty(len(own_dens))
+    values = dens_table[posc] if len(dens_table) else np.zeros(posc.shape)
+    mean, std = _knn_mean_std(values, found)
     with np.errstate(divide="ignore", invalid="ignore"):
-        for kk in np.unique(counts):
-            sel = counts == kk
-            if kk == 0:
-                klome[sel] = DOUBLE_MAX
-                continue
-            nbr = posc[sel][found[sel]].reshape(-1, int(kk))
-            nd = dens_table[nbr]
-            mean = np.zeros(nbr.shape[0])
-            for m in range(int(kk)):
-                mean = mean + nd[:, m]
-            mean = mean / np.float64(int(kk))
-            var = np.zeros(nbr.shape[0])
-            for m in range(int(kk)):
-                var = var + (nd[:, m] - mean) ** 2
-            std = np.sqrt(var)
-            ratio = (own_dens[sel] - mean) / std
-            klome[sel] = np.where(std == 0.0, DOUBLE_MAX, ratio)
-    return klome
+        ratio = (own_dens - mean) / std
+    return np.where(std == 0.0, DOUBLE_MAX, ratio)
 
 
 def _topn(
@@ -955,10 +1011,15 @@ class PaneSequence:
     except a stretch of empty panes while the sequence is ``quiet``:
     with no carry there are no pane states either, so closing an empty
     pane then only adds an empty ring entry, which no later window sees.
-    The streaming engine keeps one pickled sequence per shard as its
-    state; the batch walkers keep one per shard of their sorted input."""
+    The streaming engine keeps one encoded sequence per shard as its
+    state (``encode``/``decode``); the batch walkers keep one per shard
+    of their sorted input."""
 
     __slots__ = ("algo", "ring", "pending", "last_closed")
+
+    #: An encoded sequence starts with this tag, then its format version.
+    TAG = b"KELOSPSQ"
+    VERSION = 1
 
     def __init__(self) -> None:
         self.algo = ShardState()
@@ -1002,6 +1063,138 @@ class PaneSequence:
             pane += 1
         self.last_closed = pane - 1
         return out
+
+
+    def encode(self) -> bytes:
+        """The sequence as bytes: ``TAG``, ``VERSION`` and flat int64 and
+        float64 arrays (``_pack``), in the order ``decode`` reads them.
+        No pickle and no package class: the bytes do not depend on how
+        Python lays out ``PaneStats``, ``CarryCluster`` or this class."""
+        pane_states = self.algo.pane_states
+        stats = [ps for states in pane_states.values() for ps in states]
+        carry = self.algo.carry
+        chunks = [
+            (ids, X) for ids_l, X_l in self.pending.values() for ids, X in zip(ids_l, X_l)
+        ]
+        last = self.last_closed
+        return _pack([
+            np.array([last is not None, last or 0], dtype=np.int64),
+            np.fromiter(pane_states, np.int64, len(pane_states)),
+            np.fromiter(map(len, pane_states.values()), np.int64, len(pane_states)),
+            np.fromiter((ps.size for ps in stats), np.int64, len(stats)),
+            *(_matrix([getattr(ps, f) for ps in stats]) for f in _STAT_FIELDS),
+            np.fromiter(carry, np.int64, len(carry)),
+            np.fromiter((c.size for c in carry.values()), np.int64, len(carry)),
+            _matrix([c.linear_sums for c in carry.values()]),
+            _matrix([c.centroid for c in carry.values()]),
+            *_pack_points([(ids, X) for ids, _, X in self.ring]),
+            np.concatenate([a for _, a, _ in self.ring] or [np.empty(0)]).astype(np.int64),
+            np.fromiter(self.pending, np.int64, len(self.pending)),
+            np.fromiter((len(i) for i, _ in self.pending.values()), np.int64, len(self.pending)),
+            *_pack_points(chunks),
+        ])
+
+    @classmethod
+    def decode(cls, blob: bytes) -> "PaneSequence":
+        """The sequence ``encode`` wrote.  A blob of another format
+        version raises ``ValueError`` naming it."""
+        (last, stat_ids, stat_counts, sizes, *a) = _unpack(blob)
+        ls, mins, maxs, cent, carry_ids, carry_sizes, carry_ls, carry_cent = a[:8]
+        ring_points, ring_assign = a[8:12], a[12]
+        pend_panes, pend_counts, pend_points = a[13], a[14], a[15:]
+        seq = cls()
+        seq.last_closed = int(last[1]) if last[0] else None
+        stats = [
+            PaneStats(size=n, linear_sums=l, mins=lo, maxs=hi, centroid=c)
+            for n, l, lo, hi, c in zip(sizes.tolist(), ls, mins, maxs, cent)
+        ]
+        ends = np.cumsum(stat_counts).tolist()
+        seq.algo.pane_states = {
+            cid: stats[end - n:end]
+            for cid, n, end in zip(stat_ids.tolist(), stat_counts.tolist(), ends)
+        }
+        seq.algo.carry = {
+            cid: CarryCluster(size=n, linear_sums=l, centroid=c)
+            for cid, n, l, c in zip(carry_ids.tolist(), carry_sizes.tolist(), carry_ls, carry_cent)
+        }
+        ring = _unpack_points(*ring_points)
+        starts = np.cumsum([0] + [len(ids) for ids, _ in ring]).tolist()
+        seq.ring = [
+            (ids, ring_assign[s:e], X) for (ids, X), s, e in zip(ring, starts, starts[1:])
+        ]
+        chunks = _unpack_points(*pend_points)
+        ends = np.cumsum(pend_counts).tolist()
+        for pane, n, end in zip(pend_panes.tolist(), pend_counts.tolist(), ends):
+            part = chunks[end - n:end]
+            seq.pending[pane] = ([ids for ids, _ in part], [X for _, X in part])
+        return seq
+
+
+_STAT_FIELDS = ("linear_sums", "mins", "maxs", "centroid")
+_LE = {np.dtype(np.int64): "<i8", np.dtype(np.float64): "<f8"}
+
+
+def _matrix(rows: List[np.ndarray]) -> np.ndarray:
+    """Equal-length float rows as one (n, d) matrix; (0, 0) when none."""
+    return np.array(rows, dtype=np.float64) if rows else np.empty((0, 0))
+
+
+def _pack_points(parts: List[Tuple[np.ndarray, np.ndarray]]) -> List[np.ndarray]:
+    """``(ids, X)`` pairs as flat arrays: lengths, feature widths, ids,
+    features.  A width is kept per pair: an empty pane's X may be (0, 0)."""
+    return [
+        np.fromiter((len(ids) for ids, _ in parts), np.int64, len(parts)),
+        np.fromiter((X.shape[1] if X.ndim == 2 else 0 for _, X in parts), np.int64, len(parts)),
+        np.concatenate([ids for ids, _ in parts] or [np.empty(0)]).astype(np.int64),
+        np.concatenate([np.ravel(X) for _, X in parts] or [np.empty(0)]).astype(np.float64),
+    ]
+
+
+def _unpack_points(lens, widths, ids, flat) -> List[Tuple[np.ndarray, np.ndarray]]:
+    starts = np.cumsum(np.concatenate([[0], lens])).tolist()
+    offs = np.cumsum(np.concatenate([[0], lens * widths])).tolist()
+    return [
+        (ids[s:e], flat[o:p].reshape(e - s, w))
+        for s, e, o, p, w in zip(starts, starts[1:], offs, offs[1:], widths.tolist())
+    ]
+
+
+def _pack(arrays: List[np.ndarray]) -> bytes:
+    """``PaneSequence.TAG``, then little-endian int64s: the version, the
+    array count and (float?, rows, columns or -1 for a vector) per
+    array; then each array's little-endian bytes."""
+    head = [PaneSequence.VERSION, len(arrays)]
+    for a in arrays:
+        head += [a.dtype == np.float64, a.shape[0], a.shape[1] if a.ndim == 2 else -1]
+    return b"".join(
+        [PaneSequence.TAG, np.array(head, dtype="<i8").tobytes()]
+        + [np.ascontiguousarray(a, dtype=_LE[a.dtype]).tobytes() for a in arrays]
+    )
+
+
+def _unpack(blob: bytes) -> List[np.ndarray]:
+    """The arrays ``_pack`` wrote, as writable arrays over one copy of
+    ``blob``; ``ValueError`` for another tag or format version."""
+    tag = PaneSequence.TAG
+    if blob[:len(tag)] != tag:
+        raise ValueError("not an encoded pane sequence")
+    buf = bytearray(blob)
+    version, n = np.frombuffer(buf, "<i8", 2, len(tag)).tolist()
+    if version != PaneSequence.VERSION:
+        raise ValueError(
+            f"pane sequence state of format version {version} "
+            f"(this release reads version {PaneSequence.VERSION})"
+        )
+    off = len(tag) + 16
+    head = np.frombuffer(buf, "<i8", 3 * n, off).reshape(n, 3).tolist()
+    off += 24 * n
+    out = []
+    for is_float, rows, cols in head:
+        count = rows if cols < 0 else rows * cols
+        a = np.frombuffer(buf, "<f8" if is_float else "<i8", count, off)
+        out.append(a if cols < 0 else a.reshape(rows, cols))
+        off += 8 * count
+    return out
 
 
 # ---------------------------------------------------------------------------

@@ -13,9 +13,9 @@ with carried clusters, window synthesis, KNN → KDE → KLOME → top-N.
 Arrow batch in, Arrow batch out; one shuffle (the shard sort), and
 parallelism = #shards.
 
-``detect_outliers`` emits each window's top-N outliers;
-``kelos_debug_tables`` runs the same walk and emits the window's
-intermediate tables instead.
+``detect_outliers`` emits each window's top-N outliers; ``debug_walk``
+runs the same walk and emits the window's intermediate tables instead,
+which ``debug_tables`` splits apart.
 """
 
 from __future__ import annotations
@@ -300,7 +300,7 @@ CANDIDATE_DEBUG_SCHEMA = StructType(
 )
 
 
-# The walker's output for ``kelos_debug_tables``, one union of its three
+# The walker's output for ``debug_walk``, one union of ``debug_tables``' three
 # tables: 'a' = a pane's point assignment (its pane in ``window_id``: a
 # window has the id of the pane that closes it), 'c' = scored cluster
 # (CLUSTER_DEBUG_SCHEMA), 'p' = candidate point (CANDIDATE_DEBUG_SCHEMA).
@@ -355,23 +355,28 @@ def _debug_parts(shard: int, result: core.WindowResult, ring) -> List[dict]:
     return parts
 
 
-def kelos_debug_tables(
+def debug_walk(
     df: DataFrame,
     cfg: KelosConfig = DEFAULT_CONFIG,
     id_col: str = "id",
     ts_col: str = "ts",
     features_col: str = "features",
     shard_col: Optional[str] = None,
-) -> dict:
-    """The reference's debug topic surfaces as DataFrames
-    (cluster-assignments / densities / candidates; SURVEY.md §2.1 S3-S4):
-    returns {'assignments': ..., 'clusters': ..., 'candidates': ...}.
-    All three read one cached pane walk, so reading them runs it once;
-    the caller may ``spark.catalog.clearCache()`` when done."""
+) -> DataFrame:
+    """The pane walk behind ``debug_tables``, persisted: its
+    ``DEBUG_SCHEMA`` rows.  ``unpersist`` it when its tables are read."""
     points = prepare_points(df, cfg, id_col, ts_col, features_col, shard_col)
-    debug = _walk(points, cfg, _debug_parts, DEBUG_SCHEMA).persist(
+    return _walk(points, cfg, _debug_parts, DEBUG_SCHEMA).persist(
         StorageLevel.MEMORY_AND_DISK
     )
+
+
+def debug_tables(debug: DataFrame) -> dict:
+    """The reference's debug topic surfaces as DataFrames
+    (cluster-assignments / densities / candidates; SURVEY.md §2.1 S3-S4):
+    {'assignments': ..., 'clusters': ..., 'candidates': ...} of one
+    ``debug_walk``.  All three read its persisted rows, so reading them
+    runs the walk once."""
     row_type = F.col("row_type")
     return {
         "assignments": debug.filter(row_type == "a").select(
@@ -385,3 +390,4 @@ def kelos_debug_tables(
             *CANDIDATE_DEBUG_SCHEMA.fieldNames()
         ),
     }
+

@@ -4,8 +4,14 @@ Event-time semantics replace the reference's stream-time punctuation
 tokens (SURVEY.md §2.2 P10): a pane closes when the watermark passes its
 end, window results are emitted exactly once in append mode, and each
 shard's ``core.PaneSequence`` (carry-over clusters, pane ring, buffered
-open panes), pickled, lives in Spark's checkpointed state store keyed by
-shard — so the query is kill-and-resume safe.  The sequence closes the
+open panes) lives in Spark's checkpointed state store keyed by shard —
+so the query is kill-and-resume safe.  The state is the sequence's
+versioned array encoding (``PaneSequence.encode``: a tag, a format
+version, flat int64/float64 arrays; no pickle), in the one ``blob``
+column of ``STATE_SCHEMA``.  A blob without the tag was written by an
+older release as a pickled sequence; it still loads, through
+``pickle``, for one release.  A blob of an unknown version fails the
+query, naming the version and the shard.  The sequence closes the
 panes below the watermark's pane, as the batch walkers' sequences close
 a shard's panes.  Late rows beyond the watermark are dropped by
 Spark; the output-parity contract is defined for a fixed input stream +
@@ -49,20 +55,45 @@ STATE_SCHEMA = StructType([StructField("blob", BinaryType())])
 
 
 def outliers_frame(
-    shard: int, window_id: int, outliers: List[core.Outlier], cfg: KelosConfig
+    shard: int,
+    window_id: int,
+    outliers: List[core.Outlier],
+    cfg: KelosConfig,
+    n_window_points: int,
+    n_clusters: int,
+    n_candidates: int,
 ) -> pd.DataFrame:
-    """``OUTLIER_SCHEMA`` rows of one window's (non-empty) top-N outliers."""
+    """``STREAM_OUTLIER_SCHEMA`` rows of one window's (non-empty) top-N
+    outliers, with its lineage columns: every column is built first,
+    then one frame from them."""
     cols = outlier_columns(shard, window_id, outliers, cfg)
+    n = len(outliers)
     for bound in ("window_start", "window_end"):
-        cols[bound] = pd.to_datetime(cols[bound], unit="us", utc=True)
-    cols["features"] = cols["features"].tolist()
+        cols[bound] = pd.DatetimeIndex(
+            cols[bound].astype("datetime64[us]"), tz="UTC"
+        )
+    cols["features"] = list(cols["features"])  # row views, no copies
+    cols["n_window_points"] = np.full(n, n_window_points, dtype=np.int64)
+    cols["n_clusters"] = np.full(n, n_clusters, dtype=np.int64)
+    cols["n_candidates"] = np.full(n, n_candidates, dtype=np.int64)
     return pd.DataFrame(cols)
 
 
 # Checkpoints written before the pane sequence moved to ``core`` pickle
 # their state as this module's ``_StreamShard``, with the same four slots:
-# the name stays so that they resume.
+# the name stays so that they resume (``_load_state``).
 _StreamShard = core.PaneSequence
+
+
+def _load_state(blob: bytes, shard: int) -> core.PaneSequence:
+    """A shard's pane sequence from its state blob: ``PaneSequence.decode``,
+    or ``pickle`` for a blob an older release wrote (no tag)."""
+    if not blob.startswith(core.PaneSequence.TAG):
+        return pickle.loads(blob)
+    try:
+        return core.PaneSequence.decode(blob)
+    except ValueError as e:
+        raise ValueError(f"state of shard {shard}: {e}") from None
 
 
 def _make_stateful_fn(cfg: KelosConfig):
@@ -72,7 +103,7 @@ def _make_stateful_fn(cfg: KelosConfig):
         key: tuple, batches: Iterator[pd.DataFrame], state: Any
     ) -> Iterator[pd.DataFrame]:
         shard = int(key[0])
-        seq = pickle.loads(state.get[0]) if state.exists else core.PaneSequence()
+        seq = _load_state(state.get[0], shard) if state.exists else core.PaneSequence()
 
         if not state.hasTimedOut:
             for pdf in batches:
@@ -92,11 +123,10 @@ def _make_stateful_fn(cfg: KelosConfig):
             )
             if not result.outliers:
                 return None
-            frame = outliers_frame(shard, pane, result.outliers, cfg)
-            frame["n_window_points"] = np.int64(n_window_points)
-            frame["n_clusters"] = np.int64(len(result.window_clusters))
-            frame["n_candidates"] = np.int64(len(result.candidate_ids))
-            return frame
+            return outliers_frame(
+                shard, pane, result.outliers, cfg, n_window_points,
+                len(result.window_clusters), len(result.candidate_ids),
+            )
 
         # Close every pane whose end <= watermark (event-time pane
         # punctuation): the panes below the watermark's pane.
@@ -109,7 +139,7 @@ def _make_stateful_fn(cfg: KelosConfig):
             if state.exists:
                 state.remove()
         else:
-            state.update((pickle.dumps(seq),))
+            state.update((seq.encode(),))
             # wake when the watermark passes the next closeable pane end
             nxt = min(seq.pending) if quiet else seq.last_closed + 1
             state.setTimeoutTimestamp(max((nxt + 1) * pane_ms, wm + 1))

@@ -103,8 +103,9 @@ def main() -> None:
     from kelos_on_kafka_spark.config import KelosConfig
     from kelos_on_kafka_spark.functions.features import featurize_pages
     from kelos_on_kafka_spark.operators.kelos_batch import (
+        debug_tables,
+        debug_walk,
         detect_outliers,
-        kelos_debug_tables,
     )
     from kelos_on_kafka_spark.streaming.engine import kelos_stream
     from kelos_on_kafka_spark.streaming.sink import write_outlier_stream
@@ -289,7 +290,7 @@ def main() -> None:
         q.awaitTermination()
     elif args.mode == "debug":
         pages = spark.read.parquet(args.input)
-        tabs = kelos_debug_tables(to_points(pages), cfg, shard_col="shard")
+        tabs = debug_tables(debug_walk(to_points(pages), cfg, shard_col="shard"))
         for name, df in tabs.items():
             df.write.mode("overwrite").parquet(f"{args.output}/{name}")
     else:

@@ -11,8 +11,9 @@ import pytest
 from kelos_on_kafka_spark import core
 from kelos_on_kafka_spark.config import KelosConfig
 from kelos_on_kafka_spark.operators.kelos_batch import (
+    debug_tables,
+    debug_walk,
     detect_outliers,
-    kelos_debug_tables,
 )
 from kelos_on_kafka_spark.sources.points import gmm_points, to_spark_points
 
@@ -106,7 +107,7 @@ def test_batch_engine_matches_oracle(spark, n_points, epw, gap_panes, arrow_batc
 def test_batch_plans_walk_each_shard_once(spark):
     """``detect_outliers`` is one pane walk per shard: one ``MapInArrow``
     after the shard sort, with no grouped window stage and no explode
-    of points onto windows.  ``kelos_debug_tables``' three tables read
+    of points onto windows.  ``debug_tables``' three tables read
     one cached walk: reading all three persists one RDD."""
     sdf = to_spark_points(spark, gmm_points(n=300, seed=3, elements_per_window=300))
     plan = detect_outliers(sdf, CFG)._jdf.queryExecution().executedPlan().toString()
@@ -117,13 +118,42 @@ def test_batch_plans_walk_each_shard_once(spark):
     jsc = spark.sparkContext._jsc
     before = set(jsc.getPersistentRDDs())
     try:
-        for table in kelos_debug_tables(sdf, CFG).values():
+        for table in debug_tables(debug_walk(sdf, CFG)).values():
             table.collect()
             plan = table._jdf.queryExecution().executedPlan().toString()
             assert "InMemoryTableScan" in plan, plan
         after = set(jsc.getPersistentRDDs())
         assert len(after - before) == 1, after - before
     finally:
+        spark.catalog.clearCache()
+
+
+def test_driver_debug_queries_hold_one_walk(spark):
+    """The driver's three debug queries of one scale factor read one
+    persisted walk; building the next scale factor's walk unpersists the
+    previous one, so a session holds at most one."""
+    import os
+
+    import __spark_entry__ as entry_mod
+
+    spark.catalog.clearCache()
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs())
+    held = []
+    try:
+        for sf in ("sf0.001", "sf0.01"):
+            sf_dir = os.path.join(os.path.dirname(entry_mod.SF_DEFAULT), sf)
+            for query in (
+                entry_mod.q_kelos_assignments,
+                entry_mod.q_kelos_clusters,
+                entry_mod.q_kelos_candidates,
+            ):
+                assert query(spark, sf_dir).count() > 0
+            held.append(set(jsc.getPersistentRDDs()) - before)
+            assert len(held[-1]) == 1, held
+        assert held[0] != held[1]
+    finally:
+        entry_mod._DEBUG_WALK.clear()
         spark.catalog.clearCache()
 
 
@@ -157,7 +187,7 @@ def test_debug_tables_match_oracle_intermediates(
     pdf = case_points(n_points, epw, gap_panes)
     oracle = oracle_results(pdf, CFG)
     with arrow_batch_rows(spark, arrow_batch):
-        tabs = kelos_debug_tables(to_spark_points(spark, pdf), CFG)
+        tabs = debug_tables(debug_walk(to_spark_points(spark, pdf), CFG))
         arows, crows, krows = (
             tabs[name].collect() for name in ("assignments", "clusters", "candidates")
         )
